@@ -973,6 +973,26 @@ def source_bytes(df: DataFrame) -> int | None:
 _WINDOWED_MAX_BYTES = 256 << 20
 
 
+#: Spark size-string suffixes → power of 1024 (``JavaUtils.byteStringAs``)
+_BYTE_UNITS = {
+    "": 0, "b": 0, "k": 1, "kb": 1, "m": 2, "mb": 2, "g": 3, "gb": 3,
+    "t": 4, "tb": 4, "p": 5, "pb": 5,
+}
+
+
+def _parse_byte_string(raw: str) -> int:
+    """Bytes in a Spark size string such as ``"64m"`` or ``"134217728b"``:
+    an integer with an optional case-insensitive unit suffix (see
+    :data:`_BYTE_UNITS`); a bare number is bytes. Raises ``ValueError``
+    on anything else, as Spark does."""
+    import re
+
+    m = re.fullmatch(r"(\d+)([a-z]*)", raw.strip().lower())
+    if m is None or m.group(2) not in _BYTE_UNITS:
+        raise ValueError(f"invalid byte string: {raw!r}")
+    return int(m.group(1)) << (10 * _BYTE_UNITS[m.group(2)])
+
+
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition when the source offers far fewer splits
     than the cluster has slots (e.g. a single large parquet row group —
@@ -1000,9 +1020,9 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
             return df  # derived frame — parallelism set by its shuffles
         if len(files) * 2 > target:
             return df  # enough file splits regardless of sizes
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        digits = "".join(ch for ch in raw if ch.isdigit())
-        max_pb = int(digits) if digits else 134217728
+        max_pb = _parse_byte_string(
+            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
+        )
         total = 0
         for f in files:
             u = urlparse(f)

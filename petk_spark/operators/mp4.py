@@ -24,17 +24,18 @@ Reference parity: the reference engine is tabular-only
 no binary surface anywhere in ``petk/``) — declared beyond-reference,
 same as every other media kind.
 
-Scale: row-local Arrow kernel over ``mapInPandas`` — zero shuffles,
+Scale: row-local Arrow kernel (``multimodal._row_frame``) — zero shuffles,
 corrupt/truncated payloads → ``valid=false`` rows, never task failure.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator, Optional, Sequence
+from typing import Optional, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from petk_spark.operators.multimodal import _meta_adapter, _row_frame
 
 __all__ = [
     "synth_mp4",
@@ -347,40 +348,13 @@ MP4_FEATURES_SCHEMA = (
 )
 
 
+_mp4_row = _meta_adapter(parse_mp4_metadata, MP4_FEATURES_SCHEMA)
+
+
 def mp4_features_frame(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
     """Arrow-batched BMFF metadata extraction — the MP3/FLAC sibling:
     row-local, zero shuffles, corrupt payloads → valid=false rows."""
-    id_name, payload_name = id_col, payload_col
-
-    def one(payload):
-        meta = parse_mp4_metadata(
-            None if payload is None else bytes(payload)
-        )
-        if meta is None:
-            return (False,) + (None,) * 10
-        return (
-            True, meta["brand"], meta["timescale"], meta["duration_ms"],
-            meta["n_tracks"], meta["width"], meta["height"],
-            meta["mvhd_version"], meta["codec"], meta["language"],
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rid, *one(payload))
-                for rid, payload in zip(pdf[id_name], pdf[payload_name])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "valid", "brand", "timescale", "duration_ms",
-                    "n_tracks", "width", "height", "mvhd_version",
-                    "codec", "language",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=MP4_FEATURES_SCHEMA
-    )
+    return _row_frame(df, id_col, payload_col, _mp4_row,
+                      MP4_FEATURES_SCHEMA)

@@ -20,7 +20,7 @@ Operators:
   * ``frame_sample`` — REAL AVI (RIFF) container frame sampling: walks
     the 'movi' LIST and digests the actual frame chunk bytes; only the
     per-frame PIXEL decode (a codec) remains out of scope here.
-  * ``decode_image_features`` — generic mapInPandas plumbing for
+  * ``decode_image_features`` — generic Arrow-batched plumbing for
     per-item decode → fixed-width feature rows; REAL decode for PNG
     and baseline JPEG since round 10 (``operators/jpeg.py`` closed the
     former non-PNG stub seam); other formats → NULL rows.
@@ -28,6 +28,7 @@ Operators:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import pandas as pd
@@ -35,6 +36,83 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# ---------------------------------------------------------------------------
+# The shared Arrow row kernel: every one-row-per-payload frame below is
+# ``_row_frame`` plus a module-level row adapter per format.
+# ---------------------------------------------------------------------------
+
+
+def _field_names(schema) -> list[str]:
+    """Column names of a StructType or a flat DDL schema string."""
+    if isinstance(schema, T.StructType):
+        return schema.names
+    return [c.split()[0] for c in schema.split(",")]
+
+
+def _row_frame(df: DataFrame, id_col: str, payload_col: str, one,
+               schema) -> DataFrame:
+    """The per-row decode kernel behind every feature frame: one
+    ``(id, *one(payload))`` row per input row, Arrow-batched
+    (``mapInArrow``: row-local, bounded batches, zero shuffles).
+
+    ``schema`` (StructType or DDL string) names the output columns, id
+    first; the id column passes through untouched, so its type is the
+    input's (``df.schema[id_col]``), not the schema's. ``one`` gets the
+    payload as ``bytes`` or None and returns the non-id values, which go
+    straight into typed Arrow arrays — no pandas, so nullable 64-bit
+    ints never round-trip through float64."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    id_field, *fields = schema.fields
+    out = T.StructType(
+        [T.StructField(id_field.name, df.schema[id_col].dataType), *fields]
+    )
+    types = [to_arrow_type(f.dataType) for f in fields]
+
+    def run(batches):
+        for b in batches:
+            rows = [one(p) for p in b.column(1).to_pylist()]
+            cols = list(zip(*rows)) or [()] * len(types)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0)]
+                + [pa.array(c, type=t) for c, t in zip(cols, types)],
+                names=out.names,
+            )
+
+    return df.select(id_col, payload_col).mapInArrow(run, out)
+
+
+def _meta_adapter(parse, schema):
+    """Row adapter for a parser returning a field dict or None: the
+    typed columns after ``id, valid`` are read from the dict by name;
+    None becomes a valid=false all-NULL row."""
+    names = _field_names(schema)[2:]
+    miss = (False,) + (None,) * len(names)
+
+    def row(payload):
+        meta = parse(payload)
+        return miss if meta is None else (True, *(meta[n] for n in names))
+
+    return row
+
+
+def _hash_words(hx: str | None, n: int) -> tuple:
+    """A hex hash as ``n`` signed 64-bit words, most significant first
+    (the LongType form ``hamming_near_dup`` blocks on); NULLs for a NULL
+    hash."""
+    if hx is None:
+        return (None,) * n
+    u = int(hx, 16)
+    words = []
+    for k in reversed(range(n)):
+        w = (u >> (64 * k)) & ((1 << 64) - 1)
+        words.append(w - (1 << 64) if w >= (1 << 63) else w)
+    return tuple(words)
+
 
 #: Magic-byte prefixes → declared media type (sniffed with startswith on
 #: the hex encoding — a pure JVM expression).
@@ -503,31 +581,13 @@ def wav_ahash_frame(
     Corrupt/non-PCM payloads yield NULLs. Row-local, zero shuffles.
     ``mixdown`` selects the all-channel energy variant (see
     :func:`wav_energy_hash`)."""
-    id_name, payload_name = id_col, payload_col
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            for rid, payload in zip(pdf[id_name], pdf[payload_name]):
-                hx = wav_energy_hash(payload, n_windows, mixdown=mixdown)
-                v = None
-                if hx is not None and n_windows == 64:
-                    u = int(hx, 16)
-                    v = u - (1 << 64) if u >= (1 << 63) else u
-                out_rows.append((rid, hx, v))
-            yield pd.DataFrame(
-                out_rows, columns=["id", "whash", "whash64"]
-            ).astype({"whash64": "Int64"})
+    def one(payload):
+        hx = wav_energy_hash(payload, n_windows, mixdown=mixdown)
+        return (hx, _hash_words(hx if n_windows == 64 else None, 1)[0])
 
-    id_field = df.schema[id_col]
-    schema = T.StructType(
-        [
-            T.StructField("id", id_field.dataType),
-            T.StructField("whash", T.StringType()),
-            T.StructField("whash64", T.LongType()),
-        ]
-    )
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return _row_frame(df, id_col, payload_col, one,
+                      "id long, whash string, whash64 long")
 
 
 # ---------------------------------------------------------------------------
@@ -792,6 +852,7 @@ MP3_FEATURES_SCHEMA = (
     "duration_ms long, xing_frames int, declared_duration_ms long, "
     "title string, artist string"
 )
+_mp3_row = _meta_adapter(parse_mp3_metadata, MP3_FEATURES_SCHEMA)
 
 
 def mp3_features_frame(
@@ -800,41 +861,8 @@ def mp3_features_frame(
     """Arrow-batched MP3 metadata extraction — the WAV sibling for the
     dominant crawl audio format: row-local, zero shuffles, corrupt
     payloads → valid=false rows."""
-    id_name, payload_name = id_col, payload_col
-
-    def one(payload):
-        meta = parse_mp3_metadata(
-            None if payload is None else bytes(payload)
-        )
-        if meta is None:
-            return (False, None, None, None, None, None, None, None,
-                    None, None, None, None)
-        return (
-            True, meta["version"], meta["bitrate_kbps"], meta["is_cbr"],
-            meta["sample_rate"], meta["n_channels"], meta["n_frames"],
-            meta["duration_ms"], meta["xing_frames"],
-            meta["declared_duration_ms"], meta["title"], meta["artist"],
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rid, *one(payload))
-                for rid, payload in zip(pdf[id_name], pdf[payload_name])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "valid", "version", "bitrate_kbps", "is_cbr",
-                    "sample_rate", "n_channels", "n_frames",
-                    "duration_ms", "xing_frames", "declared_duration_ms",
-                    "title", "artist",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=MP3_FEATURES_SCHEMA
-    )
+    return _row_frame(df, id_col, payload_col, _mp3_row,
+                      MP3_FEATURES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -924,6 +952,7 @@ ADTS_FEATURES_SCHEMA = (
     "id long, valid boolean, sample_rate int, n_channels int, "
     "n_frames int, duration_ms long"
 )
+_adts_row = _meta_adapter(parse_adts_metadata, ADTS_FEATURES_SCHEMA)
 
 
 def adts_features_frame(
@@ -931,36 +960,8 @@ def adts_features_frame(
 ) -> DataFrame:
     """Arrow-batched ADTS AAC metadata extraction — the MP3 sibling:
     row-local, zero shuffles, corrupt payloads → valid=false rows."""
-    id_name, payload_name = id_col, payload_col
-
-    def one(payload):
-        meta = parse_adts_metadata(
-            None if payload is None else bytes(payload)
-        )
-        if meta is None:
-            return (False, None, None, None, None)
-        return (
-            True, meta["sample_rate"], meta["n_channels"],
-            meta["n_frames"], meta["duration_ms"],
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rid, *one(payload))
-                for rid, payload in zip(pdf[id_name], pdf[payload_name])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "valid", "sample_rate", "n_channels",
-                    "n_frames", "duration_ms",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=ADTS_FEATURES_SCHEMA
-    )
+    return _row_frame(df, id_col, payload_col, _adts_row,
+                      ADTS_FEATURES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1040,43 +1041,17 @@ def parse_flac_metadata(payload: bytes | None) -> dict | None:
     return None
 
 
+_flac_row = _meta_adapter(parse_flac_metadata, WAV_METADATA_SCHEMA)
+
+
 def flac_features_frame(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
     """Arrow-batched FLAC STREAMINFO extraction — the WAV/MP3 sibling:
     row-local, zero shuffles, corrupt payloads → valid=false rows.
     Reuses the WAV metadata schema (same columns, same meanings)."""
-    id_name, payload_name = id_col, payload_col
-
-    def one(payload):
-        meta = parse_flac_metadata(
-            None if payload is None else bytes(payload)
-        )
-        if meta is None:
-            return (False, None, None, None, None, None)
-        return (
-            True, meta["sample_rate"], meta["n_channels"],
-            meta["bits_per_sample"], meta["n_frames"],
-            meta["duration_ms"],
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rid, *one(payload))
-                for rid, payload in zip(pdf[id_name], pdf[payload_name])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "valid", "sample_rate", "n_channels",
-                    "bits_per_sample", "n_frames", "duration_ms",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=WAV_METADATA_SCHEMA
-    )
+    return _row_frame(df, id_col, payload_col, _flac_row,
+                      WAV_METADATA_SCHEMA)
 
 
 def wav_metadata_frame(
@@ -1085,26 +1060,9 @@ def wav_metadata_frame(
     """Arrow-batched REAL WAV metadata decode over a binary column —
     unlike the image/video feature extractors below, nothing here is
     stubbed: the parser reads genuine RIFF container bytes. Row-local
-    (mapInPandas, bounded batches, no shuffle)."""
-    id_name, payload_name = id_col, payload_col
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rid, *parse_wav_header(payload))
-                for rid, payload in zip(pdf[id_name], pdf[payload_name])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "valid", "sample_rate", "n_channels",
-                    "bits_per_sample", "n_frames", "duration_ms",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=WAV_METADATA_SCHEMA
-    )
+    (bounded batches, no shuffle)."""
+    return _row_frame(df, id_col, payload_col, parse_wav_header,
+                      WAV_METADATA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1473,59 +1431,24 @@ def png_ahash_frame(
     the same bits as a SIGNED 64-bit value ready for
     :func:`~petk_spark.operators.dedup.hamming_near_dup`'s XOR/popcount
     blocking. Corrupt or undecodable payloads yield NULLs, never task
-    failures. Row-local (mapInPandas), zero shuffles — pure scan work
+    failures. Row-local, zero shuffles — pure scan work
     at 100 TB, the same shape as every decode kernel here."""
-    id_name, payload_name = id_col, payload_col
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            for rid, payload in zip(pdf[id_name], pdf[payload_name]):
-                hx = png_average_hash(payload, hash_size)
-                v = None
-                if hx is not None and hash_size == 8:
-                    u = int(hx, 16)
-                    v = u - (1 << 64) if u >= (1 << 63) else u
-                out_rows.append((rid, hx, v))
-            yield pd.DataFrame(
-                out_rows, columns=["id", "ahash", "ahash64"]
-            ).astype({"ahash64": "Int64"})
+    def one(payload):
+        hx = png_average_hash(payload, hash_size)
+        return (hx, _hash_words(hx if hash_size == 8 else None, 1)[0])
 
-    id_field = df.schema[id_col]
-    schema = T.StructType(
-        [
-            T.StructField("id", id_field.dataType),
-            T.StructField("ahash", T.StringType()),
-            T.StructField("ahash64", T.LongType()),
-        ]
-    )
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return _row_frame(df, id_col, payload_col, one,
+                      "id long, ahash string, ahash64 long")
 
 
 def png_features_frame(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """Arrow-batched REAL PNG feature decode over a binary column — the
     pixel decode is a genuine inflate + unfilter, not the stub below.
-    Row-local (mapInPandas, bounded batches, no shuffle); corrupt blobs
-    yield valid=false rows instead of failing the scan."""
-    id_name, payload_name = id_col, payload_col
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rid, *parse_png(payload))
-                for rid, payload in zip(pdf[id_name], pdf[payload_name])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "valid", "width", "height",
-                    "n_channels", "bit_depth", "mean_luma",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=PNG_FEATURES_SCHEMA
-    )
+    Row-local (bounded batches, no shuffle); corrupt blobs yield
+    valid=false rows instead of failing the scan."""
+    return _row_frame(df, id_col, payload_col, parse_png,
+                      PNG_FEATURES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1606,35 +1529,20 @@ def _decode_image(payload: bytes) -> tuple[int, int, int, float]:
 def decode_image_features(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
-    """Arrow-batched per-item image feature extraction via mapInPandas
-    — REAL decode (PNG + baseline/progressive JPEG + GIF), undecodable rows → all-NULL
+    """Arrow-batched per-item image feature extraction — REAL decode (PNG + baseline/progressive JPEG + GIF), undecodable rows → all-NULL
     features, never task failures.
 
     The iterator-of-batches shape keeps memory bounded regardless of
     partition size; partitioning is inherited from the source (no
     shuffle)."""
 
-    id_name, payload_name = id_col, payload_col
+    def one(payload):
+        try:
+            return _decode_image(payload)
+        except NotImplementedError:
+            return (None, None, None, None)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # Column-wise zip, not iterrows: the per-row cost is the
-            # decode itself, not pandas Series construction per row.
-            rows = []
-            for rid, payload in zip(pdf[id_name], pdf[payload_name]):
-                try:
-                    w, h, nc, luma = _decode_image(payload)
-                except NotImplementedError:
-                    w = h = nc = None
-                    luma = None
-                rows.append((rid, w, h, nc, luma))
-            yield pd.DataFrame(
-                rows, columns=["id", "width", "height", "n_channels", "mean_luma"]
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=IMAGE_FEATURES_SCHEMA
-    )
+    return _row_frame(df, id_col, payload_col, one, IMAGE_FEATURES_SCHEMA)
 
 
 def jpeg_features_frame(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
@@ -1645,25 +1553,8 @@ def jpeg_features_frame(df: DataFrame, id_col: str, payload_col: str) -> DataFra
     scan. Row-local, zero shuffles."""
     from petk_spark.operators.jpeg import parse_jpeg
 
-    id_name, payload_name = id_col, payload_col
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rid, *parse_jpeg(payload))
-                for rid, payload in zip(pdf[id_name], pdf[payload_name])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "valid", "width", "height",
-                    "n_channels", "bit_depth", "mean_luma",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=PNG_FEATURES_SCHEMA
-    )
+    return _row_frame(df, id_col, payload_col, parse_jpeg,
+                      PNG_FEATURES_SCHEMA)
 
 
 GIF_FEATURES_SCHEMA = T.StructType(
@@ -1688,34 +1579,19 @@ def gif_features_frame(df: DataFrame, id_col: str, payload_col: str) -> DataFram
     metadata-profiling policy shared with the AVI sampler). Corrupt
     payloads yield valid=false rows, never task failures. Row-local,
     zero shuffles."""
+    return _row_frame(df, id_col, payload_col, _gif_row,
+                      GIF_FEATURES_SCHEMA)
+
+
+def _gif_row(payload):
+    """GIF_FEATURES_SCHEMA row (after id) of one payload."""
     from petk_spark.operators.gif import decode_gif, gif_mean_luma
 
-    id_name, payload_name = id_col, payload_col
-
-    def one(payload):
-        dec = decode_gif(None if payload is None else bytes(payload))
-        if dec is None:
-            return (False, None, None, None, None, None, None)
-        w, h, nf, _il, _idx, _pal = dec
-        return (True, w, h, nf, 3, 8, gif_mean_luma(dec))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rid, *one(payload))
-                for rid, payload in zip(pdf[id_name], pdf[payload_name])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "valid", "width", "height", "n_frames",
-                    "n_channels", "bit_depth", "mean_luma",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=GIF_FEATURES_SCHEMA
-    )
+    dec = decode_gif(payload)
+    if dec is None:
+        return (False, None, None, None, None, None, None)
+    w, h, nf, _il, _idx, _pal = dec
+    return (True, w, h, nf, 3, 8, gif_mean_luma(dec))
 
 
 def image_average_hash(payload: bytes | None, hash_size: int = 8):
@@ -1926,50 +1802,18 @@ def image_phash_frame(
     hash as TWO signed longs (most-significant word first), the shape
     ``hamming_near_dup``'s multi-word signature form blocks on with
     32-bit keys. Corrupt or undecodable payloads yield NULLs, never
-    task failures. Row-local (mapInPandas), zero shuffles — pure scan
+    task failures. Row-local, zero shuffles — pure scan
     work at 100 TB."""
-    id_name, payload_name = id_col, payload_col
     if bits not in (64, 128):
         raise ValueError(f"bits must be 64 or 128, got {bits}")
 
-    def signed(u: int) -> int:
-        return u - (1 << 64) if u >= (1 << 63) else u
+    def one(payload):
+        hx = image_phash(payload, dct_size, bits=bits)
+        return (hx, *_hash_words(hx, bits // 64))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            for rid, payload in zip(pdf[id_name], pdf[payload_name]):
-                hx = image_phash(payload, dct_size, bits=bits)
-                if bits == 64:
-                    v = signed(int(hx, 16)) if hx is not None else None
-                    out_rows.append((rid, hx, v))
-                else:
-                    hi = lo = None
-                    if hx is not None:
-                        u = int(hx, 16)
-                        hi, lo = signed(u >> 64), signed(u & ((1 << 64) - 1))
-                    out_rows.append((rid, hx, hi, lo))
-            cols = (
-                ["id", "phash", "phash64"]
-                if bits == 64
-                else ["id", "phash", "phash_hi", "phash_lo"]
-            )
-            yield pd.DataFrame(out_rows, columns=cols).astype(
-                {c: "Int64" for c in cols[2:]}
-            )
-
-    id_field = df.schema[id_col]
-    fields = [
-        T.StructField("id", id_field.dataType),
-        T.StructField("phash", T.StringType()),
-    ]
-    if bits == 64:
-        fields.append(T.StructField("phash64", T.LongType()))
-    else:
-        fields.append(T.StructField("phash_hi", T.LongType()))
-        fields.append(T.StructField("phash_lo", T.LongType()))
-    schema = T.StructType(fields)
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    words = "phash64 long" if bits == 64 else "phash_hi long, phash_lo long"
+    return _row_frame(df, id_col, payload_col, one,
+                      f"id long, phash string, {words}")
 
 
 FRAME_SAMPLE_SCHEMA = T.StructType(
@@ -2173,25 +2017,8 @@ def mime_sniff_frame(
     ``(id, mime)``. The routing stage for mixed-format corpora: one
     map-only pass, then each format's feature frame runs on its
     filtered slice."""
-    id_name, payload_name = id_col, payload_col
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_name],
-                    "mime": [
-                        sniff_mime(
-                            None if v is None else bytes(v)
-                        )
-                        for v in pdf[payload_name]
-                    ],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema="id long, mime string"
-    )
+    return _row_frame(df, id_col, payload_col,
+                      lambda p: (sniff_mime(p),), "id long, mime string")
 
 
 MEDIA_AUTO_SCHEMA = (
@@ -2200,125 +2027,72 @@ MEDIA_AUTO_SCHEMA = (
     "duration_ms long, width int, height int, bit_depth int, "
     "mean_luma double"
 )
+#: MEDIA_AUTO_SCHEMA's value slots after ``id, mime``
+_AUTO_SLOTS = tuple(_field_names(MEDIA_AUTO_SCHEMA)[2:])
+
+
+def _avi_row(payload):
+    """``(valid, n_frames)`` — an AVI is valid when its movi LIST holds
+    at least one frame chunk."""
+    n = sum(1 for _ in parse_avi_frames(payload))
+    return (n > 0, n or None)
+
+
+@functools.cache
+def _auto_table() -> dict:
+    """mime → (row adapter, slot map): each format's typed-frame
+    adapter, plus the position in its row of every MEDIA_AUTO_SCHEMA
+    slot (None → NULL). A slot takes the typed column of the same name
+    unless renamed: mp4's timescale rides sample_rate and its track
+    count n_frames, pdf's page count rides n_frames. AVI's frame count
+    and PDF's metadata-only row (no text extraction) are entries of
+    their own."""
+    from petk_spark.operators.jpeg import parse_jpeg
+    from petk_spark.operators.mp4 import MP4_FEATURES_SCHEMA, _mp4_row
+    from petk_spark.operators.ogg import OGG_FEATURES_SCHEMA, _ogg_row
+    from petk_spark.operators.pdf import PDF_TEXT_SCHEMA, _pdf_row
+    from petk_spark.operators.webp import WEBP_FEATURES_SCHEMA, _webp_row
+
+    def slots(schema, **renamed):
+        names = _field_names(schema)[1:]
+        cols = [renamed.get(s, s) for s in _AUTO_SLOTS]
+        return tuple(names.index(c) if c in names else None for c in cols)
+
+    return {
+        "wav": (parse_wav_header, slots(WAV_METADATA_SCHEMA)),
+        "mp3": (_mp3_row, slots(MP3_FEATURES_SCHEMA)),
+        "aac": (_adts_row, slots(ADTS_FEATURES_SCHEMA)),
+        "flac": (_flac_row, slots(WAV_METADATA_SCHEMA)),
+        "png": (parse_png, slots(PNG_FEATURES_SCHEMA)),
+        "jpeg": (parse_jpeg, slots(PNG_FEATURES_SCHEMA)),
+        "gif": (_gif_row, slots(GIF_FEATURES_SCHEMA)),
+        "webp": (_webp_row, slots(WEBP_FEATURES_SCHEMA)),
+        "avi": (_avi_row, slots("id long, valid boolean, n_frames int")),
+        "mp4": (_mp4_row, slots(MP4_FEATURES_SCHEMA, sample_rate="timescale",
+                                n_frames="n_tracks")),
+        "ogg": (_ogg_row, slots(OGG_FEATURES_SCHEMA)),
+        "pdf": (functools.partial(_pdf_row, with_text=False),
+                slots(PDF_TEXT_SCHEMA, n_frames="n_pages")),
+    }
 
 
 def _auto_one(payload) -> tuple:
     """(mime, valid, sample_rate, n_channels, bits, n_frames,
     duration_ms, width, height, bit_depth, mean_luma) for one payload
-    — sniff, then the matching parser; unknown/corrupt → valid=false,
-    never an exception (the repo-wide codec contract)."""
-    nine = (None,) * 9
-    if payload is None:
-        return (None, False) + nine
-    p = bytes(payload)
-    mime = sniff_mime(p)
-    try:
-        if mime == "wav":
-            valid, rate, ch, bits, frames, dur = parse_wav_header(p)
-            return (mime, valid, rate, ch, bits, frames, dur,
-                    None, None, None, None)
-        if mime == "mp3":
-            m = parse_mp3_metadata(p)
-            if m is None:
-                return (mime, False) + nine
-            return (mime, True, m["sample_rate"], m["n_channels"],
-                    None, m["n_frames"], m["duration_ms"],
-                    None, None, None, None)
-        if mime == "aac":
-            m = parse_adts_metadata(p)
-            if m is None:
-                return (mime, False) + nine
-            return (mime, True, m["sample_rate"], m["n_channels"],
-                    None, m["n_frames"], m["duration_ms"],
-                    None, None, None, None)
-        if mime == "flac":
-            m = parse_flac_metadata(p)
-            if m is None:
-                return (mime, False) + nine
-            return (mime, True, m["sample_rate"], m["n_channels"],
-                    m["bits_per_sample"], m["n_frames"],
-                    m["duration_ms"], None, None, None, None)
-        if mime == "png":
-            valid, w, h, ch, depth, mean = parse_png(p)
-            return (mime, valid, None, ch, None, None, None,
-                    w, h, depth, mean)
-        if mime == "jpeg":
-            from petk_spark.operators.jpeg import decode_jpeg
-
-            dec = decode_jpeg(p)
-            if dec is None:
-                return (mime, False) + nine
-            w, h, ch, px = dec
-            return (mime, True, None, ch, None, None, None,
-                    w, h, 8, float(px.mean()))
-        if mime == "gif":
-            from petk_spark.operators.gif import decode_gif
-
-            dec = decode_gif(p)
-            if dec is None:
-                return (mime, False) + nine
-            w, h, frames, _il, idx, pal = dec
-            import numpy as np
-
-            mean = float(
-                np.asarray(pal, dtype=np.float64)[idx].mean()
-            )
-            return (mime, True, None, 3, None, frames, None,
-                    w, h, 8, mean)
-        if mime == "webp":
-            from petk_spark.operators.webp import parse_webp_metadata
-
-            m = parse_webp_metadata(p)
-            if m is None:
-                return (mime, False) + nine
-            mean = None
-            if m["format"] == "lossless":
-                from petk_spark.operators.vp8l import decode_webp
-
-                dec = decode_webp(p)
-                if dec is not None:
-                    mean = float(dec[3][:, :, :3].mean())
-            return (mime, True, None,
-                    4 if m["has_alpha"] else 3, None,
-                    m["n_frames"], None, m["width"], m["height"],
-                    8, mean)
-        if mime == "avi":
-            frames = sum(1 for _ in parse_avi_frames(p))
-            return (mime, frames > 0, None, None, None,
-                    frames if frames > 0 else None, None,
-                    None, None, None, None)
-        if mime == "mp4":
-            from petk_spark.operators.mp4 import parse_mp4_metadata
-
-            m = parse_mp4_metadata(p)
-            if m is None:
-                return (mime, False) + nine
-            # timescale rides sample_rate (units/sec), trak count
-            # rides n_frames — the unified row's closest slots
-            return (mime, True, m["timescale"], None, None,
-                    m["n_tracks"], m["duration_ms"],
-                    m["width"], m["height"], None, None)
-        if mime == "ogg":
-            from petk_spark.operators.ogg import parse_ogg_metadata
-
-            m = parse_ogg_metadata(p)
-            if m is None:
-                return (mime, False) + nine
-            return (mime, True, m["sample_rate"], m["n_channels"],
-                    None, None, m["duration_ms"],
-                    None, None, None, None)
-        if mime == "pdf":
-            from petk_spark.operators.pdf import parse_pdf_metadata
-
-            m = parse_pdf_metadata(p)
-            if m is None:
-                return (mime, False) + nine
-            # page count rides n_frames (the repeated-unit slot)
-            return (mime, True, None, None, None,
-                    m["n_pages"], None, None, None, None, None)
-    except Exception:
-        return (mime, False) + nine
-    return (mime, False) + nine
+    — sniff, then the format's typed-frame adapter projected through
+    :func:`_auto_table`; unknown/corrupt → valid=false, never an
+    exception (the repo-wide codec contract)."""
+    mime = sniff_mime(payload)
+    entry = _auto_table().get(mime)
+    if entry is not None:
+        adapter, slots = entry
+        try:
+            row = adapter(payload)
+        except Exception:
+            row = None
+        if row is not None and row[0]:
+            return (mime, *(None if i is None else row[i] for i in slots))
+    return (mime, False) + (None,) * (len(_AUTO_SLOTS) - 1)
 
 
 def media_features_auto(
@@ -2331,23 +2105,4 @@ def media_features_auto(
     production shape for crawl media, where one frame holds whatever
     the fetcher stored. Row-local Arrow kernel, zero shuffles; corrupt
     or unknown payloads become valid=false rows, never exceptions."""
-    id_name, payload_name = id_col, payload_col
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rid, *_auto_one(payload))
-                for rid, payload in zip(pdf[id_name], pdf[payload_name])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "mime", "valid", "sample_rate", "n_channels",
-                    "bits_per_sample", "n_frames", "duration_ms",
-                    "width", "height", "bit_depth", "mean_luma",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=MEDIA_AUTO_SCHEMA
-    )
+    return _row_frame(df, id_col, payload_col, _auto_one, MEDIA_AUTO_SCHEMA)

@@ -28,10 +28,10 @@ Scale: row-local Arrow kernel, zero shuffles, corrupt → valid=false.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from petk_spark.operators.multimodal import _meta_adapter, _row_frame
 
 __all__ = [
     "synth_ogg",
@@ -251,41 +251,14 @@ OGG_FEATURES_SCHEMA = (
 )
 
 
+_ogg_row = _meta_adapter(parse_ogg_metadata, OGG_FEATURES_SCHEMA)
+
+
 def ogg_features_frame(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
     """Arrow-batched Ogg identification-header extraction — the
     MP3/FLAC/MP4 sibling: row-local, zero shuffles, corrupt payloads →
     valid=false rows."""
-    id_name, payload_name = id_col, payload_col
-
-    def one(payload):
-        meta = parse_ogg_metadata(
-            None if payload is None else bytes(payload)
-        )
-        if meta is None:
-            return (False, None, None, None, None, None, None, None)
-        return (
-            True, meta["codec"], meta["sample_rate"],
-            meta["n_channels"], meta["pre_skip"], meta["duration_ms"],
-            meta["title"], meta["artist"],
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rid, *one(payload))
-                for rid, payload in zip(pdf[id_name], pdf[payload_name])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "valid", "codec", "sample_rate",
-                    "n_channels", "pre_skip", "duration_ms",
-                    "title", "artist",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=OGG_FEATURES_SCHEMA
-    )
+    return _row_frame(df, id_col, payload_col, _ogg_row,
+                      OGG_FEATURES_SCHEMA)

@@ -34,7 +34,7 @@ documented swap seam for a real renderer. ``parse_pdf_metadata``
 returns None for those rather than guessing.
 
 Reference parity: the reference engine is tabular-only — declared
-beyond-reference. Scale: row-local Arrow kernels over ``mapInPandas``,
+beyond-reference. Scale: row-local Arrow kernels (``multimodal._row_frame``),
 zero shuffles, corrupt → valid=false, never task failure — since
 round 16 the per-row parse in ``pdf_text_frame``/``read_pdf`` is
 wrapped in the ``_auto_one`` catch-all pattern AND the two crash
@@ -48,10 +48,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator, Optional, Sequence, Union
+from typing import Optional, Sequence, Union
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from petk_spark.operators.multimodal import _row_frame
 
 __all__ = [
     "synth_pdf",
@@ -875,112 +876,52 @@ PDF_TEXT_SCHEMA = (
 )
 
 
+def _pdf_row(payload, with_text: bool = True):
+    """PDF_TEXT_SCHEMA row (after id) of one payload; ``with_text=False``
+    skips text extraction (text NULL). Catch-all like
+    ``multimodal._auto_one``: a corrupt PDF among billions yields
+    valid=false, never a task failure."""
+    try:
+        meta = parse_pdf_metadata(payload)
+        if meta is not None:
+            text = extract_pdf_text(payload) if with_text else None
+            return (
+                True, meta["version"], meta["n_pages"],
+                meta["n_objects"], meta["title"], meta["author"], text,
+            )
+    except Exception:
+        pass
+    return (False, None, None, None, None, None, None)
+
+
 def pdf_text_frame(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
     """Arrow-batched PDF metadata + text extraction — one pass yields
     both tiers (metadata fields AND the extracted text), row-local,
-    zero shuffles, corrupt → valid=false."""
-    id_name, payload_name = id_col, payload_col
-
-    def one(payload):
-        # catch-all like multimodal._auto_one: a corrupt PDF among
-        # billions must yield valid=false, never a task failure — the
-        # module contract the r15 verdict marked weak until wrapped
-        try:
-            p = None if payload is None else bytes(payload)
-            meta = parse_pdf_metadata(p)
-            if meta is None:
-                return (False, None, None, None, None, None, None)
-            text = extract_pdf_text(p)
-            return (
-                True, meta["version"], meta["n_pages"],
-                meta["n_objects"], meta["title"], meta["author"],
-                text,
-            )
-        except Exception:
-            return (False, None, None, None, None, None, None)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = [
-                (rid, *one(payload))
-                for rid, payload in zip(
-                    pdf_b[id_name], pdf_b[payload_name]
-                )
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "valid", "version", "n_pages", "n_objects",
-                    "title", "author", "text",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=PDF_TEXT_SCHEMA
-    )
+    zero shuffles, corrupt → valid=false (so is a PDF whose text
+    extraction raises)."""
+    return _row_frame(df, id_col, payload_col, _pdf_row, PDF_TEXT_SCHEMA)
 
 
 def read_pdf(spark, path: str) -> DataFrame:
     """Directory of ``*.pdf`` → documents-shaped frame ``(doc_id,
-    path, valid, version, n_pages, text)`` via a binaryFile scan +
-    :func:`pdf_text_frame` — the WARC/WET ingestion precedent
-    (sources/warc.py) for the PDF half of a crawl. doc_id is a stable
-    64-bit hash of the file path (xxhash64), the same identity rule
-    read_wet uses for URI-keyed corpora."""
+    path, valid, version, n_pages, n_objects, title, author, text)``:
+    :func:`pdf_text_frame` over a binaryFile scan, keyed by the file
+    path — the WARC/WET ingestion precedent (sources/warc.py) for the
+    PDF half of a crawl. doc_id is a stable 64-bit hash of the path
+    (xxhash64), the same identity rule read_wet uses for URI-keyed
+    corpora."""
     from pyspark.sql import functions as F
 
     bins = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.pdf")
         .load(path)
-        .select(
-            F.xxhash64(F.col("path")).alias("doc_id"),
-            F.col("path"),
-            F.col("content"),
-        )
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for rid, pth, payload in zip(
-                b["doc_id"], b["path"], b["content"]
-            ):
-                # same catch-all contract as pdf_text_frame: one bad
-                # crawl file must not kill the ingest task
-                try:
-                    p = None if payload is None else bytes(payload)
-                    meta = parse_pdf_metadata(p)
-                except Exception:
-                    meta = None
-                if meta is None:
-                    rows.append((rid, pth, False, None, None, None,
-                                 None, None, None))
-                else:
-                    try:
-                        text = extract_pdf_text(p)
-                    except Exception:
-                        text = None
-                    rows.append((
-                        rid, pth, True, meta["version"],
-                        meta["n_pages"], meta["n_objects"],
-                        meta["title"], meta["author"], text,
-                    ))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "path", "valid", "version", "n_pages",
-                    "n_objects", "title", "author", "text",
-                ],
-            )
-
-    return bins.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, path string, valid boolean, version string,"
-            " n_pages int, n_objects int, title string,"
-            " author string, text string"
-        ),
+    return pdf_text_frame(bins, "path", "content").select(
+        F.xxhash64(F.col("id")).alias("doc_id"),
+        F.col("id").alias("path"),
+        "valid", "version", "n_pages", "n_objects", "title", "author",
+        "text",
     )

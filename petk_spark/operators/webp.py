@@ -33,10 +33,10 @@ synthesizers double as the corrupt-path fuzz base.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from petk_spark.operators.multimodal import _row_frame
 
 
 # ---------------------------------------------------------------------------
@@ -174,6 +174,30 @@ WEBP_FEATURES_SCHEMA = (
 )
 
 
+def _webp_row(payload):
+    """WEBP_FEATURES_SCHEMA row (after id) of one payload."""
+    meta = parse_webp_metadata(payload)
+    if meta is None:
+        return (False, None, None, None, None, None, None, None)
+    luma = None
+    if meta["format"] == "lossless":
+        from petk_spark.operators.vp8l import decode_webp
+
+        dec = decode_webp(payload)
+        if dec is not None:
+            luma = float(dec[3][:, :, :3].mean())
+    return (
+        True,
+        meta["format"],
+        meta["width"],
+        meta["height"],
+        meta["n_frames"],
+        4 if meta["has_alpha"] else 3,
+        8,
+        luma,
+    )
+
+
 def webp_features_frame(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
@@ -185,45 +209,5 @@ def webp_features_frame(
     half: LOSSLESS payloads get a REAL pixel decode
     (operators/vp8l.py) and report ``mean_luma`` (mean over the RGB
     channels); lossy/extended stay metadata-only (NULL)."""
-    id_name, payload_name = id_col, payload_col
-
-    def one(payload):
-        raw = None if payload is None else bytes(payload)
-        meta = parse_webp_metadata(raw)
-        if meta is None:
-            return (False, None, None, None, None, None, None, None)
-        luma = None
-        if meta["format"] == "lossless":
-            from petk_spark.operators.vp8l import decode_webp
-
-            dec = decode_webp(raw)
-            if dec is not None:
-                luma = float(dec[3][:, :, :3].mean())
-        return (
-            True,
-            meta["format"],
-            meta["width"],
-            meta["height"],
-            meta["n_frames"],
-            4 if meta["has_alpha"] else 3,
-            8,
-            luma,
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rid, *one(payload))
-                for rid, payload in zip(pdf[id_name], pdf[payload_name])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "valid", "format", "width", "height",
-                    "n_frames", "n_channels", "bit_depth", "mean_luma",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=WEBP_FEATURES_SCHEMA
-    )
+    return _row_frame(df, id_col, payload_col, _webp_row,
+                      WEBP_FEATURES_SCHEMA)

@@ -3,7 +3,9 @@
 The operators themselves never mutate session config (a deliberate
 contract — see operators/describe.py's codegen note); this module is
 where the recommended settings live, applied once at session build.
-`bench.py` and `tests/conftest.py` use the same values.
+Its caller in this repo is the benchmark worker (`perfbench/worker.py`);
+`bench.py` and `tests/conftest.py` build their own sessions (the test
+session leaves ``spark.sql.execution.arrow.pyspark.enabled`` off).
 
 Rationale per setting, at the 100 TB design point:
 

@@ -242,3 +242,17 @@ def test_topn_queries_use_bounded_take_ordered(spark):
         plan = executed_plan(plan_df)
         assert "TakeOrderedAndProject" in plan, plan[:800]
         assert "Sort " not in plan, "global sort leaked into a top-n plan"
+
+
+def test_max_partition_bytes_parses_spark_size_strings():
+    """ensure_parallelism reads spark.sql.files.maxPartitionBytes with
+    Spark's byte-string rules: a user's "64m" is 64 MiB, not 64 bytes."""
+    from petk_spark.operators.describe import _parse_byte_string
+
+    assert _parse_byte_string("64m") == 64 << 20
+    assert _parse_byte_string("1g") == 1 << 30
+    assert _parse_byte_string("134217728b") == 134217728
+    assert _parse_byte_string("134217728") == 134217728
+    assert _parse_byte_string("2KB") == 2048
+    with pytest.raises(ValueError):
+        _parse_byte_string("1.5g")
