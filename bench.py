@@ -52,29 +52,18 @@ import pandas as pd
 
 from pyspark.sql import SparkSession
 
+from petk_spark.session import recommended_builder
+
 
 def build_spark(cpus: str) -> SparkSession:
+    # The engine's recommended session (petk_spark/session.py: shuffle
+    # partitions, AQE, UTC, Arrow, DataFrame debugging off) plus the
+    # bench-only overrides below.
     b = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        recommended_builder(f"local[{cpus}]", int(cpus))
         .appName("petk-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Round 17 (guide §1.2 per-task/driver work): PySpark 4's
-        # DataFrame debugging wraps EVERY DataFrame/Column API call
-        # with a Python stack walk plus ~4 py4j round trips
-        # (conf.get + PySparkCurrentOrigin.set/clear) to enrich error
-        # messages with user call sites. Plan construction is inside
-        # every timed sample; on the 25-branch media_metadata union
-        # this was 11.3k→3.7k py4j round trips and 2.0→1.0 s of build
-        # per run when disabled (profiled). Scale-independent: this is
-        # pure driver-side Python overhead, the standard production
-        # setting for latency-sensitive drivers, and identical at any
-        # core count or data size.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # ~160 collects share this session; broadcast/shuffle blocks are
         # only reclaimed by the ContextCleaner AFTER a driver GC, and the
         # default periodicGC interval (30 min) never fires within a bench

@@ -3,9 +3,25 @@
 The operators themselves never mutate session config (a deliberate
 contract — see operators/describe.py's codegen note); this module is
 where the recommended settings live, applied once at session build.
-Its caller in this repo is the benchmark worker (`perfbench/worker.py`);
-`bench.py` and `tests/conftest.py` build their own sessions (the test
-session leaves ``spark.sql.execution.arrow.pyspark.enabled`` off).
+``recommended_builder`` is the one builder for every session this repo
+owns; each caller adds only its own overrides on top:
+
+- ``bench.build_spark``: appName, driver memory, UI off,
+  ``periodicGC``, and the ``SPARK_GRAFT_EXTRA_CONF`` A/B hook;
+- ``tests/conftest.py`` (the ``spark`` fixture): appName, 4g, UI off
+  on ``local[4]``, so the tests run the same Arrow
+  ``toPandas``/``createDataFrame`` path as the bench;
+- ``tools/job_probe.py``: the bench overrides with the UI (and its
+  REST API) enabled;
+- ``perfbench/worker.py``: UI off, scratch dirs, optional event log.
+
+The one session this repo builds without it is the external driver's
+replica (``tests/driver_replica.driver_builder``, also used by
+``tools/plan_audit.py`` and ``tools/plan_dump.py``). The driver builds
+its own bare session (local[8], 8 shuffle partitions, UTC, UI off, no
+Arrow guarantee), so the replica stays bare on purpose: every twin must
+hold under the session the driver actually uses, not the one we
+recommend.
 
 Rationale per setting, at the 100 TB design point:
 
@@ -21,6 +37,14 @@ Rationale per setting, at the 100 TB design point:
   UDFs — this is the 10-100× lever over row-at-a-time Python.
 - ``spark.sql.session.timeZone=UTC``: date/timestamp statistics must be
   engine- and host-independent for oracle parity.
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark 4's
+  DataFrame debugging wraps EVERY DataFrame/Column API call with a
+  Python stack walk plus ~4 py4j round trips (conf.get +
+  PySparkCurrentOrigin.set/clear) to enrich error messages with user
+  call sites. On the 25-branch media_metadata union this was 11.3k→3.7k
+  py4j round trips and 2.0→1.0 s of plan build per run when disabled
+  (profiled). Pure driver-side overhead, independent of core count and
+  data size; the standard setting for latency-sensitive drivers.
 - ``spark.sql.files.maxPartitionBytes`` is LEFT AT DEFAULT (128 MiB):
   describe's `ensure_parallelism` handles the few-split local case
   explicitly, and at cluster scale the default split size is right.
@@ -46,6 +70,7 @@ def recommended_builder(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # NOTE on spark.sql.codegen.maxFields: raising it past the
         # >100-field fused describe bundle wins ~30% on narrow-table
         # profiles in isolation but regressed the full mixed workload

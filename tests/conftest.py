@@ -1,15 +1,15 @@
 import pytest
-from pyspark.sql import SparkSession
+
+from petk_spark.session import recommended_builder
 
 
 @pytest.fixture(scope="session")
 def spark():
+    # The engine's recommended session (8 shuffle partitions at 4 cores,
+    # Arrow on) plus the test-only overrides.
     s = (
-        SparkSession.builder.master("local[4]")
+        recommended_builder("local[4]", cores=4)
         .appName("petk-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", "4g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

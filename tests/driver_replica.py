@@ -95,12 +95,24 @@ def strict_compare(spark_df, con, sql: str, model: str = "pandas"):
     return True, "ok"
 
 
-def main(argv):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entry
+def driver_builder():
+    """The external driver's session shape: deliberately bare (local[8],
+    8 shuffle partitions, UTC, UI off, no Arrow guarantee) — NOT
+    ``petk_spark.session.recommended_builder``. The driver builds its
+    own session, so every twin must hold without our recommended
+    settings. Callers may add overrides before ``getOrCreate()``."""
     from pyspark.sql import SparkSession
+
+    return (
+        SparkSession.builder.master("local[8]")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+    )
+
+
+def main(argv):
+    import __spark_entry__ as entry
 
     positional = [a for a in argv[1:] if not a.startswith("--")]
     # first positional is the sf_dir only if it actually is a
@@ -110,11 +122,7 @@ def main(argv):
         positional = positional[1:]
     else:
         sf_dir = "/root/testdata/sf0.01"
-    builder = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-    )
+    builder = driver_builder()
     if "--adversarial" in argv:
         # The driver builds its own session; nothing guarantees UTC,
         # non-ANSI, or Arrow-backed toPandas. Every twin must hold
@@ -124,8 +132,6 @@ def main(argv):
             .config("spark.sql.ansi.enabled", "true")
             .config("spark.sql.execution.arrow.pyspark.enabled", "false")
         )
-    else:
-        builder = builder.config("spark.sql.session.timeZone", "UTC")
     spark = builder.getOrCreate()
     con = duck_connection(sf_dir)
     queries, oracles = entry.queries(), entry.oracle_sql()
@@ -158,6 +164,4 @@ def main(argv):
 
 
 if __name__ == "__main__":
-    import sys
-
     raise SystemExit(main(sys.argv))

@@ -17,6 +17,7 @@ import os
 import duckdb
 import pytest
 
+from petk_spark.sources import tables
 from petk_spark.sources.tables import EVENTS_TS_SQL, read_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SMOKE_SF", "/root/testdata/sf0.001")
@@ -55,6 +56,39 @@ def test_events_ts_has_no_nulls_assumption(spark):
     snapshot with nulls shows up here, visibly, not as a hash flap."""
     n = read_table(spark, SF_DIR, "events").filter("ts IS NULL").count()
     assert n == 0, f"events.ts now has {n} NULLs — sessionize drops them by design"
+
+
+@pytest.mark.skipif(
+    not os.path.exists(f"{SF_DIR}/events.parquet"), reason="no testdata"
+)
+def test_read_table_leaves_session_conf_alone(spark):
+    """Operators never mutate the caller's session config: reading
+    events must not flip ``nanosAsLong`` (or anything else). A child
+    session starts from the default conf, and the memo is cleared so
+    the read really happens."""
+    session = spark.newSession()
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = session.conf.get(key)
+    with tables._READ_LOCK:
+        tables._READ_CACHE.clear()
+    sdf = read_table(session, SF_DIR, "events")
+    assert session.conf.get(key) == before
+    assert dict(sdf.dtypes)["ts"] == "double"
+
+
+@pytest.mark.skipif(
+    not os.path.exists(f"{SF_DIR}/events.parquet"), reason="no testdata"
+)
+def test_read_table_evicts_dead_sessions(spark):
+    """Memoized handles of other applicationIds (dead sessions) are
+    dropped on the next read instead of being kept forever."""
+    stale = ("app-dead-session", SF_DIR, "events")
+    handle = read_table(spark, SF_DIR, "events")
+    with tables._READ_LOCK:
+        tables._READ_CACHE[stale] = handle
+    read_table(spark, SF_DIR, "events")
+    assert stale not in tables._READ_CACHE
+    assert (spark.sparkContext.applicationId, SF_DIR, "events") in tables._READ_CACHE
 
 
 def test_bench_out_path_defaults_are_non_destructive():

@@ -1,7 +1,8 @@
 """Per-query job/stage attribution probe (optimization round 16).
 
-Runs named bench-registry entries in a fresh session with the EXACT
-bench config except the UI enabled, then reads the UI REST API to
+Runs named bench-registry entries in a fresh session with the bench
+config (``recommended_builder`` plus bench.build_spark's overrides)
+except the UI enabled, then reads the UI REST API to
 attribute wall time: how many Spark jobs (actions) the query issues,
 how many stages/tasks, aggregate executor task time vs wall clock —
 separating orchestration latency (many tiny jobs, plan/codegen time,
@@ -17,6 +18,7 @@ Stage detail rows (last run only): [stage_name, tasks, task_time_s].
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
@@ -33,26 +35,21 @@ def main() -> None:
     for a in sys.argv[1:]:
         if a.startswith("--runs="):
             runs = int(a.split("=", 1)[1])
-    sys.path.insert(0, "/root/repo")
-    import os
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import bench
-    from pyspark.sql import SparkSession
+
+    from petk_spark.session import recommended_builder
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        recommended_builder(f"local[{cpus}]", int(cpus))
         .appName("petk-spark-job-probe")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "true")
         .config("spark.ui.retainedJobs", "10000")
         .config("spark.ui.retainedStages", "10000")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.cleaner.periodicGC.interval", "45s")
         .getOrCreate()
     )

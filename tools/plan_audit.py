@@ -69,18 +69,12 @@ def audit(df, execute: bool = False) -> dict:
 
 def main(argv):
     import __spark_entry__ as entry
-    from pyspark.sql import SparkSession
+    from tests.driver_replica import driver_builder
 
     sf_dir = next((a for a in argv[1:] if not a.startswith("--")),
                   "/root/testdata/sf0.01")
     md = "--markdown" in argv
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = driver_builder().getOrCreate()
     execute = "--execute" in argv
     rows = []
     for name, fn in entry.queries().items():

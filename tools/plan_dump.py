@@ -6,10 +6,11 @@ claims in OPTIMIZATION_*.md are checkable without running Spark.
 
 Usage:
   python tools/plan_dump.py --suffix=before [--tag=r16] [q1 q2 ...]
-With no query names, dumps every `queries()` entry. Uses the same
-session shape as tools/plan_audit.py (plan construction only — no
-execution, so the initial Catalyst plan is captured, matching the
-SCALE.md appendix convention).
+With no query names, dumps every `queries()` entry. Uses the driver's
+session shape (`tests.driver_replica.driver_builder`, as
+tools/plan_audit.py does) and builds plans only — no execution, so the
+initial Catalyst plan is captured, matching the SCALE.md appendix
+convention.
 """
 from __future__ import annotations
 
@@ -21,9 +22,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main(argv) -> int:
     import __spark_entry__ as entry
-    from pyspark.sql import SparkSession
 
     from petk_spark.plans.inspect import executed_plan
+    from tests.driver_replica import driver_builder
 
     suffix = "before"
     tag = "r16"
@@ -44,13 +45,7 @@ def main(argv) -> int:
         tag,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = driver_builder().getOrCreate()
     reg = entry.queries()
     targets = names or list(reg)
     rc = 0
