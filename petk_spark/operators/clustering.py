@@ -11,8 +11,8 @@ path, built for the 100 TB shape:
 
 * **Per iteration: one scan, (k x dim)-row shuffle, O(1) plan.**
   Assignment reuses :func:`petk_spark.operators.similarity.ivf_assign`
-  — a map-only projection (literal-centroid codegen for k ≤ 64,
-  broadcast-numpy Arrow kernel beyond). The centroid update is
+  — a map-only Arrow projection (the fold-exact kernel for k ≤ 64,
+  the BLAS matmul kernel beyond). The centroid update is
   ``posexplode(vec)`` → ``groupBy(centroid_id, pos)`` — Spark's hash
   aggregate computes map-side partial sums, so the shuffle carries at
   most ``k × dim × n_partitions`` pre-aggregated (sum, count) rows,
@@ -45,8 +45,8 @@ path, built for the 100 TB shape:
 
 Scale note: iterations are sequential by nature (Lloyd is a
 fixed-point loop); the per-iteration cost is the floor for any
-distributed k-means. For k > 64 the assignment switches to the Arrow
-matmul path automatically — plan size stays O(1) in k there too.
+distributed k-means. For k > 64 the assignment switches to the
+matmul kernel automatically — plan size stays O(1) in k on both.
 """
 
 from __future__ import annotations

@@ -1035,9 +1035,12 @@ def semantic_dedup_pairs(
     ``(cell, id_a, id_b, cosine)`` for same-cell pairs with
     ``cosine ≥ threshold`` and ``id_a < id_b``.
 
-    Scale design: assignment is the map-only :func:`ivf_assign`
-    projection (Arrow kernel); the within-cell compare shuffles the
-    assigned frame once on the cell id. Size ``n_centroids`` ∝
+    Scale design: assignment is a map-only Arrow projection — the
+    "arrow" method runs the IVF engine's matmul kernel at any centroid
+    count, "expr" runs :func:`ivf_assign` (its fold tier up to 64
+    centroids replays the left-fold cosine bit for bit, like the
+    compare); the within-cell compare shuffles the assigned frame once
+    on the cell id. Size ``n_centroids`` ∝
     N/target_cell_size so cells stay bounded (the published recipe:
     √N-ish cells). Malformed vectors (NULL centroid) can't be
     compared and never pair.
@@ -1074,7 +1077,12 @@ def semantic_dedup_pairs(
     (BLAS vs left-fold summation order)."""
     import warnings
 
-    from petk_spark.operators.similarity import ivf_assign, sample_centroids
+    from petk_spark.operators.similarity import (
+        _matmul_rank,
+        _rank_udf,
+        ivf_assign,
+        sample_centroids,
+    )
 
     if method not in (None, "arrow", "expr"):
         raise ValueError(
@@ -1082,15 +1090,23 @@ def semantic_dedup_pairs(
         )
     if centroids is None:
         centroids = sample_centroids(df, n_centroids, vec_col, id_col)
+    if method == "expr" or not centroids:
+        assigned = ivf_assign(df, centroids, id_col, vec_col)
+    else:
+        # The matmul kernel even below ivf_assign's 64-centroid fold
+        # tier: bit-parity buys nothing before a BLAS compare, and the
+        # fold's k·d numpy passes cost ~5× the one matmul (0.87 s vs
+        # 0.18 s, 10k × 768 vectors × 16 centroids, one numpy thread).
+        top1 = _rank_udf(df.sparkSession, centroids, 1, _matmul_rank)
+        assigned = df.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("vec"),
+            top1(F.col(vec_col).cast("array<double>"))[0].alias(
+                "centroid_id"
+            ),
+        )
+    assigned = assigned.filter(F.col("centroid_id").isNotNull())
     if method != "expr":
-        # Arrow assignment even below the 64-centroid literal
-        # threshold: the consumer is a Python groupBy stage anyway,
-        # and the literal plan's one-off codegen of the n_centroids
-        # struct-fold costs more than the whole matmul (measured
-        # 3–8 s vs 0.5 s at 16 centroids × 5k rows).
-        assigned = ivf_assign(
-            df, centroids, id_col, vec_col, method="arrow"
-        ).filter(F.col("centroid_id").isNotNull())
         if max_cell_rows is not None:
             sizes = assigned.groupBy("centroid_id").agg(
                 F.count(F.lit(1)).alias("n")
@@ -1122,9 +1138,6 @@ def semantic_dedup_pairs(
                 )
                 return cold.unionByName(hot_pairs)
         return _semantic_pairs_arrow(assigned, threshold)
-    assigned = ivf_assign(df, centroids, id_col, vec_col).filter(
-        F.col("centroid_id").isNotNull()
-    )
     return _semantic_pairs_expr(assigned, threshold)
 
 

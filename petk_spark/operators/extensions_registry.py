@@ -2963,7 +2963,7 @@ def _sem_families_sql() -> str:
     still produces numeric cosines against 64-wide literals, and an
     ungated CASE argmax would fall through to the last cell instead
     of NULL), argmax tie-broken toward the LOWER cell id exactly like
-    ivf_assign's reverse(array_sort) on (score, -id)."""
+    ivf_assign's ranking kernel."""
     cen = _sem_centroids()
     lits = [
         "[" + ", ".join(f"{x:.1f}" for x in c) + "]" for c in cen
@@ -3012,7 +3012,7 @@ def _km_families_sql() -> str:
     0.0078125). Empty cells COALESCE to their PREVIOUS centroid
     (iteration order: init → kc1 → kc2), and re-assignment rebuilds
     each centroid into a list so the cosine is the same left-fold
-    ``_cosine_sql`` the Spark literal path mirrors, argmax tie → lower
+    ``_cosine_sql`` the Spark fold kernel mirrors, argmax tie → lower
     cell."""
     cen = _sem_centroids()
     vals = ",\n    ".join(

@@ -15,7 +15,8 @@ are scored.
 from __future__ import annotations
 
 # Module scope: the pandas_udf type-hint resolver evaluates annotations
-# in the function's global namespace (see _topn_centroid_udf).
+# in the function's global namespace (see _rank_udf).
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
@@ -92,6 +93,22 @@ def embedding_profile(df: DataFrame, vec_col: str) -> DataFrame:
         F.min("v").alias("vmin"),
         F.max("v").alias("vmax"),
     )
+
+
+def _sql_double(v: float) -> str:
+    """SQL text for an exact double literal: ``repr`` round-trips the
+    value and Spark's string→double cast is correctly rounded, so the
+    parsed (and constant-folded) literal is bit-identical to
+    ``F.lit(float(v))`` — at one py4j call for a whole array instead of
+    one per element."""
+    v = float(v)
+    if v != v:
+        return "CAST('NaN' AS DOUBLE)"
+    if v == float("inf"):
+        return "CAST('Infinity' AS DOUBLE)"
+    if v == float("-inf"):
+        return "CAST('-Infinity' AS DOUBLE)"
+    return f"CAST('{v!r}' AS DOUBLE)"
 
 
 def hyperplane_signature(
@@ -201,48 +218,43 @@ def cosine_topk_lsh(
 # IVF (inverted-file) bucketing (scale path #2)
 # ---------------------------------------------------------------------------
 
-#: Centroid count above which ivf_assign/probe switch from plan-literal
-#: expression trees to the broadcast-numpy Arrow path. At n_centroids ≤
-#: 64 the literal form is a shuffle-free whole-stage-codegen projection;
-#: beyond that the PLAN itself becomes the bottleneck (4096 centroids ×
-#: dim 768 ≈ 3M literal nodes — Catalyst chokes long before the data).
-_IVF_LITERAL_MAX = 64
+#: Centroid count up to which centroid ranking runs the fold tier
+#: (:func:`_fold_rank`): ``cosine_expr``'s float64 left folds replayed
+#: bit for bit, so assignment and probing agree with the DuckDB
+#: oracle's replay at k·d numpy passes per batch. Beyond it the matmul
+#: tier (:func:`_matmul_rank`) keeps per-batch CPU to one BLAS product
+#: at 512–4096 centroids. Plan size is O(1) in the centroid count on
+#: both tiers: the centroids travel as one broadcast, not as literals.
+_IVF_FOLD_MAX = 64
 
-#: (SparkContext id, centroid digest) → Broadcast of the normalized
-#: centroid matrix. A long-lived driver issuing many query batches over
-#: the same index would otherwise leak one broadcast per call (round-7
-#: advisory); the cache reuses one broadcast per distinct centroid
-#: list and unpersists evicted entries (unpersist, not destroy — a
-#: still-referenced lazy plan re-fetches on demand). Eviction is
-#: FIFO (insertion order), NOT LRU: a hit does not refresh position.
-#: With one centroid list per index and max=8 the distinction is
-#: moot, and FIFO is what the eviction test pins (round-7 verdict
-#: #7: docs now match the code).
+#: (SparkContext id, centroid digest) → Broadcast of the centroid
+#: payload (raw matrix, left-folded norms, normalized matrix) that
+#: both ranking tiers and the health cell score read. A long-lived
+#: driver issuing many query batches over the same index would
+#: otherwise leak one broadcast per call (round-7 advisory); the cache
+#: reuses one broadcast per distinct centroid list and unpersists
+#: evicted entries (unpersist, not destroy — a still-referenced lazy
+#: plan re-fetches on demand). Eviction is FIFO (insertion order), NOT
+#: LRU: a hit does not refresh position. With one centroid list per
+#: index and max=8 the distinction is moot, and FIFO is what the
+#: eviction test pins (round-7 verdict #7: docs now match the code).
 _CENTROID_BC_CACHE: dict = {}
 _CENTROID_BC_CACHE_MAX = 8
 
 
-def _sql_double(v: float) -> str:
-    """SQL text for an exact double literal: ``repr`` round-trips the
-    value and Spark's string→double cast is correctly rounded, so the
-    parsed (and constant-folded) literal is bit-identical to
-    ``F.lit(float(v))`` — at one py4j call for a whole array instead of
-    one per element."""
-    v = float(v)
-    if v != v:
-        return "CAST('NaN' AS DOUBLE)"
-    if v == float("inf"):
-        return "CAST('Infinity' AS DOUBLE)"
-    if v == float("-inf"):
-        return "CAST('-Infinity' AS DOUBLE)"
-    return f"CAST('{v!r}' AS DOUBLE)"
+def _lfold(terms):
+    """Sum ``terms`` in order starting at 0.0 — ``cosine_expr``'s
+    ``F.aggregate`` left fold replayed elementwise, so every
+    intermediate (and the result) equals the JVM's bit for bit."""
+    acc = 0.0
+    for t in terms:
+        acc = acc + t
+    return acc
 
 
 def _centroid_broadcast(spark, centroids: list[list[float]]):
     import hashlib
     import json
-
-    import numpy as np
 
     sc = spark.sparkContext
     digest = hashlib.md5(
@@ -254,7 +266,9 @@ def _centroid_broadcast(spark, centroids: list[list[float]]):
         C = np.asarray(centroids, dtype=np.float64)
         cn = np.linalg.norm(C, axis=1)
         cn[cn == 0] = 1.0
-        bc = sc.broadcast(C / cn[:, None])
+        bc = sc.broadcast(
+            (C, np.sqrt(_lfold(c * c for c in C.T)), C / cn[:, None])
+        )
         while len(_CENTROID_BC_CACHE) >= _CENTROID_BC_CACHE_MAX:
             oldest = next(iter(_CENTROID_BC_CACHE))
             old = _CENTROID_BC_CACHE.pop(oldest)
@@ -266,231 +280,92 @@ def _centroid_broadcast(spark, centroids: list[list[float]]):
     return bc
 
 
-def _fold_assign_udf(spark, centroids: list[list[float]]):
-    """Arrow-batched nearest-centroid assignment that reproduces the
-    plan-literal path's arithmetic BIT FOR BIT (optimization round 16,
-    guide §4.2): the literal path's ``cosine_expr`` is an interpreted
-    higher-order-function fold — measured ≈1.2 ms PER ROW at k=8,
-    d=64, the dominant cost of every kmeans/IVF twin. This kernel runs
-    the identical float64 operations, vectorized across the batch:
-
-    * dot and Σv² as LEFT FOLDS in element order starting at 0.0
-      (one ``acc = acc + x_i·c_i`` numpy op per dimension — IEEE adds
-      in the same sequence, so every intermediate equals the JVM's);
-    * centroid norms pre-folded the same way in plain Python floats;
-    * ``try_divide`` → NULL-score on a zero denominator;
-    * the ``reverse(array_sort(struct(score, -id)))[0]`` selection as
-      a running max with Spark's struct ordering (NULL score < every
-      number < NaN, exact ties → LOWER centroid id);
-    * the ``_well_formed`` gate from the same Σv² fold (>0, finite;
-      NaN/null elements poison it exactly as in the JVM).
-
-    Because the arithmetic is identical (not merely equivalent), the
-    DuckDB oracle's own left-fold replay of the assignment argmax
-    cannot diverge — the property the literal path existed to
-    guarantee. Equality with the literal path on every row, including
-    tie/degenerate fixtures, is pinned by
-    ``test_ivf_assign_fold_equals_literal``."""
-    import math
-
-    C = [[float(x) for x in cen] for cen in centroids]
-    dim = len(C[0])
-    nbs = []
-    for cen in C:
-        acc = 0.0
-        for x in cen:
-            acc = acc + x * x
-        nbs.append(math.sqrt(acc))
-    bc = spark.sparkContext.broadcast((C, nbs, dim))
-
-    @F.pandas_udf("int")
-    def assign(vs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        C, nbs, dim = bc.value
-        out: list = [None] * len(vs)
-        idx: list = []
-        rows: list = []
-        for i, v in enumerate(vs):
-            if v is None or len(v) != dim:
-                continue
-            idx.append(i)
-            rows.append(np.asarray(v, dtype=np.float64))
-        if not idx:
-            return pd.Series(out, dtype="object")
-        X = np.vstack(rows)
-        n = X.shape[0]
-        sumsq = np.zeros(n)
-        for d in range(dim):
-            x = X[:, d]
-            sumsq = sumsq + x * x
-        # _well_formed: sumsq > 0 AND not NaN AND < inf (a null list
-        # element arrives as NaN through Arrow and poisons sumsq, the
-        # same NULL/NaN → not-well-formed outcome as the JVM fold)
-        ok = (sumsq > 0) & np.isfinite(sumsq)
-        na = np.sqrt(sumsq)
-        best_lev = np.full(n, -1, dtype=np.int8)
-        best_v = np.zeros(n)
-        best_j = np.zeros(n, dtype=np.int32)
-        for j, cj in enumerate(C):
-            dot = np.zeros(n)
-            for d in range(dim):
-                dot = dot + X[:, d] * cj[d]
-            denom = na * nbs[j]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                score = dot / denom
-            isnull = denom == 0.0  # try_divide → NULL score
-            isnan = np.isnan(score) & ~isnull
-            lev = np.where(isnull, 0, np.where(isnan, 2, 1)).astype(np.int8)
-            v = np.where(lev == 1, score, 0.0)
-            better = (lev > best_lev) | ((lev == best_lev) & (v > best_v))
-            best_lev = np.where(better, lev, best_lev)
-            best_v = np.where(better, v, best_v)
-            best_j = np.where(better, j, best_j)
-        for pos, i in enumerate(idx):
-            if ok[pos]:
-                out[i] = int(best_j[pos])
-        return pd.Series(out, dtype="object")
-
-    return assign
+def _fold_rank(X, payload, n_best: int):
+    """Fold tier: ``(ok, order)`` — per row of ``X`` the top-``n_best``
+    centroid ids under ``cosine_expr``'s exact arithmetic (dot and Σv²
+    as left folds in element order, ``try_divide`` → NULL score on a
+    zero denominator), ranked in Spark's descending struct order over
+    ``(score, -id)``: a NaN score first, numbers high to low, a NULL
+    score last, exact ties to the LOWER id. ``ok`` is the
+    ``_well_formed`` gate from the same Σv² fold (> 0 and finite; a
+    NULL element arrives as NaN and poisons it)."""
+    C, nbs, _ = payload
+    with np.errstate(all="ignore"):  # ill-formed rows are gated below
+        sumsq = _lfold(x * x for x in X.T)
+        dot = _lfold(x[:, None] * c for x, c in zip(X.T, C.T))
+        denom = np.sqrt(sumsq)[:, None] * nbs
+        score = dot / denom
+    lev = np.where(denom == 0.0, 0, np.where(np.isnan(score), 2, 1))
+    # lexsort keys run last-first and the sort is stable, so equal
+    # (level, score) pairs keep ascending id order
+    order = np.lexsort((-np.where(lev == 1, score, 0.0), -lev))
+    return (sumsq > 0) & np.isfinite(sumsq), order[:, :n_best]
 
 
-def _fold_topn_udf(spark, centroids: list[list[float]], n_best: int):
-    """Arrow-batched top-``n_best`` centroid ranking that reproduces
-    the plan-literal probe path's arithmetic BIT FOR BIT (optimization
-    round 16, guide §4.2 — the probing sibling of
-    :func:`_fold_assign_udf`): the literal
-    ``slice(reverse(array_sort(struct(score, -id))), 1, n)`` expression
-    costs ~1.3 s of py4j driver time PER CALL to build (8 centroids ×
-    64 dims of ``F.lit`` round trips, measured r16) plus the Catalyst
-    analysis/codegen of a 512-literal tree — on a 10-row query frame,
-    pure overhead. This kernel runs the identical float64 fold
-    operations (left folds in element order, ``try_divide`` → NULL
-    level, Spark's struct ordering: NULL score < every number < NaN,
-    ties → LOWER centroid id via stable sort) and returns the ordered
-    top-n list; malformed query vectors get NULL (explodes to zero
-    probe rows, same as the gated literal expression). Row-identity
-    with the literal path, degenerate fixtures included, is pinned by
-    ``test_probe_fold_equals_literal``."""
-    import math
-
-    C = [[float(x) for x in cen] for cen in centroids]
-    dim = len(C[0])
-    nbs = []
-    for cen in C:
-        acc = 0.0
-        for x in cen:
-            acc = acc + x * x
-        nbs.append(math.sqrt(acc))
-    bc = spark.sparkContext.broadcast((C, nbs, dim))
-
-    @F.pandas_udf("array<int>")
-    def topn(vs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        C, nbs, dim = bc.value
-        k = len(C)
-        out: list = [None] * len(vs)
-        idx: list = []
-        rows: list = []
-        for i, v in enumerate(vs):
-            if v is None or len(v) != dim:
-                continue
-            idx.append(i)
-            rows.append(np.asarray(v, dtype=np.float64))
-        if not idx:
-            return pd.Series(out, dtype="object")
-        X = np.vstack(rows)
-        n = X.shape[0]
-        sumsq = np.zeros(n)
-        for d in range(dim):
-            x = X[:, d]
-            sumsq = sumsq + x * x
-        ok = (sumsq > 0) & np.isfinite(sumsq)
-        na = np.sqrt(sumsq)
-        L = np.zeros((n, k), dtype=np.int8)
-        V = np.zeros((n, k))
-        for j, cj in enumerate(C):
-            dot = np.zeros(n)
-            for d in range(dim):
-                dot = dot + X[:, d] * cj[d]
-            denom = na * nbs[j]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                score = dot / denom
-            isnull = denom == 0.0  # try_divide → NULL score
-            isnan = np.isnan(score) & ~isnull
-            L[:, j] = np.where(isnull, 0, np.where(isnan, 2, 1))
-            V[:, j] = np.where(L[:, j] == 1, score, 0.0)
-        top = min(n_best, k)
-        for pos, i in enumerate(idx):
-            if not ok[pos]:
-                continue
-            # exact lexicographic (lev desc, score desc, id asc) — the
-            # descending walk of Spark's sorted (score, -id) structs
-            order = np.lexsort((np.arange(k), -V[pos], -L[pos]))[:top]
-            out[i] = [int(j) for j in order]
-        return pd.Series(out, dtype="object")
-
-    return topn
+def _matmul_rank(X, payload, n_best: int):
+    """Matmul tier: ``(ok, order)`` from one BLAS product of the
+    row-normalized vectors against the normalized centroid matrix
+    (cosine argmax for well-formed rows; a zero-norm centroid scores
+    0), stable argsort so ties go to the LOWER id. ``ok`` mirrors
+    ``_well_formed`` on the vector norm: positive and finite."""
+    xn = np.linalg.norm(X, axis=1)
+    with np.errstate(all="ignore"):  # ill-formed rows are gated below
+        S = (X / xn[:, None]) @ payload[2].T
+    ok = (xn > 0) & np.isfinite(xn)
+    return ok, np.argsort(-S, axis=1, kind="stable")[:, :n_best]
 
 
-def _topn_centroid_udf(spark, centroids: list[list[float]], n_best: int):
-    """Arrow-batched top-``n_best`` centroid assignment for LARGE
-    centroid sets: the row-normalized centroid matrix ships ONCE as a
-    Spark broadcast (a few MB at 4096×768), and each Arrow batch is one
-    BLAS matmul + argsort — map-side, zero shuffle, plan size O(1) in
-    n_centroids (plan-shape-tested at 512 in
-    tests/test_sinks_and_recall.py).
+def _rank_udf(spark, centroids: list[list[float]], n_best: int, rank):
+    """Arrow-batched ``array<int>`` UDF: each vector's top-``n_best``
+    centroid ids from ``rank`` (:func:`_fold_rank` or
+    :func:`_matmul_rank`); NULL for a NULL, ragged or ill-formed
+    vector. Map-side, no shuffle; the payload ships once per distinct
+    centroid list through :func:`_centroid_broadcast`.
 
-    This deliberately is NOT a broadcast join + min_by: that shape
-    multiplies every corpus row by n_centroids through the join and
-    drags the fan-out into an aggregation — a ×K volume amplification
-    the map-side matmul never pays.
-
-    Semantics match :func:`cosine_expr`'s argmax for well-formed
-    vectors (cosine = normalized dot; argmax invariant). Malformed
-    rows — NULL, dimension mismatch, zero-norm, NaN — get a NULL
-    assignment, and ties break toward the LOWER centroid id (stable
-    argsort). The literal path shares this exact contract (round-7
-    advisory normalized it), so the same inputs bucket identically on
-    either side of the 64-centroid threshold — pinned, malformed rows
-    included, by ``test_ivf_assign_arrow_equals_literal``."""
-    import numpy as np
-
+    Deliberately NOT a broadcast join + min_by: that shape multiplies
+    every row by n_centroids through the join and drags the fan-out
+    into an aggregation — a ×K volume amplification the map-side
+    kernel never pays."""
     bc = _centroid_broadcast(spark, centroids)
+    dim = len(centroids[0])
 
     @F.pandas_udf("array<int>")
-    def topn(vs: pd.Series) -> pd.Series:
-        Cn = bc.value
-        D = Cn.shape[1]
-        res: list = [None] * len(vs)
-        idx = [
-            i for i, v in enumerate(vs) if v is not None and len(v) == D
-        ]
+    def ranked(vs: pd.Series) -> pd.Series:
+        out: list = [None] * len(vs)
+        idx: list = []
+        rows: list = []
+        for i, v in enumerate(vs):
+            if v is not None and len(v) == dim:
+                idx.append(i)
+                rows.append(np.asarray(v, dtype=np.float64))
         if idx:
-            X = np.asarray(
-                [np.asarray(vs.iloc[i], dtype=np.float64) for i in idx]
-            )
-            xn = np.linalg.norm(X, axis=1)
-            # finite guard mirrors _well_formed: ±Inf components give
-            # an infinite norm; such vectors get NULL, same as literal
-            ok = (xn > 0) & np.isfinite(xn)
-            xn[~ok] = 1.0
-            S = (X / xn[:, None]) @ Cn.T
-            order = np.argsort(-S, axis=1, kind="stable")[:, :n_best]
+            ok, order = rank(np.vstack(rows), bc.value, n_best)
             for pos, i in enumerate(idx):
                 if ok[pos]:
-                    res[i] = order[pos].astype("int32").tolist()
-        return pd.Series(res)
+                    out[i] = order[pos].tolist()
+        return pd.Series(out, dtype="object")
 
-    return topn
+    return ranked
+
+
+def _ranked_centroids(
+    spark, vec: Column, centroids: list[list[float]], n: int
+) -> Column:
+    """``array<int>``: the ``n`` nearest centroid ids of ``vec`` in
+    rank order, NULL for a malformed vector — the one nearest-centroid
+    kernel behind :func:`ivf_assign` and :func:`_probe_frame`. The tier
+    is chosen by centroid count (``_IVF_FOLD_MAX``); both share one
+    contract: malformed vectors (NULL, wrong dimension, zero-norm, NaN,
+    ±Inf) rank NULL and exact ties go to the LOWER centroid id."""
+    rank = _fold_rank if len(centroids) <= _IVF_FOLD_MAX else _matmul_rank
+    return _rank_udf(spark, centroids, n, rank)(vec.cast("array<double>"))
 
 
 def _well_formed(vec: Column, dim: int) -> Column:
     """True iff ``vec`` can be assigned a centroid: non-NULL, the
     index's dimension, positive FINITE norm. The NaN check is explicit
     because Spark orders NaN ABOVE every number, so ``sumsq > 0``
-    alone would admit NaN vectors the Arrow path rejects; the
+    alone would admit NaN vectors the ranking kernels reject; the
     ``< inf`` check closes the same seam for ±Inf components (round-7
     verdict #4: squares of ±Inf give sumsq = +Inf, which is > 0 and
     not NaN, so an Inf vector used to slip through to a
@@ -515,34 +390,19 @@ def ivf_assign(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str | None = None,
 ) -> DataFrame:
-    """Assign each vector to its nearest centroid (max cosine).
+    """Assign each vector to its nearest centroid (max cosine): the
+    top-1 of :func:`_ranked_centroids`, one map-only Arrow projection
+    with no shuffle. Up to ``_IVF_FOLD_MAX`` centroids the fold tier
+    replays ``cosine_expr`` bit for bit (the DuckDB oracle's left-fold
+    argmax cannot diverge); beyond it the matmul tier runs one BLAS
+    product per batch. Plan size is O(1) in the centroid count.
 
-    Two physical strategies, both map-only projections with no shuffle
-    (``method=None`` picks by centroid count; "literal"/"arrow" force
-    a path — used by the equivalence test):
-
-    * ``n_centroids ≤ 64`` — centroids as plan literals, argmax via
-      array_sort over (score, id) structs: linear expression size,
-      whole-stage codegen. (A chained when(s > best, ...) fold
-      references the running best twice per step, doubling the
-      expression tree per centroid: 2^16 nodes at 16 centroids, which
-      took multi-MiB task binaries and ~13 s of codegen for 600 rows.)
-    * larger — the broadcast-numpy Arrow path
-      (:func:`_topn_centroid_udf`): plan size stays O(1) in
-      n_centroids, per-batch cost is one BLAS matmul.
-
-    ONE contract on both sides of the threshold (round-7 advisory):
-    malformed vectors — NULL, wrong dimension, zero-norm, NaN — get a
-    NULL ``centroid_id`` (they land in the index's default partition
-    and are never probed), and exact score ties break toward the
-    LOWER centroid id. Same inputs, same buckets, either path."""
-    if method not in (None, "literal", "arrow", "fold"):
-        raise ValueError(
-            f"method must be None, 'literal', 'arrow' or 'fold',"
-            f" got {method!r}"
-        )
+    ONE contract on both tiers (round-7 advisory): malformed vectors —
+    NULL, wrong dimension, zero-norm, NaN, ±Inf — get a NULL
+    ``centroid_id`` (they land in the index's default partition and are
+    never probed), and exact score ties break toward the LOWER centroid
+    id. Same inputs, same buckets, either tier."""
     if not centroids:
         # all-NULL/empty corpus sample — every row is unassignable
         return df.select(
@@ -550,52 +410,11 @@ def ivf_assign(
             F.col(vec_col).alias("vec"),
             F.lit(None).cast("int").alias("centroid_id"),
         ).filter(F.lit(False))
-    if method == "arrow" or (
-        method is None and len(centroids) > _IVF_LITERAL_MAX
-    ):
-        topn = _topn_centroid_udf(df.sparkSession, centroids, 1)
-        return df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            F.element_at(
-                topn(F.col(vec_col).cast("array<double>")), 1
-            ).alias("centroid_id"),
-        )
-    if method in (None, "fold"):
-        # Round 16: the small-k default is the fold-exact Arrow kernel
-        # (identical arithmetic to the literal expression path, ~50×
-        # less per-row cost — see _fold_assign_udf). method="literal"
-        # still forces the plan-literal expressions; the equivalence
-        # tests pin all three paths row-identical.
-        assign = _fold_assign_udf(df.sparkSession, centroids)
-        return df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            assign(F.col(vec_col).cast("array<double>")).alias(
-                "centroid_id"
-            ),
-        )
-    entries = [
-        F.struct(
-            cosine_expr(F.col(vec_col), F.array(*[F.lit(float(x)) for x in cen])).alias(
-                "score"
-            ),
-            # Negated id: reverse(array_sort) walks ties in DESCENDING
-            # struct order, so storing -id makes equal scores resolve
-            # to the LOWEST centroid id — the Arrow path's stable
-            # argsort order.
-            F.lit(-ci).alias("neg_id"),
-        )
-        for ci, cen in enumerate(centroids)
-    ]
-    best = F.reverse(F.array_sort(F.array(*entries)))[0]
+    top1 = _ranked_centroids(df.sparkSession, F.col(vec_col), centroids, 1)
     return df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        F.when(
-            _well_formed(F.col(vec_col), len(centroids[0])),
-            -best["neg_id"],
-        ).alias("centroid_id"),
+        top1[0].alias("centroid_id"),
     )
 
 
@@ -620,8 +439,6 @@ def sample_centroids(
     ragged one, anchoring on it would discard every well-formed
     vector and train at the wrong dimension (round-6 advisory)."""
     from collections import Counter
-
-    import numpy as np
 
     sample = (
         df.filter(F.col(vec_col).isNotNull())
@@ -656,70 +473,19 @@ def _probe_frame(
     n_probes: int,
     id_col: str,
     vec_col: str,
-    method: str | None = None,
 ) -> DataFrame:
     """(query_id, qv, centroid_id) — each query exploded to its
-    ``n_probes`` nearest centroids. Same three physical strategies as
-    :func:`ivf_assign` (round 16): the small-k default is the
-    fold-exact Arrow kernel (:func:`_fold_topn_udf`, identical
-    arithmetic to the plan-literal expressions without their ~1.3 s
-    per-call py4j build cost); ``method="literal"`` still forces the
-    plan-literal path (the equivalence test pins them row-identical);
-    beyond ``_IVF_LITERAL_MAX`` centroids the normalized-matmul Arrow
-    path keeps plan size O(1)."""
-    if method not in (None, "literal", "arrow", "fold"):
-        raise ValueError(
-            f"method must be None, 'literal', 'arrow' or 'fold',"
-            f" got {method!r}"
-        )
-    if method == "arrow" or (
-        method is None and len(centroids) > _IVF_LITERAL_MAX
-    ):
-        topn = _topn_centroid_udf(
-            queries.sparkSession, centroids, n_probes
-        )
-        return queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            F.explode(
-                topn(F.col(vec_col).cast("array<double>"))
-            ).alias("centroid_id"),
-        )
-    if method in (None, "fold"):
-        topn = _fold_topn_udf(queries.sparkSession, centroids, n_probes)
-        return queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            F.explode(
-                topn(F.col(vec_col).cast("array<double>"))
-            ).alias("centroid_id"),
-        )
-    probe_entries = []
-    for ci, cen in enumerate(centroids):
-        arr = F.array(*[F.lit(float(x)) for x in cen])
-        probe_entries.append(
-            F.struct(
-                cosine_expr(F.col(vec_col), arr).alias("score"),
-                # Same -id tiebreak as ivf_assign: descending walk of
-                # the sorted structs probes tied cells lowest-id-first,
-                # matching the Arrow path's stable argsort.
-                F.lit(-ci).alias("neg_id"),
-            )
-        )
-    ranked = F.slice(
-        F.reverse(F.array_sort(F.array(*probe_entries))), 1, n_probes
-    )
-    # Malformed query vectors explode a NULL array → zero probe rows,
-    # exactly like the Arrow path's NULL top-n list.
-    gated = F.when(
-        _well_formed(F.col(vec_col), len(centroids[0])), ranked
+    ``n_probes`` nearest centroids in rank order, by the same
+    :func:`_ranked_centroids` kernel, tiers and contract as
+    :func:`ivf_assign`. A malformed query vector ranks NULL and
+    explodes to zero probe rows."""
+    ranked = _ranked_centroids(
+        queries.sparkSession, F.col(vec_col), centroids, n_probes
     )
     return queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        F.explode(gated).alias("p"),
-    ).select(
-        "query_id", "qv", (-F.col("p.neg_id")).alias("centroid_id")
+        F.explode(ranked).alias("centroid_id"),
     )
 
 
@@ -778,44 +544,33 @@ def cosine_topk_ivf(
 def _cell_score_col(spark, centroids: list[list[float]], vec: Column, cid: Column) -> Column:
     """Cosine of each row's vector against ITS ASSIGNED centroid — the
     per-row assignment-quality signal :func:`ivf_index_health` profiles.
-    Same two physical strategies as assignment: ≤64 centroids index a
-    nested array literal (codegen projection); beyond that a pandas UDF
-    gathers rows of the cached normalized-centroid broadcast — plan
-    size O(1) in centroid count either way, map-only, no shuffle."""
-    vecd = vec.cast("array<double>")
-    if len(centroids) <= _IVF_LITERAL_MAX:
-        # One parsed SQL literal instead of k×d F.lit/F.array py4j
-        # round trips (~1.2 s of driver time per health call at 8×64,
-        # measured r16). repr() round-trips the exact double and the
-        # string→double cast is correctly rounded, so the constant-
-        # folded literal is bit-identical to the F.lit build.
-        cent_arr = F.expr(
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(_sql_double(x) for x in cen) + ")"
-                for cen in centroids
-            )
-            + ")"
-        )
-        return cosine_expr(vecd, F.element_at(cent_arr, cid + F.lit(1)))
+    One Arrow gather-and-dot over the cached centroid payload at any
+    centroid count (map-only, no shuffle, plan size O(1)), in
+    ``cosine_expr``'s left-fold arithmetic. NULL for a NULL or ragged
+    vector and, as ``try_divide``, for members of a zero-norm
+    centroid."""
     bc = _centroid_broadcast(spark, centroids)
+    dim = len(centroids[0])
 
     @F.pandas_udf("double")
     def cell_score(vs: pd.Series, cids: pd.Series) -> pd.Series:
-        import numpy as np
+        C, nbs, _ = bc.value
+        out = np.full(len(vs), np.nan)
+        idx = [
+            i for i, (v, c) in enumerate(zip(vs, cids))
+            if v is not None and not pd.isna(c) and len(v) == dim
+        ]
+        if idx:
+            X = np.vstack([np.asarray(vs.iloc[i], dtype=np.float64) for i in idx])
+            cid = cids.iloc[idx].to_numpy().astype(np.int64)
+            with np.errstate(all="ignore"):
+                dot = _lfold(x * c for x, c in zip(X.T, C[cid].T))
+                denom = np.sqrt(_lfold(x * x for x in X.T)) * nbs[cid]
+                # NaN leaves through Arrow as NULL
+                out[idx] = np.where(denom == 0.0, np.nan, dot / denom)
+        return pd.Series(out)
 
-        Cn = bc.value
-        out = [None] * len(vs)
-        for i, (v, c) in enumerate(zip(vs, cids)):
-            if v is None or c is None or len(v) != Cn.shape[1]:
-                continue
-            x = np.asarray(v, dtype=np.float64)
-            n = np.linalg.norm(x)
-            if n > 0 and np.isfinite(n):
-                out[i] = float((x / n) @ Cn[int(c)])
-        return pd.Series(out, dtype="float64")
-
-    return cell_score(vecd, cid)
+    return cell_score(vec.cast("array<double>"), cid)
 
 
 def _cell_stats(spark, index: DataFrame, centroids: list[list[float]]) -> DataFrame:
@@ -1020,8 +775,6 @@ def build_ivf_index(
     externally trained models.
 
     Returns the trained centroids (also what the sidecar stores)."""
-    import json
-
     from petk_spark.sources import swap
 
     if centroids is None:
@@ -1032,32 +785,44 @@ def build_ivf_index(
     lock_tok = swap.acquire_lock(spark, path)
     try:
         # Complete any crashed fold so the stale-generation listing
-        # below sees a consistent index.
+        # sees a consistent index.
         swap.recover_pending_swap(spark, path)
-        jvm = spark._jvm
-        hp = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-        gens = (
-            swap.list_children(spark, path, "ingest=")
-            if fs.exists(hp)
-            else []
-        )
-        tmp = swap.clear_tmp(spark, path)
-        _write_ivf_generation(
-            corpus, centroids, path, "base", id_col, vec_col, out_dir=tmp
-        )
-        swap.committed_swap(
-            spark, path, sorted(set(gens) | {"ingest=base"}), "ingest=base"
-        )
-        spark.createDataFrame(
-            [(json.dumps(centroids),)], "v string"
-        ).coalesce(1).write.mode("overwrite").text(f"{path}/_ivf_centroids")
-        # Snapshot the per-cell assignment profile of the fresh build —
-        # the reference point ivf_index_health measures drift against.
-        write_ivf_health_base(spark, path)
+        _replace_ivf_base(spark, path, corpus, centroids, id_col, vec_col)
     finally:
         swap.release_lock(spark, path, lock_tok)
     return centroids
+
+
+def _replace_ivf_base(
+    spark, path, corpus, centroids, id_col, vec_col, keep=()
+) -> None:
+    """Replace the index at ``path`` with ``corpus`` assigned by
+    ``centroids`` — the shared tail of :func:`build_ivf_index` and
+    :func:`retrain_ivf_index`, run under the caller's fold lock after
+    recovery: stage the new base DISTRIBUTED into the swap temp
+    directory, one ``committed_swap`` that purges every ``ingest=``
+    generation not in ``keep`` and promotes the base, then rewrite the
+    centroid sidecar and snapshot the fresh per-cell profile as the
+    health baseline :func:`ivf_index_health` measures drift against."""
+    import json
+
+    from petk_spark.sources import swap
+
+    gens = [
+        g for g in swap.list_children(spark, path, "ingest=")
+        if g not in keep
+    ]
+    tmp = swap.clear_tmp(spark, path)
+    _write_ivf_generation(
+        corpus, centroids, path, "base", id_col, vec_col, out_dir=tmp
+    )
+    swap.committed_swap(
+        spark, path, sorted(set(gens) | {"ingest=base"}), "ingest=base"
+    )
+    spark.createDataFrame(
+        [(json.dumps(centroids),)], "v string"
+    ).coalesce(1).write.mode("overwrite").text(f"{path}/_ivf_centroids")
+    write_ivf_health_base(spark, path)
 
 
 def _write_ivf_generation(
@@ -1136,21 +901,13 @@ def append_to_ivf_index(
         swap.recover_pending_swap(spark, path)
         centroids = load_ivf_centroids(spark, path)
         if generation is None:
-            jvm = spark._jvm
-            hp = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-            existing = [
-                st.getPath().getName()
-                for st in fs.listStatus(hp)
-                if st.getPath().getName().startswith("ingest=batch-")
-            ]
             # A caller may pin non-numeric generations (e.g.
             # batch-hotfix); they must not break later auto-numbered
             # appends (round-7 advisory) — only decimal suffixes
             # participate in numbering.
             nums = [
                 int(s)
-                for n in existing
+                for n in swap.list_children(spark, path, "ingest=batch-")
                 if (s := n.split("batch-", 1)[1]).isdigit()
             ]
             generation = f"batch-{max(nums) + 1 if nums else 0}"
@@ -1251,8 +1008,6 @@ def retrain_ivf_index(
     :func:`ivf_index_health` measures drift against the RETRAINED
     profile. Readers see the complete old index or the complete new
     one; concurrent writers get ``FoldInProgressError``."""
-    import json
-
     from petk_spark.operators.clustering import kmeans_fit
     from petk_spark.sources import swap
 
@@ -1279,21 +1034,9 @@ def retrain_ivf_index(
                 corpus, k, id_col="neighbor_id", vec_col="cv",
                 iterations=iterations, round_decimals=round_decimals,
             )
-        gens = [
-            g for g in swap.list_children(spark, path, "ingest=")
-            if g not in excl
-        ]
-        tmp = swap.clear_tmp(spark, path)
-        _write_ivf_generation(
-            corpus, cents, path, "base", "neighbor_id", "cv", out_dir=tmp
+        _replace_ivf_base(
+            spark, path, corpus, cents, "neighbor_id", "cv", keep=excl
         )
-        swap.committed_swap(
-            spark, path, sorted(set(gens) | {"ingest=base"}), "ingest=base"
-        )
-        spark.createDataFrame(
-            [(json.dumps(cents),)], "v string"
-        ).coalesce(1).write.mode("overwrite").text(f"{path}/_ivf_centroids")
-        write_ivf_health_base(spark, path)
     finally:
         swap.release_lock(spark, path, lock_tok)
     return cents, info

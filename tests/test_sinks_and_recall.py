@@ -230,63 +230,89 @@ def _pseudo_vecs(n: int, dim: int, seed: int = 7):
     return out
 
 
-def test_ivf_assign_arrow_equals_literal(spark):
-    """The broadcast-numpy Arrow assignment path (n_centroids >
-    _IVF_LITERAL_MAX) is row-identical to the plan-literal path on
-    well-formed vectors, and renders malformed rows (NULL / ragged /
-    zero-norm) as NULL assignments without crashing."""
+def _literal_rank(vec_col: str, cents, n: int):
+    """Reference ranking for the IVF kernels: the plan-literal
+    expression the library once built — one ``cosine_expr`` struct
+    ``(score, -id)`` per centroid, ``reverse(array_sort(...))`` so the
+    descending walk puts a NaN score first, a NULL score last and exact
+    ties on the LOWER id, gated by ``_well_formed`` (NULL for a
+    malformed vector)."""
+    from petk_spark.operators.dedup import cosine_expr
+    from petk_spark.operators.similarity import _well_formed
+
+    entries = [
+        F.struct(
+            cosine_expr(
+                F.col(vec_col), F.array(*[F.lit(float(x)) for x in cen])
+            ).alias("score"),
+            F.lit(-ci).alias("neg_id"),
+        )
+        for ci, cen in enumerate(cents)
+    ]
+    ranked = F.slice(F.reverse(F.array_sort(F.array(*entries))), 1, n)
+    return F.when(
+        _well_formed(F.col(vec_col), len(cents[0])),
+        F.transform(ranked, lambda e: -e["neg_id"]),
+    )
+
+
+def _literal_assign(df, cents) -> dict:
+    """{vec_id: centroid_id} under the reference ranking."""
+    return {
+        r["id"]: r["c"]
+        for r in df.select(
+            F.col("vec_id").alias("id"),
+            F.element_at(_literal_rank("embedding", cents, 1), 1).alias("c"),
+        ).collect()
+    }
+
+
+def _assign(df, cents) -> dict:
     from petk_spark.operators.similarity import ivf_assign
 
+    return {
+        r["id"]: r["centroid_id"] for r in ivf_assign(df, cents).collect()
+    }
+
+
+def test_ivf_assign_arrow_equals_literal(spark):
+    """The matmul tier (n_centroids > _IVF_FOLD_MAX) is row-identical
+    to the plan-literal reference on well-formed vectors, and renders
+    malformed rows (NULL / ragged / zero-norm) as NULL assignments
+    without crashing."""
     vecs = _pseudo_vecs(300, 8)
     cents = [v for _, v in _pseudo_vecs(70, 8, seed=99)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
 
-    lit = {
-        r["id"]: r["centroid_id"]
-        for r in ivf_assign(df, cents, method="literal").collect()
-    }
-    arrow = {
-        r["id"]: r["centroid_id"]
-        for r in ivf_assign(df, cents, method="arrow").collect()
-    }
+    lit = _literal_assign(df, cents)
+    arrow = _assign(df, cents)
     assert lit == arrow and len(lit) == 300
 
     bad = spark.createDataFrame(
         [(0, None), (1, [1.0, 2.0]), (2, [0.0] * 8), (3, [1.0] * 8)],
         "vec_id long, embedding array<double>",
     )
-    got = {
-        r["id"]: r["centroid_id"]
-        for r in ivf_assign(bad, cents, method="arrow").collect()
-    }
+    got = _assign(bad, cents)
     assert got[0] is None and got[1] is None and got[2] is None
     assert got[3] is not None
 
 
 def test_ivf_assign_fold_equals_literal(spark):
-    """The fold-exact Arrow kernel (the small-k DEFAULT since the
-    round-16 optimization) is row-identical to the plan-literal
-    expression path — including exact ties (duplicate centroids →
-    lower id), zero-norm centroids (NULL score slots), malformed
-    vectors (NULL / ragged / zero-norm / NaN / Inf), and NULL list
-    elements. The kernel replays the literal path's float64 left-fold
-    arithmetic, so this holds bitwise, not just approximately."""
-    from petk_spark.operators.similarity import ivf_assign
-
+    """The fold tier (the default up to _IVF_FOLD_MAX centroids) is
+    row-identical to the plan-literal reference — including exact ties
+    (duplicate centroids → lower id), zero-norm centroids (NULL score
+    slots), malformed vectors (NULL / ragged / zero-norm / NaN / Inf),
+    and NULL list elements. The kernel replays the reference's float64
+    left-fold arithmetic, so this holds bitwise, not just
+    approximately."""
     vecs = _pseudo_vecs(300, 8)
     cents = [v for _, v in _pseudo_vecs(5, 8, seed=99)]
     cents.append(list(cents[0]))          # exact duplicate → tie
     cents.append([0.0] * 8)               # zero-norm centroid
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
 
-    lit = {
-        r["id"]: r["centroid_id"]
-        for r in ivf_assign(df, cents, method="literal").collect()
-    }
-    fold = {
-        r["id"]: r["centroid_id"]
-        for r in ivf_assign(df, cents, method="fold").collect()
-    }
+    lit = _literal_assign(df, cents)
+    fold = _assign(df, cents)
     assert lit == fold and len(lit) == 300
 
     bad = spark.createDataFrame(
@@ -302,36 +328,22 @@ def test_ivf_assign_fold_equals_literal(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    lit_b = {
-        r["id"]: r["centroid_id"]
-        for r in ivf_assign(bad, cents, method="literal").collect()
-    }
-    fold_b = {
-        r["id"]: r["centroid_id"]
-        for r in ivf_assign(bad, cents, method="fold").collect()
-    }
+    lit_b = _literal_assign(bad, cents)
+    fold_b = _assign(bad, cents)
     assert lit_b == fold_b, (lit_b, fold_b)
     assert fold_b[0] is None and fold_b[1] is None and fold_b[2] is None
     assert fold_b[3] is not None
 
-    # default dispatch at small k routes through the fold kernel
-    dflt = {
-        r["id"]: r["centroid_id"]
-        for r in ivf_assign(df, cents).collect()
-    }
-    assert dflt == lit
-
 
 def test_probe_fold_equals_literal(spark):
-    """The fold-exact Arrow TOP-N kernel (the small-k probe DEFAULT
-    since round 16) is row-identical — ordered probe list per query —
-    to the plan-literal ``slice(reverse(array_sort(...)))`` path,
-    including exact ties (duplicate centroids → lower id first),
-    zero-norm centroids (NULL score slots rank last), NaN-scoring
+    """The fold tier's TOP-N ranking (the small-k probe default) is
+    row-identical — ordered probe list per query — to the plan-literal
+    reference, including exact ties (duplicate centroids → lower id
+    first), zero-norm centroids (NULL score slots rank last), NaN-scoring
     centroids (rank FIRST, Spark's NaN-above-everything ordering) and
     malformed query vectors (zero probe rows). The kernel replays the
-    literal path's float64 left-fold arithmetic, so cell membership of
-    every downstream IVF query is strategy-invariant."""
+    reference's float64 left-fold arithmetic, so cell membership of
+    every downstream IVF query matches the oracle's replay."""
     from petk_spark.operators.similarity import _probe_frame
 
     vecs = _pseudo_vecs(120, 8)
@@ -349,21 +361,20 @@ def test_probe_fold_equals_literal(spark):
         "vec_id long, embedding array<double>",
     )
 
-    def ordered(method):
-        rows = _probe_frame(
-            df, cents, 3, "vec_id", "embedding", method=method
+    lit = {
+        r["query_id"]: r["p"]
+        for r in df.select(
+            F.col("vec_id").alias("query_id"),
+            _literal_rank("embedding", cents, 3).alias("p"),
         ).collect()
-        out: dict = {}
-        for r in rows:  # explode preserves array order per query row
-            out.setdefault(r["query_id"], []).append(r["centroid_id"])
-        return out
-
-    lit = ordered("literal")
-    fold = ordered("fold")
+        if r["p"] is not None
+    }
+    fold: dict = {}
+    for r in _probe_frame(df, cents, 3, "vec_id", "embedding").collect():
+        # explode preserves array order per query row
+        fold.setdefault(r["query_id"], []).append(r["centroid_id"])
     assert lit == fold and len(lit) == 120
     assert all(len(v) == 3 for v in fold.values())
-    # default dispatch at small k routes through the fold kernel
-    assert ordered(None) == lit
 
 
 def test_lsh_signature_text_equals_column(spark):
@@ -573,16 +584,18 @@ def test_ivf_arrow_path_recall_floor(spark):
     assert r32 >= max(0.75, r16 + 0.1), f"{r16:.3f} -> {r32:.3f}"
 
 
-def test_ivf_paths_share_one_contract_on_malformed_and_ties(spark):
-    """Round-7 advisory: the literal and Arrow assignment paths share
-    ONE contract — malformed vectors (NULL / ragged / zero-norm / NaN /
-    ±Inf) get NULL assignments and exact score ties break toward the
-    LOWER centroid id — so the same inputs bucket identically on either
-    side of the 64-centroid threshold, no carve-outs. The Inf rows pin
-    round-7 verdict #4: sumsq of an Inf vector is +Inf (> 0, not NaN),
-    which used to slip past the well-formedness gate into a
-    garbage-score path the two strategies could bucket differently."""
-    from petk_spark.operators.similarity import _probe_frame, ivf_assign
+def test_ivf_paths_share_one_contract_on_malformed_and_ties(spark, monkeypatch):
+    """Round-7 advisory: the fold and matmul tiers share ONE contract
+    with the plan-literal reference — malformed vectors (NULL / ragged /
+    zero-norm / NaN / ±Inf) get NULL assignments and exact score ties
+    break toward the LOWER centroid id — so the same inputs bucket
+    identically on either side of the 64-centroid gate, no carve-outs.
+    The Inf rows pin round-7 verdict #4: sumsq of an Inf vector is +Inf
+    (> 0, not NaN), which used to slip past the well-formedness gate
+    into a garbage-score path the strategies could bucket differently.
+    The gate set to 0 forces the matmul tier at 5 centroids."""
+    from petk_spark.operators import similarity as sim
+    from petk_spark.operators.similarity import _probe_frame
 
     cents = [v for _, v in _pseudo_vecs(5, 8, seed=99)]
     inf = float("inf")
@@ -598,44 +611,36 @@ def test_ivf_paths_share_one_contract_on_malformed_and_ties(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    lit = {
-        r["id"]: r["centroid_id"]
-        for r in ivf_assign(bad, cents, method="literal").collect()
-    }
-    arrow = {
-        r["id"]: r["centroid_id"]
-        for r in ivf_assign(bad, cents, method="arrow").collect()
-    }
-    assert lit == arrow
+    lit = _literal_assign(bad, cents)
     assert lit[0] is None and lit[1] is None
     assert lit[2] is None and lit[4] is None
     assert lit[5] is None and lit[6] is None
     assert lit[3] is not None
 
-    # exact tie (duplicated centroid): both paths pick the LOWER id
     dup = [cents[0], cents[0], cents[1]]
     one = spark.createDataFrame(
         [(0, cents[0])], "vec_id long, embedding array<double>"
     )
-    for method in ("literal", "arrow"):
-        got = ivf_assign(one, dup, method=method).collect()
-        assert got[0]["centroid_id"] == 0, method
-
-    # probe frame: a malformed query explodes to ZERO probe rows (like
-    # the Arrow path's NULL top-n), and tied cells probe lowest-id-first
     qbad = spark.createDataFrame(
         [(7, [1.0, 2.0])], "vec_id long, embedding array<double>"
     )
-    assert _probe_frame(qbad, cents, 2, "vec_id", "embedding").count() == 0
     qinf = spark.createDataFrame(
         [(8, [inf] * 8)], "vec_id long, embedding array<double>"
     )
-    assert _probe_frame(qinf, cents, 2, "vec_id", "embedding").count() == 0
-    probes = [
-        r["centroid_id"]
-        for r in _probe_frame(one, dup, 2, "vec_id", "embedding").collect()
-    ]
-    assert probes == [0, 1]
+    for tier, gate in (("fold", sim._IVF_FOLD_MAX), ("matmul", 0)):
+        monkeypatch.setattr(sim, "_IVF_FOLD_MAX", gate)
+        assert _assign(bad, cents) == lit, tier
+        # exact tie (duplicated centroid): the LOWER id wins
+        assert _assign(one, dup) == {0: 0}, tier
+        # probe frame: a malformed query explodes to ZERO probe rows,
+        # and tied cells probe lowest-id-first
+        assert _probe_frame(qbad, cents, 2, "vec_id", "embedding").count() == 0
+        assert _probe_frame(qinf, cents, 2, "vec_id", "embedding").count() == 0
+        probes = [
+            r["centroid_id"]
+            for r in _probe_frame(one, dup, 2, "vec_id", "embedding").collect()
+        ]
+        assert probes == [0, 1], tier
 
 
 def test_ivf_append_tolerates_pinned_non_numeric_generation(spark, tmp_path):
@@ -693,6 +698,74 @@ def test_centroid_broadcast_cached_and_bounded(spark):
     # the original entry was evicted (oldest-first), its value re-usable
     b3 = sim._centroid_broadcast(spark, cents)
     assert b3 is not b1
+
+
+def test_one_broadcast_per_centroid_list(spark, tmp_path, monkeypatch):
+    """Assignment, probing and the health cell score all read ONE
+    cached centroid payload: repeated calls over one centroid list
+    broadcast it exactly once."""
+    from pyspark import SparkContext
+
+    from petk_spark.operators import similarity as sim
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") < 10)
+    idx = str(tmp_path / "ivf")
+    cents = sim.build_ivf_index(emb, idx, n_centroids=8)
+    assert len(cents) == 8
+
+    sim._CENTROID_BC_CACHE.clear()
+    calls = []
+    real = SparkContext.broadcast
+
+    def counting(self, value):
+        calls.append(1)
+        return real(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counting)
+    for _ in range(3):
+        sim.ivf_assign(emb, cents).collect()
+    for _ in range(2):
+        sim._probe_frame(queries, cents, 2, "vec_id", "embedding").collect()
+    sim.ivf_index_health(spark, idx).collect()
+    assert len(calls) == 1, len(calls)
+
+
+@pytest.mark.parametrize("n_cents", [8, 70])
+def test_cell_score_matches_numpy_cosine(spark, n_cents):
+    """The health cell score (one Arrow gather-and-dot on both sides of
+    the 64-centroid gate) equals numpy cosine against the row's given
+    centroid within 1e-12, and members of a zero-norm centroid score
+    NULL (the try_divide contract)."""
+    import numpy as np
+
+    from petk_spark.operators.similarity import _cell_score_col
+
+    cents = [v for _, v in _pseudo_vecs(n_cents, 8, seed=99)]
+    cents[-1] = [0.0] * 8                 # zero-norm centroid
+    rows = [
+        (i, v, i % n_cents) for i, v in _pseudo_vecs(200, 8)
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, cv array<double>, centroid_id int"
+    )
+    got = {
+        r["vec_id"]: r["s"]
+        for r in df.select(
+            "vec_id",
+            _cell_score_col(
+                spark, cents, F.col("cv"), F.col("centroid_id")
+            ).alias("s"),
+        ).collect()
+    }
+    C = np.asarray(cents)
+    for i, v, c in rows:
+        if c == n_cents - 1:
+            assert got[i] is None, (i, got[i])
+            continue
+        x = np.asarray(v)
+        want = float(x @ C[c] / (np.linalg.norm(x) * np.linalg.norm(C[c])))
+        assert abs(got[i] - want) < 1e-12, (i, got[i], want)
 
 
 def test_ivf_index_health_flags_drift(spark, tmp_path):
