@@ -379,7 +379,6 @@ def _exact_value_stats(
     df: DataFrame,
     cols,
     ltypes,
-    rank_strategy: str = "auto",
     mad_cols=(),
     probs=None,
     moments: bool = True,
@@ -407,14 +406,12 @@ def _exact_value_stats(
     aggregates picking the two values bracketing each quantile rank →
     driver-free linear interpolation in a final select.
 
-    Rank strategy (``rank_strategy``): ``windowed`` is a single
-    running-count window per column — fewest stages, but one reducer
-    holds a whole column's distinct values; ``bucketed`` is the
-    distributed two-stage prefix sum below; ``auto`` (default) gates on
-    source file size (``_WINDOWED_MAX_BYTES``): a ≤1 GiB source bounds
-    the windowed reducer harmlessly, so small profiles keep the low
-    stage count while big (or unknown-size) sources always take the
-    scale-safe path.
+    Rank strategy, picked by source file size (``_WINDOWED_MAX_BYTES``):
+    a source under 256 MiB takes a single running-count window per
+    column — fewest stages, and its size bounds the one reducer that
+    holds a whole column's distinct values; a bigger (or unknown-size)
+    source always takes the scale-safe distributed two-stage prefix
+    sum below.
 
     Two-stage prefix sum (no single-reducer window): each distinct
     value is assigned an ORDERED bucket — ``width_bucket`` over a
@@ -532,13 +529,8 @@ def _exact_value_stats(
     rest_cols = [c for c in need if c not in chain_set]
     need_wsum = bool(mom_set) or full_stats
 
-    if rank_strategy == "auto":
-        nbytes = source_bytes(df)
-        rank_strategy = (
-            "windowed"
-            if nbytes is not None and nbytes < _WINDOWED_MAX_BYTES
-            else "bucketed"
-        )
+    nbytes = source_bytes(df)
+    windowed = nbytes is not None and nbytes < _WINDOWED_MAX_BYTES
 
     # No persist() anywhere (round 16): the chain and rest consumers
     # each build their OWN column-pruned histogram (disjoint source
@@ -555,7 +547,7 @@ def _exact_value_stats(
     frames = []
     if chain_cols:
         hist = _hist_of(chain_cols)
-        if rank_strategy == "windowed":
+        if windowed:
             # Small-source fast path: one running-count window per
             # column. Provably safe here (the gate bounds the reducer's
             # worst case by the source size). ntot/wsum ride the SAME
@@ -1006,35 +998,24 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     exact/mad subtrees via ReuseExchange (one plan), so the shuffle is
     written once.
 
-    The split estimate uses file metadata only (``inputFiles`` + stat):
+    The split estimate uses file metadata only (:func:`source_bytes`):
     an ``df.rdd.getNumPartitions()`` probe forces full physical planning
-    through py4j — measured ~2 s of driver time per describe call."""
-    import os
-    from urllib.parse import unquote, urlparse
-
+    through py4j — measured ~2 s of driver time per describe call. A
+    derived frame or a remote source (size unknown without an FS
+    client) comes back unchanged: its parallelism is set by its own
+    shuffles or by a cluster-scale scan's many splits."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:
-        files = df.inputFiles()
-        if not files:
-            return df  # derived frame — parallelism set by its shuffles
-        if len(files) * 2 > target:
+        if len(df.inputFiles()) * 2 > target:
             return df  # enough file splits regardless of sizes
+        total = source_bytes(df)
+        if total is None:
+            return df
         max_pb = _parse_byte_string(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
         )
-        total = 0
-        for f in files:
-            u = urlparse(f)
-            if u.scheme not in ("", "file"):
-                # remote FS — sizes unknown without an FS client; pay the
-                # planning probe (negligible next to a cluster-scale scan)
-                splits = df.rdd.getNumPartitions()
-                break
-            total += os.stat(unquote(u.path)).st_size
-        else:
-            splits = max(1, -(-total // max_pb))
-        if splits * 2 <= target:
+        if max(1, -(-total // max_pb)) * 2 <= target:
             return df.repartition(target)
     except Exception:  # pragma: no cover - heuristic is advisory
         pass
@@ -1046,7 +1027,6 @@ def describe_frame(
     columns=None,
     exact: bool = True,
     include_mad: bool = True,
-    rank_strategy: str = "auto",
 ) -> DataFrame:
     """Lazy long-form statistical profile of ``df``.
 
@@ -1125,7 +1105,7 @@ def describe_frame(
         # n_infinite/n_zeros, bool mean, distinct/quantiles AND the
         # central moments (_g1/_g2, mad) — the one full data pass.
         value_stats = _exact_value_stats(
-            df, cols, ltypes, rank_strategy,
+            df, cols, ltypes,
             mad_cols=num_cols if include_mad else (),
             full_stats=True,
         )

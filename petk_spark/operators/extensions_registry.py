@@ -811,9 +811,9 @@ def _q_fingerprint_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
       unchanged semantics: pairs sharing ≥2 distinct rolling
       8-token-window fingerprints;
     * ``spans`` — F41 exact-substring span REMOVAL
-      (:func:`spans.remove_repeated_spans`, production Arrow path —
-      identical strings to the expression oracle, equivalence
-      unit-pinned) over the synthesized duplicated-span corpus:
+      (:func:`spans.remove_repeated_spans`, its Arrow kernel — the
+      oracle replays it in DuckDB with ``list_contains`` over the
+      covered ranges) over the synthesized duplicated-span corpus:
       (id, n_tokens, n_tokens_kept, md5(rebuilt text)) pins which
       tokens every duplicated window covered, doc by doc;
     * ``decon`` — F42 eval-set decontamination
@@ -1536,7 +1536,7 @@ btotals AS (SELECT id, count(*) AS n_paras FROM bps GROUP BY id)"""
 
 #: DuckDB mirror of the F40 line-dedup family: same synthesized
 #: dup-line corpus; the keep test is first-occurrence-by-normalized-
-#: form via list_position — proven ≡ the Spark fold by
+#: form via list_position — proven ≡ the Spark kernel by
 #: tests/test_pii_paragraphs.py::test_dedupe_lines_parity_with_duckdb.
 _LINE_DEDUP_CTE = r"""
 lsrc AS (
@@ -2111,8 +2111,7 @@ def _q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
       count aggregation, the (count DESC, token ASC) vocab cut, and
       the smoothing arithmetic;
     * ``lm_score`` — F46 SCORING: per-document bits-per-token from
-      the production Arrow path (bit-identical to the expression
-      fold by the left-fold contract; DuckDB replays with map() +
+      the Arrow kernel's left fold (DuckDB replays it with map() +
       list_reduce over the same document token order);
     * ``lm2`` / ``lm2_score`` (round 12, F53) — the BIGRAM LM with
       Laplace backoff over the vocab-mapped token stream (outside the

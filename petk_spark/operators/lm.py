@@ -13,16 +13,14 @@ dependency-free core of that recipe is a smoothed unigram model:
 * **score** — per document, bits-per-token = −(1/T)·Σ log2 p(tokenᵢ):
   low bits ≈ fluent/common text, high bits ≈ gibberish, boilerplate
   code, or wrong-language text. Scoring is ROW-LOCAL: the model rides
-  along as a broadcast (a one-row map via crossJoin on the expression
-  path, a plain Python dict closure on the Arrow path) — the 100 TB
-  corpus side is one scan, zero shuffles.
+  along as a plain Python dict in the Arrow kernel's closure — the
+  100 TB corpus side is one scan, zero shuffles.
 
 Cross-engine contract: the per-document sum is a LEFT FOLD in
-document token order on every path (Spark ``F.aggregate`` seeded 0.0,
-the Arrow kernel's sequential Python sum over the SAME JVM-computed
-logp values, DuckDB ``list_reduce(list_prepend(0.0, …))``), so the
-only engine-dependent quantity is ``log2`` itself (libm last-ulp),
-absorbed by the shared %.6e fmt contract.
+document token order (the Arrow kernel's sequential Python sum over
+the JVM-computed logp values, DuckDB ``list_reduce(list_prepend(0.0,
+…))``), so the only engine-dependent quantity is ``log2`` itself
+(libm last-ulp), absorbed by the shared %.6e fmt contract.
 """
 
 from __future__ import annotations
@@ -178,21 +176,36 @@ def train_unigram_lm(
     }
 
 
-def _score_arrow(
+def lm_bits_per_token(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    logp: dict,
+    lm: DataFrame,
     oov_logp: float,
+    *,
     keep_columns: bool = False,
     split_cjk: bool = False,
 ) -> DataFrame:
-    """Production scoring kernel: the vocab dict lives in the task
-    closure (one broadcast), each token is one hash probe, the sum is
-    the same left fold as the expression path. ``keep_columns``
-    appends (n_tokens, bits_per_token) to the FULL input row instead
-    of projecting (id, …) — the pipeline-composition shape, scoring
-    in-band with no join-back against the upstream lineage."""
+    """Score every document against a trained unigram model:
+    ``(id, n_tokens, bits_per_token)`` where bits_per_token =
+    −mean log2 p(token) (NULL for NULL/empty texts — no tokens, no
+    estimate). Filter or bucket on the score downstream (CCNet keeps
+    the head/middle buckets). ``keep_columns=True`` appends the two
+    score columns to the FULL input row instead — in-band scoring for
+    pipeline composition, no join-back that would re-execute the
+    upstream lineage. Both options are keyword-only.
+
+    One Arrow kernel: the model frame is collected (≤ vocab_size rows
+    — the documented small-artifact broadcast, like the IVF centroid
+    sidecar) into a Python dict in the task closure, each token is one
+    hash probe, and the sum is a left fold in document order over the
+    JVM-computed logp values — O(T) per doc, one scan, zero shuffles.
+    DuckDB replays it with ``map()`` + ``list_reduce`` for the oracle
+    twin and the parity test."""
+    logp = {
+        r["token"]: r["logp"] for r in lm.select("token", "logp").collect()
+    }
+    oov_logp = float(oov_logp)
     tokenize = _py_splitter(split_cjk)
 
     def score_lists(texts):
@@ -246,82 +259,6 @@ def _score_arrow(
             )
 
     return df.select(id_col, text_col).mapInPandas(kern, schema)
-
-
-def lm_bits_per_token(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    lm: DataFrame,
-    oov_logp: float,
-    method: str | None = None,
-    keep_columns: bool = False,
-    split_cjk: bool = False,
-) -> DataFrame:
-    """Score every document against a trained unigram model:
-    ``(id, n_tokens, bits_per_token)`` where bits_per_token =
-    −mean log2 p(token) (NULL for NULL/empty texts — no tokens, no
-    estimate). Filter or bucket on the score downstream (CCNet keeps
-    the head/middle buckets). ``keep_columns=True`` (arrow path only)
-    appends the two score columns to the full input row instead —
-    in-band scoring for pipeline composition, no join-back that would
-    re-execute the upstream lineage.
-
-    Two physical strategies (``method``; None → "arrow"):
-
-    * **"arrow"** — the model collapses to a Python dict in the task
-      closure; O(T) probes per doc, one scan, zero shuffles.
-    * **"expr"** — the model becomes a one-row MAP column cross-joined
-      as a broadcast, and the sum is an ``F.aggregate`` left fold —
-      plain SQL semantics, which is why it is the ORACLE contract
-      (DuckDB replays it with ``map()`` + ``list_reduce``).
-
-    Both paths sum the SAME JVM-computed logp values in the SAME
-    document order, so they agree bit-for-bit; equivalence is
-    unit-pinned. The model frame is collected either way (≤ vocab_size
-    rows — the documented small-artifact broadcast, like the IVF
-    centroid sidecar)."""
-    if method not in (None, "arrow", "expr"):
-        raise ValueError(
-            f"method must be None, 'arrow' or 'expr', got {method!r}"
-        )
-    if keep_columns and method == "expr":
-        raise ValueError("keep_columns is an arrow-path option")
-    if method != "expr":
-        table = {
-            r["token"]: r["logp"] for r in lm.select("token", "logp").collect()
-        }
-        return _score_arrow(
-            df, id_col, text_col, table, float(oov_logp), keep_columns,
-            split_cjk,
-        )
-    spark = df.sparkSession
-    mp = lm.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("token", "logp"))
-        ).alias("__lm")
-    )
-    toks = _tokens(text_col, split_cjk)
-    acc = F.aggregate(
-        toks,
-        F.lit(0.0),
-        lambda a, t: a
-        + F.coalesce(
-            F.element_at(F.col("__lm"), t), F.lit(float(oov_logp))
-        ),
-    )
-    n_toks = F.size(toks)
-    return (
-        df.crossJoin(F.broadcast(mp))
-        .select(
-            F.col(id_col).alias("id"),
-            F.when(F.col(text_col).isNotNull(), n_toks)
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("n_tokens"),
-            F.when(n_toks > 0, -acc / n_toks).alias("bits_per_token"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

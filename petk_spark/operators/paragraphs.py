@@ -40,22 +40,6 @@ from pyspark.sql import functions as F
 PARAGRAPH_SEP = r"(?:\r?\n)[ \t]*(?:\r?\n)+"
 
 
-def _regex_literal(s: str) -> str:
-    """Quote ``s`` so a regex engine treats it as a LITERAL string.
-    ``F.split`` interprets its separator as a Java regex while
-    ``array_join`` re-assembles literally — an unquoted caller
-    separator containing metacharacters (``|``, ``.``, …) would
-    silently mis-split and rebuild corrupted text (round-8 advisory).
-    Per-metacharacter escaping (not ``\\Q…\\E``) because RE2 — the
-    DuckDB side of the cross-engine contract — handles escaped
-    punctuation identically to Java but has no ``\\E``-embedding rule;
-    non-metacharacters (including control characters like ``\\n``)
-    already match themselves in both engines."""
-    return "".join(
-        "\\" + ch if ch in "\\.^$|?*+()[]{}" else ch for ch in s
-    )
-
-
 def _normalized(para: Column) -> Column:
     """Canonical form a paragraph is fingerprinted under: lowercased,
     inner whitespace collapsed, trimmed — the same normalization the
@@ -194,16 +178,32 @@ def _py_normalized(line: str) -> str:
     return _PY_WS.sub(" ", line.lower()).strip(" ")
 
 
-def _dedupe_lines_arrow(
-    df: DataFrame, id_col: str, text_col: str, sep: str
+def dedupe_lines(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    sep: str = "\n",
 ) -> DataFrame:
-    """O(L)-per-document production kernel: Arrow-batched
-    ``mapInPandas`` with a per-document seen-SET of normalized forms —
-    identical first-occurrence / blank-exempt semantics to the
-    expression fold (pair-equivalence unit + hypothesis-tested), but
-    each line costs one hash probe instead of a scan of every earlier
-    kept line. A 100k-line scraped log is ~10⁵ probes, not ~10¹⁰
-    string compares in one task (round-8 verdict #1)."""
+    """WITHIN-document line dedup: keep the FIRST occurrence of each
+    normalized line, drop later repeats — the removal counterpart of
+    the F34 repetition *signals* (a chat scrape's repeated menu rows,
+    a log's repeated status line). Returns ``(id, text, n_lines,
+    n_lines_kept)``; NULL text stays NULL with zero counts.
+    Whitespace-only lines are exempt (kept verbatim): they are
+    layout, not content, and folding every blank separator onto its
+    first occurrence would destroy paragraph structure. ``sep`` is a
+    LITERAL separator on both the split and the rejoin.
+
+    One Arrow-batched ``mapInPandas`` kernel with a per-document seen
+    SET of normalized forms: each line costs one hash probe instead of
+    a scan of every earlier kept line, so the pathological corpora
+    this operator exists for (a 100k-line scraped table or log dump)
+    cost ~10⁵ set probes per doc, not ~10¹⁰ string compares in one
+    task (round-8 verdict #1). Row-local: zero shuffles, zero joins,
+    embarrassingly parallel scan work at 100 TB. DuckDB replays it
+    with ``list_position`` for the oracle twin and the parity test."""
+    if not sep:
+        raise ValueError("sep must be a non-empty string")
     id_type = df.schema[id_col].dataType.simpleString()
     schema = (
         f"id {id_type}, text string, n_lines long, n_lines_kept long"
@@ -225,10 +225,9 @@ def _dedupe_lines_arrow(
                 for line in lines:
                     norm = _py_normalized(line)
                     # blank-exempt lines are KEPT but still enter the
-                    # seen set — the fold's accumulator holds them too,
-                    # so a later tab-only line (non-blank under the
-                    # space-only trim, normalized form "") folds onto
-                    # an earlier blank exactly as the expression does
+                    # seen set, so a later tab-only line (non-blank
+                    # under the space-only trim, normalized form "")
+                    # folds onto an earlier blank
                     if line.strip(" ") == "" or norm not in seen:
                         kept.append(line)
                         seen.add(norm)
@@ -245,87 +244,3 @@ def _dedupe_lines_arrow(
             )
 
     return df.select(id_col, text_col).mapInPandas(kern, schema)
-
-
-def dedupe_lines(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    sep: str = "\n",
-    method: str | None = None,
-) -> DataFrame:
-    """WITHIN-document line dedup: keep the FIRST occurrence of each
-    normalized line, drop later repeats — the removal counterpart of
-    the F34 repetition *signals* (a chat scrape's repeated menu rows,
-    a log's repeated status line). Returns ``(id, text, n_lines,
-    n_lines_kept)``; NULL text stays NULL with zero counts.
-    Whitespace-only lines are exempt (kept verbatim): they are
-    layout, not content, and folding every blank separator onto its
-    first occurrence would destroy paragraph structure. ``sep`` is a
-    LITERAL separator on both the split and the rejoin (metacharacters
-    are quoted before the regex split).
-
-    Two physical strategies (``method``; None → "arrow", the
-    production default — the same split as F39's semantic dedup):
-
-    * **"arrow"** — Arrow-batched ``mapInPandas`` with a per-document
-      hash set: O(L) per document, so the pathological corpora this
-      operator exists for (a 100k-line scraped table or log dump)
-      cost ~10⁵ set probes per doc instead of ~10¹⁰ interpreted
-      string compares. Still row-local: zero shuffles, zero joins,
-      embarrassingly parallel scan work at 100 TB.
-    * **"expr"** — the JVM expression left fold (``F.aggregate`` +
-      ``F.exists`` over the accumulator): appends a line iff no
-      earlier KEPT line shares its normalized form. O(L²) worst case
-      per document and CodegenFallback-interpreted — fine on prose,
-      a straggler risk on degenerate line counts — but expressible in
-      plain SQL, which is why it is the ORACLE contract the DuckDB
-      twin replays with ``list_position``. (An index-based ``filter``
-      over ``array_position(norm, norm[i])`` would be the direct
-      encoding, but two outer-array references inside the lambda
-      mis-scope under subexpression elimination on multi-row batches
-      with differing line counts — the fold references only its own
-      accumulator.)
-
-    Same output either way (string equality, no float drift) —
-    equivalence is unit- and hypothesis-pinned."""
-    if method not in (None, "arrow", "expr"):
-        raise ValueError(
-            f"method must be None, 'arrow' or 'expr', got {method!r}"
-        )
-    if method != "expr":
-        return _dedupe_lines_arrow(df, id_col, text_col, sep)
-    lines = F.split(F.col(text_col), _regex_literal(sep))
-    entries = F.transform(
-        lines,
-        lambda x: F.struct(
-            x.alias("l"),
-            _normalized(x).alias("n"),
-            (F.trim(x) == "").alias("b"),
-        ),
-    )
-    kept_entries = F.aggregate(
-        entries,
-        F.array().cast(
-            "array<struct<l:string,n:string,b:boolean>>"
-        ),
-        lambda acc, e: F.when(
-            e["b"] | ~F.exists(acc, lambda a: a["n"] == e["n"]),
-            F.concat(acc, F.array(e)),
-        ).otherwise(acc),
-    )
-    kept = F.transform(kept_entries, lambda e: e["l"])
-    n_lines = F.size(lines)
-    n_kept = F.size(kept)
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.array_join(kept, sep).alias("text"),
-        F.when(F.col(text_col).isNotNull(), n_lines)
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("n_lines"),
-        F.when(F.col(text_col).isNotNull(), n_kept)
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("n_lines_kept"),
-    )

@@ -24,10 +24,31 @@ DuckDB evaluates, so ``q >= t`` can't flap on a boundary document
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from petk_spark.operators.dedup import dedup_first_by
 from petk_spark.operators.text import fingerprint, language_id, quality_score
+
+
+def _clean(
+    df: DataFrame, text: Column, keep: list, lang: str, min_quality: float
+) -> DataFrame:
+    """``keep`` + ``(lang_pred, quality, fingerprint)`` of ``text``,
+    filtered to ``lang`` at ``min_quality`` and deduped to one row per
+    fingerprint (lowest ``id`` wins) — the language → quality →
+    fingerprint-dedup stages :func:`corpus_clean` and
+    :func:`prepare_training_corpus` share."""
+    scored = df.select(
+        *keep,
+        language_id(text).alias("lang_pred"),
+        quality_score(text).alias("quality"),
+        fingerprint(text).alias("fingerprint"),
+    )
+    kept = scored.filter(
+        (F.col("lang_pred") == lang) & (F.col("quality") >= min_quality)
+    )
+    return dedup_first_by(kept, ["fingerprint"], "id")
 
 
 def prepare_training_corpus(
@@ -123,24 +144,11 @@ def prepare_training_corpus(
             scrubbed, "id", "text",
             window=span_window, min_docs=span_dedup_min_docs,
         ).select("id", "text")
-    # corpus_clean's stages inlined WITH the text column retained — a
+    # corpus_clean's stages WITH the text column retained — a
     # join-back against `scrubbed` would re-execute the whole scrub
     # chain a second time (lineage, not a materialized table).
-    t = F.col("text")
-    scored = scrubbed.select(
-        "id", "text",
-        language_id(t).alias("lang_pred"),
-        quality_score(t).alias("quality"),
-        fingerprint(t).alias("fingerprint"),
-    )
-    kept = scored.filter(
-        (F.col("lang_pred") == lang) & (F.col("quality") >= min_quality)
-    )
-    w = Window.partitionBy("fingerprint").orderBy("id")
-    out = (
-        kept.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    out = _clean(
+        scrubbed, F.col("text"), ["id", "text"], lang, min_quality
     )
     if lm is not None:
         from petk_spark.operators.lm import lm_bits_per_token
@@ -165,21 +173,8 @@ def corpus_clean(
     """Kept documents after the standard cleaning pass:
     ``(id, lang_pred, quality, fingerprint)`` with one row per distinct
     normalized text (lowest id wins — deterministic)."""
-    t = F.col(text_col)
-    scored = df.select(
-        F.col(id_col).alias("id"),
-        language_id(t).alias("lang_pred"),
-        quality_score(t).alias("quality"),
-        fingerprint(t).alias("fingerprint"),
-    )
-    kept = scored.filter(
-        (F.col("lang_pred") == lang) & (F.col("quality") >= min_quality)
-    )
-    w = Window.partitionBy("fingerprint").orderBy("id")
-    return (
-        kept.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    return _clean(
+        df, F.col(text_col), [F.col(id_col).alias("id")], lang, min_quality
     )
 
 

@@ -24,9 +24,9 @@ Scale shapes (both audited by tools/plan_audit.py):
   ``(id, i, fp)`` — 16-24 bytes per token, never the text — through
   one (id,fp)-dedup + one fp-groupBy (doc frequency), one fp join
   back (hot hits), one id-groupBy (hit starts per doc), and one id
-  join to the original frame. The removal itself is row-local; the
-  production path is an Arrow kernel (O(T + H·w) per doc), the
-  oracle path a plain JVM expression replayed by DuckDB.
+  join to the original frame. The removal itself is one row-local
+  Arrow kernel (O(T + H·w) per doc); DuckDB replays its output for
+  the driver oracle.
 * ``contamination_report``: the eval fingerprint set is collected to
   a BROADCAST (benchmarks are MBs against a 100 TB train side), so
   the whole pass is one train-side scan + one id-groupBy; no
@@ -159,7 +159,6 @@ def remove_repeated_spans(
     window: int = 8,
     min_docs: int = 2,
     hot: DataFrame | None = None,
-    method: str | None = None,
 ) -> DataFrame:
     """Cut corpus-duplicated token spans out of each document (the
     Lee-et-al exact-substring dedup recipe, token-fingerprint form):
@@ -176,22 +175,10 @@ def remove_repeated_spans(
     yesterday's :func:`repeated_span_frame`) to skip the frequency
     pass — the production shape is frequency once, rewrite many.
 
-    Two physical strategies for the removal fold (``method``; None →
-    "arrow", the production default — the F39/F40 split):
-
-    * **"arrow"** — Arrow-batched ``mapInPandas``: a per-document
-      covered-index SET, O(T + H·window) per doc.
-    * **"expr"** — JVM expressions: the covered set is materialized
-      as a deduped index array and each token probes it with
-      ``array_contains`` — O(T·C) interpreted worst case, but plain
-      SQL, which is why it is the ORACLE contract DuckDB replays.
-
-    Same output either way (string equality, no float drift) —
-    equivalence is unit- and hypothesis-pinned."""
-    if method not in (None, "arrow", "expr"):
-        raise ValueError(
-            f"method must be None, 'arrow' or 'expr', got {method!r}"
-        )
+    The removal is an Arrow-batched ``mapInPandas`` kernel with a
+    per-document covered-index SET, O(T + H·window) per doc; DuckDB
+    replays it (``list_contains`` over the covered ranges) for the
+    oracle twin and the parity test."""
     if hot is None:
         hot = repeated_span_frame(
             df, id_col, text_col, window, min_docs
@@ -214,41 +201,7 @@ def remove_repeated_spans(
     joined = df.select(
         F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
     ).join(hits.withColumnRenamed("id", id_col), id_col, "left")
-    if method != "expr":
-        return _remove_spans_arrow(joined, id_col, text_col, window)
-    toks = F.filter(
-        F.split(F.col(text_col), r"\s+"), lambda t: t != ""
-    )
-    covered = F.array_distinct(
-        F.flatten(
-            F.transform(
-                F.coalesce(F.col("hits"), F.array().cast("array<int>")),
-                lambda s: F.sequence(
-                    s, s + F.lit(window - 1)
-                ),
-            )
-        )
-    )
-    kept = F.zip_with(
-        toks,
-        F.sequence(F.lit(0), F.size(toks) - 1),
-        lambda t, j: F.when(~F.array_contains(covered, j), t),
-    )
-    kept = F.filter(kept, lambda t: t.isNotNull())
-    return joined.select(
-        F.col(id_col).alias("id"),
-        F.when(
-            F.col(text_col).isNotNull(), F.array_join(kept, " ")
-        ).alias("text"),
-        F.when(F.col(text_col).isNotNull(), F.size(toks))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("n_tokens"),
-        F.when(F.col(text_col).isNotNull(), F.size(kept))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("n_tokens_kept"),
-    )
+    return _remove_spans_arrow(joined, id_col, text_col, window)
 
 
 def contamination_report(

@@ -726,10 +726,9 @@ def streaming_seen_store_ingest(
 
     Returns the ``DataStreamWriter`` (caller sets checkpoint/trigger
     and calls ``start()``)."""
-    from pyspark.sql import Window
-
     from petk_spark.operators.dedup import (
         append_seen,
+        dedup_first_by,
         filter_previously_seen,
         maybe_compact_seen_store,
     )
@@ -737,13 +736,11 @@ def streaming_seen_store_ingest(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        w = Window.partitionBy("__bfp").orderBy(id_col)
-        batch_unique = (
-            batch_df.withColumn("__bfp", fingerprint(F.col(text_col)))
-            .withColumn("__brn", F.row_number().over(w))
-            .filter(F.col("__brn") == 1)
-            .drop("__bfp", "__brn")
-        )
+        batch_unique = dedup_first_by(
+            batch_df.withColumn("__bfp", fingerprint(F.col(text_col))),
+            ["__bfp"],
+            id_col,
+        ).drop("__bfp")
         fresh = filter_previously_seen(
             batch_unique, id_col, text_col, store_table=store_table
         )

@@ -26,6 +26,7 @@ from petk_spark.operators.lm import (
     train_bigram_lm,
     train_unigram_lm,
 )
+from tests.test_lm import lm_bits_expr
 
 ZH = "今天天气很好我们去公园"          # ideographs, no spaces
 JA = "日本語のテストです"              # kanji + kana, no spaces
@@ -108,11 +109,11 @@ def test_unigram_scoring_non_degenerate_on_spaceless(spark):
     for r in got.values():
         assert r["bits_per_token"] is not None
         assert 0.0 < r["bits_per_token"] < 30.0
-    # expr path agrees bit-for-bit (the oracle contract holds per mode)
+    # the expression reference agrees per mode
     exp = {
-        r["id"]: r for r in lm_bits_per_token(
+        r["id"]: r for r in lm_bits_expr(
             df, "doc_id", "text", vocab, stats["oov_logp"],
-            method="expr", split_cjk=True,
+            split_cjk=True,
         ).collect()
     }
     for k in got:

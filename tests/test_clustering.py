@@ -222,7 +222,9 @@ def _near_scaled_tie(x: float, decimals: int = 6, slack_ulps: float = 4.0) -> bo
     never land in it (pinned by the hash-green km_* oracle rows)."""
     from decimal import Decimal
 
-    scaled_exact = Decimal(x) * (Decimal(10) ** decimals)
+    # the tie neighborhood is symmetric in sign; measure on |x| so a
+    # negative tie (frac near -0.5 under truncation) is caught too
+    scaled_exact = abs(Decimal(x)) * (Decimal(10) ** decimals)
     frac = scaled_exact - int(scaled_exact)
     dist = abs(float(frac) - 0.5)
     return dist <= slack_ulps * math.ulp(abs(x) * 10.0 ** decimals)
@@ -260,7 +262,8 @@ def test_round_parity_divergence_is_tie_bounded():
     import duckdb
 
     con = duckdb.connect()
-    for x in (54975.939945499995, 1.0000005, 2.0000005, 123456.1234565):
+    for x in (54975.939945499995, 1.0000005, 2.0000005, 123456.1234565,
+              -439804.96685850003):
         assert _near_scaled_tie(x), x
         got = con.sql(f"SELECT round_even({x!r}::DOUBLE, 6)").fetchone()[0]
         assert abs(got - round(x, 6)) <= 1e-6 + 1e-12, (x, got, round(x, 6))

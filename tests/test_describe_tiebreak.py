@@ -14,7 +14,9 @@ from pyspark.sql import functions as F
 from petk_spark.operators.describe import (
     _MAX_EXACT_EPOCH_S,
     _MAX_EXACT_LONG,
+    _WINDOWED_MAX_BYTES,
     describe_frame,
+    source_bytes,
 )
 
 
@@ -73,18 +75,22 @@ def test_double_fast_path_nan_null_zero(spark):
     assert _stat(df, "v", "n_zeros") == 1
 
 
-def test_rank_strategies_agree_on_gated_types(spark):
+def test_rank_strategies_agree_on_gated_types(spark, tmp_path):
     # The windowed and bucketed rank paths must agree on a frame that
     # exercises both tiebreak branches (gated longs + empty strings).
+    # The size gate picks the path: a small parquet source takes the
+    # windowed one, an in-memory frame (size unknown) the bucketed one.
     big = _MAX_EXACT_LONG
     df = spark.createDataFrame(
         [(big,), (big + 1,), (7,), (7,), (None,)], "v long"
     )
+    df.write.parquet(str(tmp_path / "v"))
+    small = spark.read.parquet(str(tmp_path / "v"))
+    assert source_bytes(small) < _WINDOWED_MAX_BYTES
+    assert source_bytes(df) is None
     rows = {}
-    for strat in ("windowed", "bucketed"):
-        out = describe_frame(
-            df, exact=True, include_mad=False, rank_strategy=strat
-        ).collect()
+    for strat, frame in (("windowed", small), ("bucketed", df)):
+        out = describe_frame(frame, exact=True, include_mad=False).collect()
         rows[strat] = sorted(
             (r["column"], r["statistic"], r["value_num"], r["value_str"])
             for r in out

@@ -1,6 +1,7 @@
 """Unit tests for the unigram LM perplexity scoring (F46) — training
-arithmetic, the arrow≡expr bit-equality contract, and the DuckDB
-replay the token_histogram twin rides on."""
+arithmetic, the Arrow kernel's bit-equality with a JVM-expression
+reference fold, and the DuckDB replay the token_histogram twin rides
+on."""
 
 from __future__ import annotations
 
@@ -26,6 +27,40 @@ REF = [
 @pytest.fixture()
 def ref(spark):
     return spark.createDataFrame(REF, "id long, text string")
+
+
+def lm_bits_expr(df, id_col, text_col, vocab, oov_logp, split_cjk=False):
+    """Reference for :func:`lm.lm_bits_per_token`: the model becomes a
+    one-row MAP column cross-joined as a broadcast, and the sum is an
+    ``F.aggregate`` left fold — plain SQL semantics, summing the SAME
+    JVM-computed logp values in the SAME document order as the
+    kernel, so the two agree bit-for-bit."""
+    mp = vocab.agg(
+        F.map_from_entries(
+            F.collect_list(F.struct("token", "logp"))
+        ).alias("__lm")
+    )
+    toks = lm._tokens(text_col, split_cjk)
+    acc = F.aggregate(
+        toks,
+        F.lit(0.0),
+        lambda a, t: a
+        + F.coalesce(
+            F.element_at(F.col("__lm"), t), F.lit(float(oov_logp))
+        ),
+    )
+    n_toks = F.size(toks)
+    return (
+        df.crossJoin(F.broadcast(mp))
+        .select(
+            F.col(id_col).alias("id"),
+            F.when(F.col(text_col).isNotNull(), n_toks)
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("n_tokens"),
+            F.when(n_toks > 0, -acc / n_toks).alias("bits_per_token"),
+        )
+    )
 
 
 def test_train_unigram_lm_arithmetic(spark, ref):
@@ -64,13 +99,13 @@ def test_lm_score_paths_bit_identical(spark, ref):
     a = {
         r["id"]: (r["n_tokens"], r["bits_per_token"])
         for r in lm.lm_bits_per_token(
-            docs, "id", "text", vocab, stats["oov_logp"], method="arrow"
+            docs, "id", "text", vocab, stats["oov_logp"]
         ).collect()
     }
     e = {
         r["id"]: (r["n_tokens"], r["bits_per_token"])
-        for r in lm.lm_bits_per_token(
-            docs, "id", "text", vocab, stats["oov_logp"], method="expr"
+        for r in lm_bits_expr(
+            docs, "id", "text", vocab, stats["oov_logp"]
         ).collect()
     }
     assert a == e  # exact float equality — the left-fold contract
@@ -113,17 +148,15 @@ def test_lm_score_paths_property(spark, texts):
         map(
             tuple,
             lm.lm_bits_per_token(
-                docs, "id", "text", vocab, stats["oov_logp"],
-                method="arrow",
+                docs, "id", "text", vocab, stats["oov_logp"]
             ).collect(),
         )
     )
     e = sorted(
         map(
             tuple,
-            lm.lm_bits_per_token(
-                docs, "id", "text", vocab, stats["oov_logp"],
-                method="expr",
+            lm_bits_expr(
+                docs, "id", "text", vocab, stats["oov_logp"]
             ).collect(),
         )
     )
@@ -135,29 +168,22 @@ def test_lm_score_arrow_is_scan_local(spark, ref):
     scoring plan (the model is a closure, not a join)."""
     vocab, stats = lm.train_unigram_lm(ref, "text", vocab_size=4)
     out = lm.lm_bits_per_token(
-        ref, "id", "text", vocab, stats["oov_logp"], method="arrow"
+        ref, "id", "text", vocab, stats["oov_logp"]
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-    # and the expr path broadcasts the one-row map, never shuffles df
-    out2 = lm.lm_bits_per_token(
-        ref, "id", "text", vocab, stats["oov_logp"], method="expr"
-    )
-    plan2 = out2._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan2 or "BroadcastExchange" in plan2
-    assert "SortMergeJoin" not in plan2
 
 
 def test_lm_duckdb_replay_parity(spark, ref):
-    """The twin's map()+list_reduce replay reproduces the expr fold on
-    a crafted corpus, %.6e-formatted on both sides."""
+    """The twin's map()+list_reduce replay reproduces the kernel's
+    left fold on a crafted corpus, %.6e-formatted on both sides."""
     from petk_spark.functions.oracle_fmt import fmt_sci
 
     vocab, stats = lm.train_unigram_lm(ref, "text", vocab_size=4)
     got = {
         r["id"]: r["b"]
         for r in lm.lm_bits_per_token(
-            ref, "id", "text", vocab, stats["oov_logp"], method="expr"
+            ref, "id", "text", vocab, stats["oov_logp"]
         )
         .select("id", fmt_sci(F.col("bits_per_token")).alias("b"))
         .collect()

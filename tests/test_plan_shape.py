@@ -62,7 +62,7 @@ def test_describe_exact_reads_each_column_once(lineitem):
         assert data[0] | data[1] == set(lineitem.columns), subsets
 
 
-def test_describe_exact_rank_has_no_per_column_window(lineitem):
+def test_describe_exact_rank_has_no_per_column_window(lineitem, monkeypatch):
     # The 100× hazard fixed in round 2: a running-count window over the
     # value histogram partitioned by column id alone concentrates every
     # distinct value of one column on a single reducer. Any window
@@ -71,11 +71,12 @@ def test_describe_exact_rank_has_no_per_column_window(lineitem):
     # subtotal frame may partition by cid alone.
     import re
 
+    from petk_spark.operators import describe
     from petk_spark.plans.inspect import executed_plan
 
-    plan_df = describe_frame(
-        lineitem, exact=True, include_mad=False, rank_strategy="bucketed"
-    )
+    # a zero size gate sends every source down the bucketed path
+    monkeypatch.setattr(describe, "_WINDOWED_MAX_BYTES", 0)
+    plan_df = describe_frame(lineitem, exact=True, include_mad=False)
     plan = executed_plan(plan_df)
     specs = re.findall(r"windowspecdefinition\(([^)]*)", plan)
     assert specs, "expected window specs in the exact-mode plan"
@@ -104,7 +105,7 @@ def test_describe_auto_rank_uses_window_for_small_source(lineitem):
     assert all("bucket" not in s for s in specs), specs
 
 
-def test_rank_strategies_agree(lineitem):
+def test_rank_strategies_agree(lineitem, monkeypatch):
     # The windowed fast path and the bucketed 100 TB path are two
     # physical plans for the SAME logical result. Rank-derived and
     # integer statistics (quantiles, distinct counts, counts, extrema,
@@ -123,8 +124,11 @@ def test_rank_strategies_agree(lineitem):
         "skewness", "kurtosis",
     }
     cols = ["l_quantity", "l_extendedprice", "l_shipdate", "l_returnflag"]
-    win = describe_frame(lineitem, cols, exact=True, rank_strategy="windowed")
-    buc = describe_frame(lineitem, cols, exact=True, rank_strategy="bucketed")
+    from petk_spark.operators import describe
+
+    win = describe_frame(lineitem, cols, exact=True)
+    monkeypatch.setattr(describe, "_WINDOWED_MAX_BYTES", 0)
+    buc = describe_frame(lineitem, cols, exact=True)
 
     def norm(rows):
         out = []
@@ -140,21 +144,23 @@ def test_rank_strategies_agree(lineitem):
     assert rows_w == rows_b
 
 
-def test_bucketed_rank_matches_oracle(spark):
+def test_bucketed_rank_matches_oracle(spark, monkeypatch):
     # The scale path (bucketed two-stage prefix sum) hash-matches the
     # DuckDB oracle exactly like the windowed path the small-SF gates
     # exercise — the driver's own formatting model, full describe
     # surface. This is the direct form of the guarantee
     # test_rank_strategies_agree approximates.
     import __spark_entry__ as em
+    from petk_spark.operators import describe
     from petk_spark.sources.tables import read_table
     from tests.driver_replica import strict_compare
     from tests.oracle_harness import duck_connection
 
+    monkeypatch.setattr(describe, "_WINDOWED_MAX_BYTES", 0)
     sdf = em._shape_describe(
         describe_frame(
             read_table(spark, SF, "lineitem"),
-            None, exact=True, include_mad=True, rank_strategy="bucketed",
+            None, exact=True, include_mad=True,
         )
     )
     con = duck_connection(SF)
@@ -256,3 +262,21 @@ def test_max_partition_bytes_parses_spark_size_strings():
     assert _parse_byte_string("2KB") == 2048
     with pytest.raises(ValueError):
         _parse_byte_string("1.5g")
+
+
+def test_ensure_parallelism_leaves_remote_source_unplanned(spark, monkeypatch):
+    """A remote source's size is unknown from file metadata, so
+    ensure_parallelism returns the frame unchanged — without the
+    ``df.rdd`` physical-planning probe (a full py4j planning round
+    trip per call)."""
+    from petk_spark.operators.describe import ensure_parallelism
+
+    df = spark.range(10)
+    reads = []
+    cls = type(df)  # the classic-session subclass, not the base API
+    monkeypatch.setattr(
+        cls, "inputFiles", lambda self: ["s3a://bucket/part-0.parquet"]
+    )
+    monkeypatch.setattr(cls, "rdd", property(lambda self: reads.append(1)))
+    assert ensure_parallelism(df) is df
+    assert reads == []

@@ -1,7 +1,7 @@
 """Unit tests for the span-level exact-substring dedup (F41) and
-eval-set decontamination (F42) operators, including the arrow≡expr
-removal-fold equivalence and DuckDB replay parity the oracle twin
-rides on."""
+eval-set decontamination (F42) operators, including the Arrow kernel's
+equivalence with a JVM-expression reference fold and the DuckDB replay
+parity the oracle twin rides on."""
 
 from __future__ import annotations
 
@@ -31,12 +31,68 @@ def corpus(spark):
     return spark.createDataFrame(DOCS, "id long, text string")
 
 
+def _remove_spans_expr(df, id_col, text_col, window, min_docs):
+    """Reference for :func:`spans.remove_repeated_spans`: the same hit
+    frame, then the removal as plain JVM expressions — the covered set
+    is materialized as a deduped index array and each token probes it
+    with ``array_contains`` (O(T·C) interpreted, but plain SQL)."""
+    hot = spans.repeated_span_frame(
+        df, id_col, text_col, window, min_docs
+    ).select("fp")
+    hits = (
+        spans.span_fingerprint_frame(df, id_col, text_col, window)
+        .join(hot, "fp")
+        .groupBy("id")
+        .agg(F.sort_array(F.collect_set("i")).alias("hits"))
+    )
+    joined = df.select(
+        F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
+    ).join(hits.withColumnRenamed("id", id_col), id_col, "left")
+    toks = F.filter(
+        F.split(F.col(text_col), r"\s+"), lambda t: t != ""
+    )
+    covered = F.array_distinct(
+        F.flatten(
+            F.transform(
+                F.coalesce(F.col("hits"), F.array().cast("array<int>")),
+                lambda s: F.sequence(
+                    s, s + F.lit(window - 1)
+                ),
+            )
+        )
+    )
+    kept = F.zip_with(
+        toks,
+        F.sequence(F.lit(0), F.size(toks) - 1),
+        lambda t, j: F.when(~F.array_contains(covered, j), t),
+    )
+    kept = F.filter(kept, lambda t: t.isNotNull())
+    return joined.select(
+        F.col(id_col).alias("id"),
+        F.when(
+            F.col(text_col).isNotNull(), F.array_join(kept, " ")
+        ).alias("text"),
+        F.when(F.col(text_col).isNotNull(), F.size(toks))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("n_tokens"),
+        F.when(F.col(text_col).isNotNull(), F.size(kept))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("n_tokens_kept"),
+    )
+
+
+#: the operator's Arrow kernel and the expression reference
+REMOVE = {"arrow": spans.remove_repeated_spans, "expr": _remove_spans_expr}
+
+
 @pytest.mark.parametrize("method", ["arrow", "expr"])
 def test_remove_repeated_spans_known_values(spark, corpus, method):
     out = {
         r["id"]: r
-        for r in spans.remove_repeated_spans(
-            corpus, "id", "text", window=8, min_docs=2, method=method
+        for r in REMOVE[method](
+            corpus, "id", "text", window=8, min_docs=2
         ).collect()
     }
     assert len(out) == len(DOCS)
@@ -131,9 +187,10 @@ def test_remove_repeated_spans_precomputed_hot(spark, corpus):
     )
 )
 def test_remove_spans_arrow_equiv_expr_property(spark, texts):
-    """arrow ≡ expr on random small-vocab corpora (small vocab forces
-    genuine duplicated windows) — multi-row batches with DIFFERING
-    token counts, the exact trigger of the F40 lambda-scoping class."""
+    """Arrow kernel ≡ expression reference on random small-vocab
+    corpora (small vocab forces genuine duplicated windows) —
+    multi-row batches with DIFFERING token counts, the exact trigger
+    of the F40 lambda-scoping class."""
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "id long, text string"
     )
@@ -141,15 +198,15 @@ def test_remove_spans_arrow_equiv_expr_property(spark, texts):
         map(
             tuple,
             spans.remove_repeated_spans(
-                df, "id", "text", window=3, min_docs=2, method="arrow"
+                df, "id", "text", window=3, min_docs=2
             ).collect(),
         )
     )
     e = sorted(
         map(
             tuple,
-            spans.remove_repeated_spans(
-                df, "id", "text", window=3, min_docs=2, method="expr"
+            _remove_spans_expr(
+                df, "id", "text", window=3, min_docs=2
             ).collect(),
         )
     )
@@ -157,12 +214,12 @@ def test_remove_spans_arrow_equiv_expr_property(spark, texts):
 
 
 def test_remove_spans_parity_with_duckdb(spark, corpus):
-    """The expr oracle contract replayed by the registry twin's SQL:
-    same hot set, same coverage rule, same rebuilt strings."""
+    """The kernel replayed by the registry twin's SQL: same hot set,
+    same coverage rule, same rebuilt strings."""
     got = {
         r["id"]: (r["text"], r["n_tokens"], r["n_tokens_kept"])
         for r in spans.remove_repeated_spans(
-            corpus, "id", "text", window=8, min_docs=2, method="expr"
+            corpus, "id", "text", window=8, min_docs=2
         ).collect()
     }
     con = duckdb.connect()
@@ -246,16 +303,13 @@ def test_contamination_eval_side_is_broadcast(spark, corpus):
 
 
 def test_remove_spans_no_cartesian(spark, corpus):
-    for method in ("arrow", "expr"):
-        plan = (
-            spans.remove_repeated_spans(
-                corpus, "id", "text", method=method
-            )
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "CartesianProduct" not in plan
+    plan = (
+        spans.remove_repeated_spans(corpus, "id", "text")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "CartesianProduct" not in plan
 
 
 def test_fingerprint_overlap_twin_families(spark):
