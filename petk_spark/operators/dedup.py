@@ -21,18 +21,31 @@ Scale design:
   * SimHash: 64-bit fingerprints from token hashes, near-dup = Hamming
     distance ≤ d on block-partitioned candidates (pigeonhole: split the
     64 bits into d+1 blocks; equal pairs must share one block).
-  * embedding cosine: exact pairwise above a threshold via a blocked
-    self-join; LSH (random hyperplane) variant for scale.
+  * embedding cosine: exact pairwise above a threshold via a broadcast
+    BLAS filter refined by the one exact cosine kernel
+    (``similarity.cosine_col``); LSH (random hyperplane) variant for
+    scale, verified by the same kernel.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from petk_spark.operators.similarity import (
+    _fold_cosine,
+    _lfold,
+    cosine_col,
+    deterministic_planes,
+    hyperplane_signature,
+    ivf_assign,
+    sample_centroids,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -703,29 +716,80 @@ def hamming_near_dup(
 # F2d — embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float-array columns in double arithmetic,
-    left-to-right summation (matches DuckDB's list_* reducers for oracle
-    stability; formatted through the %.6e contract regardless).
+#: Row block of the BLAS filter: peak extra memory per call is
+#: ``block × n`` doubles (~64 MB for a 2048-row block against a 4M-row
+#: side) instead of the full ``n²`` similarity matrix.
+_MATMUL_BLOCK = 2048
 
-    ``try_divide``, not ``/``: a zero-norm (all-zero) vector makes the
-    denominator 0, and under Spark 4's default ANSI mode a plain divide
-    THROWS — one degenerate embedding in 100 TB would kill the scan.
-    Cosine of a zero vector is undefined → NULL (the oracle twins mirror
-    this with NULLIF on the denominator); NULL-cosine rows rank last /
-    never clear a similarity threshold."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
-    nb = F.sqrt(
-        F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
-    return F.try_divide(dot, na * nb)
+#: float64 unit roundoff.
+_U = 2.0 ** -53
+
+
+def _filter_side(X):
+    """``(unit rows, ok, tiny)`` for one side of :func:`_cosine_pairs`:
+    each row divided by the square root of its left-folded Σv², whether
+    the row can score at all (Σv² positive and finite, the kernel's
+    NULL contract) and whether it is tiny (Σv² < d·2⁻¹⁰²¹, where
+    underflow may exceed the filter's slack)."""
+    with np.errstate(all="ignore"):  # ill-formed rows are gated below
+        ss = _lfold(x * x for x in X.T)
+        ok = np.isfinite(ss) & (ss > 0)
+        U = X / np.sqrt(np.where(ok, ss, 1.0))[:, None]
+    U[~ok] = 0.0
+    return U, ok, ok & (ss < X.shape[1] * 2.0 ** -1021)
+
+
+def _cosine_pairs(ids_a, XA, ids_b, XB, threshold: float):
+    """``(i, j, cosine)`` over row pairs of ``(n, d)`` float64 blocks
+    with ``ids_a[i] < ids_b[j]`` and kernel cosine ≥ ``threshold`` — the
+    one block scorer of :func:`embedding_near_dup` and
+    :func:`_semantic_pairs_arrow`. Filter and refine (REPOSE, ICDE
+    2021; Multi-Attribute Similarity Search, EDBT 2021): one BLAS
+    product of unit rows per ``_MATMUL_BLOCK`` rows of ``XA`` keeps the
+    pairs with S ≥ t − δ, then :func:`_fold_cosine` re-scores only
+    those, decides membership on its own value and emits it. So every
+    tier returns the fold's pair set and values, whatever the margin
+    between the scores and ``threshold``."""
+    # δ bounds |S − fold| (Higham, Accuracy and Stability of Numerical
+    # Algorithms, §3.1: γₙ = n·u/(1 − n·u), u = 2⁻⁵³). For rows a, b
+    # with exact cosine c:
+    #   * fold: the dot is off by ≤ γ_d·‖a‖‖b‖ in any summation order
+    #     (|a|·|b| ≤ ‖a‖‖b‖); each Σv² by ≤ γ_d relative; the two
+    #     sqrts, their product and the divide add four roundings. So
+    #     fold = c̃(1 + θ) with |c̃ − c| ≤ γ_d, |θ| ≤ γ_{d+4}, and
+    #     |fold − c| ≤ 2·γ_{d+4}.
+    #   * BLAS: unit rows carry the same Σv² fold and one divide; their
+    #     product adds γ_d. Again |S − c| ≤ 2·γ_{d+4}.
+    #   * underflow: products and partial sums below 2⁻¹⁰²² add up to
+    #     d·2⁻¹⁰⁷⁴ to the fold's dot (a cosine error of
+    #     d·2⁻¹⁰⁷⁴ / (‖a‖·‖b‖)) and to each Σv². With both Σv² ≥
+    #     d·2⁻¹⁰²¹ that is ≤ u per term, which γ_{d+6} absorbs along with
+    #     the rounding of t − δ. A tiny row (below that norm) is refined
+    #     against every row of the other side, never filtered.
+    # Hence δ = 4·γ_{d+6}.
+    d = XA.shape[1]
+    delta = 4 * (d + 6) * _U / (1 - (d + 6) * _U)
+    UB, okB, tinyB = _filter_side(XB)
+    out_i, out_j, out_c = [], [], []
+    for s0 in range(0, len(XA), _MATMUL_BLOCK):
+        UA, okA, tinyA = _filter_side(XA[s0 : s0 + _MATMUL_BLOCK])
+        with np.errstate(all="ignore"):
+            near = UA @ UB.T >= threshold - delta
+        bi, j = np.nonzero(
+            (near | tinyA[:, None] | tinyB)
+            & okA[:, None]
+            & okB
+            & (ids_a[s0 : s0 + _MATMUL_BLOCK, None] < ids_b)
+        )
+        i = bi + s0
+        c = _fold_cosine(XA[i], XB[j])
+        keep = c >= threshold  # a NaN (NULL) cosine never clears it
+        out_i.append(i[keep])
+        out_j.append(j[keep])
+        out_c.append(c[keep])
+    if not out_i:
+        return np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0)
+    return np.concatenate(out_i), np.concatenate(out_j), np.concatenate(out_c)
 
 
 def embedding_near_dup(
@@ -741,9 +805,9 @@ def embedding_near_dup(
     joins at runtime — this operator is action-bearing by necessity):
 
     * corpus ≤ ``max_broadcast_rows``: block-broadcast all-pairs — the
-      (id, unit-vector) matrix is broadcast (1M × 768 float64 ≈ 6 GB is
-      the ceiling the default cap encodes) and each partition
-      BLAS-matmuls its row block against it. Embarrassingly
+      (id, vector) matrix is broadcast (1M × 768 float64 ≈ 6 GB is the
+      ceiling the default cap encodes) and each partition scores its
+      rows against it with :func:`_cosine_pairs`. Embarrassingly
       partition-parallel, no shuffle, exact.
     * larger: falls through to ``embedding_near_dup_lsh`` — banded
       random-hyperplane bucketing + exact cosine verification of
@@ -754,15 +818,12 @@ def embedding_near_dup(
     cap+1 rows of the id column regardless of corpus size, so the
     decision itself is O(cap), never O(N).
 
-    Numerical note: BLAS summation order differs from a strict fold by
-    ~1e-15 relative; the declared oracle threshold keeps ≥1e-5 margin to
-    any actual cosine, so pair membership is engine-stable. (An earlier
-    pure-expression version using F.aggregate HOFs was 25× slower —
-    higher-order functions are CodegenFallback, interpreted per pair.)
+    Both tiers score with the one cosine kernel (the block tier's BLAS
+    filter only preselects candidates for it), so they agree pair for
+    pair and bit for bit, at any margin to the threshold. A NULL
+    vector or element, a vector of another length than the first row's,
+    and a zero-norm, NaN or ±Inf vector pair with nothing.
     """
-    import numpy as np
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     id_type = df.schema[id_col].dataType
@@ -779,10 +840,9 @@ def embedding_near_dup(
     if probed > max_broadcast_rows:
         return embedding_near_dup_lsh(df, id_col, vec_col, threshold)
 
-    # NULL embeddings pair with nothing (their cosine is undefined —
-    # the same NULL the expression path yields); vectors whose length
-    # disagrees with the corpus dimension are likewise excluded instead
-    # of crashing the ragged numpy stack — one malformed row in 100 TB
+    # NULL embeddings pair with nothing; vectors whose length disagrees
+    # with the corpus dimension are likewise excluded instead of
+    # crashing the ragged numpy stack — one malformed row in 100 TB
     # must not kill the job.
     df = df.filter(F.col(vec_col).isNotNull())
     rows = df.select(id_col, vec_col).collect()
@@ -792,39 +852,24 @@ def embedding_near_dup(
         )
     dim = len(rows[0][1])
     rows = [r for r in rows if len(r[1]) == dim]
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    X = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(X, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    U = X / norms
-    spark = df.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_unit = spark.sparkContext.broadcast(U)
+    b_rows = df.sparkSession.sparkContext.broadcast((
+        np.array([r[0] for r in rows], dtype=np.int64),
+        np.array([r[1] for r in rows], dtype=np.float64).reshape(-1, dim),
+    ))
 
     def run(batches):
-        all_ids = b_ids.value
-        all_u = b_unit.value
+        all_ids, all_x = b_rows.value
         for pdf in batches:
+            pdf = pdf[[v is not None and len(v) == dim for v in pdf[vec_col]]]
             if pdf.empty:
                 continue
-            keep = [
-                i
-                for i, v in enumerate(pdf[vec_col])
-                if v is not None and len(v) == all_u.shape[1]
-            ]
-            if not keep:
-                continue
-            pdf = pdf.iloc[keep]
-            bx = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            bn = np.linalg.norm(bx, axis=1, keepdims=True)
-            bn[bn == 0] = 1.0
-            sims = (bx / bn) @ all_u.T
+            bx = np.array(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+            ).reshape(-1, dim)
             bids = pdf[id_col].to_numpy(dtype=np.int64)
-            ii, jj = np.nonzero(
-                (sims >= threshold) & (bids[:, None] < all_ids[None, :])
-            )
+            i, j, c = _cosine_pairs(bids, bx, all_ids, all_x, threshold)
             yield pd.DataFrame(
-                {"id_a": bids[ii], "id_b": all_ids[jj], "cosine": sims[ii, jj]}
+                {"id_a": bids[i], "id_b": all_ids[j], "cosine": c}
             )
 
     return df.select(id_col, vec_col).mapInPandas(
@@ -847,8 +892,8 @@ def embedding_near_dup_lsh(
     ``bands`` independent random-hyperplane signatures of ``n_planes``
     bits each; a pair is a candidate iff it collides in ≥1 band (banded
     LSH, same shape as MinHash banding). Candidates are verified with
-    the exact cosine expression, so precision is 1.0; recall is the
-    S-curve 1-(1-p^r)^b with p = 1 - θ/π.
+    the exact cosine kernel (:func:`cosine_col`), so precision is 1.0;
+    recall is the S-curve 1-(1-p^r)^b with p = 1 - θ/π.
 
     Defaults are derived from the threshold: the per-band bit width r
     targets a ~0.35 band-collision probability AT the threshold (so 12
@@ -863,11 +908,6 @@ def embedding_near_dup_lsh(
     buckets (many near-identical vectors) are AQE skew-join territory.
     """
     import math
-
-    from petk_spark.operators.similarity import (
-        deterministic_planes,
-        hyperplane_signature,
-    )
 
     p = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
     if n_planes is None:
@@ -910,11 +950,11 @@ def embedding_near_dup_lsh(
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            cosine_expr(F.col("a.vec"), F.col("b.vec")).alias("cosine"),
+            cosine_col(F.col("a.vec"), F.col("b.vec")).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
         # A pair colliding in several bands appears once per collision;
-        # cosine is a deterministic expression of the pair, so distinct
+        # cosine is a deterministic function of the pair, so distinct
         # collapses them exactly.
         .distinct()
     )
@@ -925,63 +965,32 @@ def embedding_near_dup_lsh(
 # SemDeDup-style semantic dedup over embedding cells (SURVEY §2.F39)
 # ---------------------------------------------------------------------------
 
-#: Row-block size for the chunked within-cell matmul: peak extra
-#: memory per task is ``block × cell_rows`` doubles (~64 MB for a
-#: 2048-row block against a 4M-row cell) instead of the full
-#: ``cell_rows²`` similarity matrix.
-_SEM_MATMUL_BLOCK = 2048
-
-
 def _semantic_pairs_arrow(
     assigned: DataFrame, threshold: float
 ) -> DataFrame:
-    """Within-cell pair scoring as Arrow-batched BLAS matmuls per cell
-    (``applyInPandas`` over the cell groups): normalize the cell's
-    vectors once, then multiply in row blocks of
-    :data:`_SEM_MATMUL_BLOCK` against the whole cell, emitting
-    upper-triangle pairs above the threshold per block — same pair set
-    as the full ``U @ U.Tᵀ``, but peak memory O(block × cell) instead
-    of O(cell²) (a 100k-row cell is ~1.6 GB per block, not an 80 GB
-    matrix). ~100× the interpreted HOF-fold expression path on large
-    cells (measured 7.4 s → sub-second on 5k×64 / 16 cells). The
-    whole CELL must still fit one executor's Arrow batch (vectors
-    only, not the matrix) and its pair COMPUTE is one unsplittable
-    task — the hot-cell guard in :func:`semantic_dedup_pairs` routes
-    oversized cells elsewhere. Output id types follow the input's id
-    column (string doc ids work, round-8 advisory)."""
+    """Within-cell pair scoring, one ``applyInPandas`` group per cell:
+    :func:`_cosine_pairs` of the cell against itself — BLAS filter in
+    row blocks of ``_MATMUL_BLOCK`` (peak memory O(block × cell), not
+    O(cell²)), fold-kernel refine of the candidates, so the pair set
+    and cosines are the kernel's. The whole CELL must still fit one
+    executor's Arrow batch (vectors only, not the matrix) and its pair
+    compute is one unsplittable task — the hot-cell guard in
+    :func:`semantic_dedup_pairs` routes oversized cells elsewhere.
+    Output id types follow the input's id column (string doc ids
+    work)."""
     id_t = assigned.schema["id"].dataType.simpleString()
     cell_t = assigned.schema["centroid_id"].dataType.simpleString()
     schema = f"cell {cell_t}, id_a {id_t}, id_b {id_t}, cosine double"
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values("id").reset_index(drop=True)
-        X = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in pdf["vec"]]
-        )
-        n = np.linalg.norm(X, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        U = X / n
+        X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
         ids = pdf["id"].to_numpy()
-        rows = len(pdf)
-        out_a, out_b, out_c = [], [], []
-        for s0 in range(0, rows, _SEM_MATMUL_BLOCK):
-            S = U[s0 : s0 + _SEM_MATMUL_BLOCK] @ U.T
-            bi, bj = np.nonzero(S >= threshold)
-            gi = bi + s0
-            keep = bj > gi  # strict upper triangle, global indices
-            out_a.append(ids[gi[keep]])
-            out_b.append(ids[bj[keep]])
-            out_c.append(S[bi[keep], bj[keep]])
-        a = np.concatenate(out_a) if out_a else np.array([], dtype=ids.dtype)
-        b = np.concatenate(out_b) if out_b else np.array([], dtype=ids.dtype)
-        c = np.concatenate(out_c) if out_c else np.array([])
+        i, j, c = _cosine_pairs(ids, X, ids, X, threshold)
         return pd.DataFrame(
             {
                 "cell": pdf["centroid_id"].iloc[0],
-                "id_a": a,
-                "id_b": b,
+                "id_a": ids[i],
+                "id_b": ids[j],
                 "cosine": c,
             }
         )
@@ -989,14 +998,12 @@ def _semantic_pairs_arrow(
     return assigned.groupBy("centroid_id").applyInPandas(score, schema)
 
 
-def _semantic_pairs_expr(assigned: DataFrame, threshold: float) -> DataFrame:
-    """Within-cell pair scoring as a cell-keyed equi-join with the
-    left-fold ``cosine_expr`` — bit-identical to the DuckDB replay
-    (the oracle twin pins this path) and, being a plain shuffle join,
-    splittable by AQE's skew-join handling across executors; but the
-    fold is interpreted (CodegenFallback) and ~100× slower per pair
-    than BLAS. Used for ``method="expr"`` and as the distributed
-    fallback for cells too hot for a single Arrow task."""
+def _semantic_pairs_join(assigned: DataFrame, threshold: float) -> DataFrame:
+    """Within-cell pair scoring as a cell-keyed equi-join scored by
+    :func:`cosine_col`: a plain shuffle join, so AQE's skew-join
+    handling splits it across executors — the distributed route for
+    cells too hot for one Arrow task. Same pairs and cosines as
+    :func:`_semantic_pairs_arrow`."""
     a = assigned.select(
         F.col("centroid_id").alias("cell"),
         F.col("id").alias("id_a"),
@@ -1010,7 +1017,7 @@ def _semantic_pairs_expr(assigned: DataFrame, threshold: float) -> DataFrame:
     return (
         a.join(b, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cosine_expr(F.col("va"), F.col("vb")))
+        .withColumn("cosine", cosine_col(F.col("va"), F.col("vb")))
         .filter(F.col("cosine") >= F.lit(threshold))
         .select("cell", "id_a", "id_b", "cosine")
     )
@@ -1023,7 +1030,6 @@ def semantic_dedup_pairs(
     centroids: list[list[float]] | None = None,
     n_centroids: int = 64,
     threshold: float = 0.95,
-    method: str | None = None,
     max_cell_rows: int | None = 100_000,
 ) -> DataFrame:
     """Semantic near-duplicate candidate pairs, SemDeDup-style
@@ -1035,110 +1041,65 @@ def semantic_dedup_pairs(
     ``(cell, id_a, id_b, cosine)`` for same-cell pairs with
     ``cosine ≥ threshold`` and ``id_a < id_b``.
 
-    Scale design: assignment is a map-only Arrow projection — the
-    "arrow" method runs the IVF engine's matmul kernel at any centroid
-    count, "expr" runs :func:`ivf_assign` (its fold tier up to 64
-    centroids replays the left-fold cosine bit for bit, like the
-    compare); the within-cell compare shuffles the assigned frame once
-    on the cell id. Size ``n_centroids`` ∝
+    Scale design: assignment is :func:`ivf_assign`, a map-only Arrow
+    projection; the within-cell compare shuffles the assigned frame
+    once on the cell id and scores each cell with
+    :func:`_semantic_pairs_arrow`. Size ``n_centroids`` ∝
     N/target_cell_size so cells stay bounded (the published recipe:
-    √N-ish cells). Malformed vectors (NULL centroid) can't be
-    compared and never pair.
+    √N-ish cells). Malformed vectors (NULL centroid) can't be compared
+    and never pair.
 
-    **Skew honesty** (round-8 verdict #2): on the production "arrow"
-    path a cell is ONE ``applyInPandas`` Python group — an
-    unsplittable task whose pair compute is O(cell²); AQE's skew-join
-    splitting applies ONLY to the "expr" equi-join. The guard is
+    Hot cells: a cell is ONE ``applyInPandas`` group, an unsplittable
+    task whose pair compute is O(cell²). The guard is
     ``max_cell_rows`` (default 100k): a cheap pre-count of cell sizes
     (one map-side-combined aggregate over the assignment projection,
     collecting at most ``n_centroids`` counts) routes any hotter cell
-    through the DISTRIBUTED expr join — slower per pair but
-    AQE-splittable across the cluster instead of a single-task
-    straggler — and warns, because a hot cell really means
-    ``n_centroids`` is undersized for the corpus. Set
-    ``max_cell_rows=None`` to skip the pre-count (and its extra
-    assignment pass) when the sizing contract is already enforced
-    upstream.
+    through a distributed cell-keyed join (:func:`_semantic_pairs_join`,
+    AQE-splittable across the cluster) and warns, because a hot cell
+    really means ``n_centroids`` is undersized for the corpus. Both
+    routes score with the one cosine kernel, so they return the same
+    pairs and cosines. Set ``max_cell_rows=None`` to skip the
+    pre-count (and its extra assignment pass) when the sizing contract
+    is already enforced upstream.
 
     Pass ``centroids`` explicitly for cross-run reproducibility (e.g.
     the stored sidecar of a built IVF index, or fixed literals as the
     oracle twin does); otherwise they are trained with the seeded
-    :func:`~petk_spark.operators.similarity.sample_centroids`.
-
-    Two physical strategies for the within-cell compare (``method``:
-    None → "arrow", the production default): **"arrow"** shuffles the
-    assigned frame once on the cell and runs blocked BLAS matmuls per
-    cell (:func:`_semantic_pairs_arrow`); **"expr"** is the cell-keyed
-    equi-join with the left-fold ``cosine_expr`` — bit-identical to
-    the DuckDB replay, which is why the oracle twin pins it, but the
-    fold is interpreted (CodegenFallback) and ~100× slower on big
-    cells. Same pair SET either way for scores not exactly at the
-    threshold (unit-pinned); the float values differ in the last ulp
-    (BLAS vs left-fold summation order)."""
+    :func:`~petk_spark.operators.similarity.sample_centroids`."""
     import warnings
 
-    from petk_spark.operators.similarity import (
-        _matmul_rank,
-        _rank_udf,
-        ivf_assign,
-        sample_centroids,
-    )
-
-    if method not in (None, "arrow", "expr"):
-        raise ValueError(
-            f"method must be None, 'arrow' or 'expr', got {method!r}"
-        )
     if centroids is None:
         centroids = sample_centroids(df, n_centroids, vec_col, id_col)
-    if method == "expr" or not centroids:
-        assigned = ivf_assign(df, centroids, id_col, vec_col)
-    else:
-        # The matmul kernel even below ivf_assign's 64-centroid fold
-        # tier: bit-parity buys nothing before a BLAS compare, and the
-        # fold's k·d numpy passes cost ~5× the one matmul (0.87 s vs
-        # 0.18 s, 10k × 768 vectors × 16 centroids, one numpy thread).
-        top1 = _rank_udf(df.sparkSession, centroids, 1, _matmul_rank)
-        assigned = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            top1(F.col(vec_col).cast("array<double>"))[0].alias(
-                "centroid_id"
-            ),
+    assigned = ivf_assign(df, centroids, id_col, vec_col).filter(
+        F.col("centroid_id").isNotNull()
+    )
+    if max_cell_rows is not None:
+        sizes = assigned.groupBy("centroid_id").agg(
+            F.count(F.lit(1)).alias("n")
         )
-    assigned = assigned.filter(F.col("centroid_id").isNotNull())
-    if method != "expr":
-        if max_cell_rows is not None:
-            sizes = assigned.groupBy("centroid_id").agg(
-                F.count(F.lit(1)).alias("n")
+        hot = [
+            r["centroid_id"]
+            for r in sizes.filter(F.col("n") > F.lit(max_cell_rows)).collect()
+        ]
+        if hot:
+            warnings.warn(
+                f"semantic_dedup_pairs: {len(hot)} cell(s) exceed "
+                f"max_cell_rows={max_cell_rows} — routing them "
+                "through the distributed join. A hot cell "
+                "means n_centroids is undersized for this corpus "
+                "(target ~sqrt(N) cells); consider retraining "
+                "with more centroids.",
+                RuntimeWarning,
+                stacklevel=2,
             )
-            hot = [
-                r["centroid_id"]
-                for r in sizes.filter(
-                    F.col("n") > F.lit(max_cell_rows)
-                ).collect()
-            ]
-            if hot:
-                warnings.warn(
-                    f"semantic_dedup_pairs: {len(hot)} cell(s) exceed "
-                    f"max_cell_rows={max_cell_rows} — routing them "
-                    "through the distributed expr join. A hot cell "
-                    "means n_centroids is undersized for this corpus "
-                    "(target ~sqrt(N) cells); consider retraining "
-                    "with more centroids.",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                cold = _semantic_pairs_arrow(
-                    assigned.filter(~F.col("centroid_id").isin(hot)),
-                    threshold,
-                )
-                hot_pairs = _semantic_pairs_expr(
-                    assigned.filter(F.col("centroid_id").isin(hot)),
-                    threshold,
-                )
-                return cold.unionByName(hot_pairs)
-        return _semantic_pairs_arrow(assigned, threshold)
-    return _semantic_pairs_expr(assigned, threshold)
+            cold = _semantic_pairs_arrow(
+                assigned.filter(~F.col("centroid_id").isin(hot)), threshold
+            )
+            hot_pairs = _semantic_pairs_join(
+                assigned.filter(F.col("centroid_id").isin(hot)), threshold
+            )
+            return cold.unionByName(hot_pairs)
+    return _semantic_pairs_arrow(assigned, threshold)
 
 
 def semantic_dedup(
@@ -1148,7 +1109,6 @@ def semantic_dedup(
     centroids: list[list[float]] | None = None,
     n_centroids: int = 64,
     threshold: float = 0.95,
-    method: str | None = None,
     max_cell_rows: int | None = 100_000,
 ) -> DataFrame:
     """Rows surviving semantic dedup: drop a row iff its cell holds a
@@ -1166,7 +1126,7 @@ def semantic_dedup(
     crawl), so the final step is a hash anti-join on the id — NOT a
     broadcast."""
     pairs = semantic_dedup_pairs(
-        df, id_col, vec_col, centroids, n_centroids, threshold, method,
+        df, id_col, vec_col, centroids, n_centroids, threshold,
         max_cell_rows,
     )
     drop = pairs.select(F.col("id_b").alias(id_col)).distinct()

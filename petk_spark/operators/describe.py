@@ -931,26 +931,33 @@ def _moment_anchors(df: DataFrame, num_cols) -> dict[str, float]:
     return out
 
 
-def source_bytes(df: DataFrame) -> int | None:
-    """Total size of the frame's local source files, or None when it
-    cannot be known cheaply (derived frame, remote filesystem). File
-    metadata only — no job, no physical planning probe."""
+def _source_listing(df: DataFrame) -> tuple[int, int | None]:
+    """``(file count, total bytes)`` of the frame's source from ONE
+    ``inputFiles`` listing and one ``os.stat`` per file; bytes are None
+    when unknown cheaply (derived frame, remote filesystem). Memoized
+    on the frame object, which :func:`ensure_parallelism` hands on to
+    the frame it returns: a describe call lists its source once for
+    the split gate and the windowed-rank gate."""
     import os
     from urllib.parse import unquote, urlparse
 
-    try:
-        files = df.inputFiles()
-        if not files:
-            return None
-        total = 0
-        for f in files:
-            u = urlparse(f)
-            if u.scheme not in ("", "file"):
-                return None
-            total += os.stat(unquote(u.path)).st_size
-        return total
-    except Exception:  # pragma: no cover - advisory metadata probe
-        return None
+    if "_petk_source_listing" not in vars(df):
+        files, total = [], None
+        try:
+            files = df.inputFiles()
+            urls = [urlparse(f) for f in files]
+            if files and all(u.scheme in ("", "file") for u in urls):
+                total = sum(os.stat(unquote(u.path)).st_size for u in urls)
+        except Exception:  # pragma: no cover - advisory metadata probe
+            total = None
+        df._petk_source_listing = (len(files), total)
+    return df._petk_source_listing
+
+
+def source_bytes(df: DataFrame) -> int | None:
+    """Total size of the frame's local source files, or None (see
+    :func:`_source_listing`)."""
+    return _source_listing(df)[1]
 
 
 #: Below this source size the exact-rank path uses one running-count
@@ -998,7 +1005,7 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     exact/mad subtrees via ReuseExchange (one plan), so the shuffle is
     written once.
 
-    The split estimate uses file metadata only (:func:`source_bytes`):
+    The split estimate uses file metadata only (:func:`_source_listing`):
     an ``df.rdd.getNumPartitions()`` probe forces full physical planning
     through py4j — measured ~2 s of driver time per describe call. A
     derived frame or a remote source (size unknown without an FS
@@ -1006,17 +1013,17 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     shuffles or by a cluster-scale scan's many splits."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
+    n_files, total = listing = _source_listing(df)
+    if n_files * 2 > target or total is None:
+        return df  # enough file splits regardless of sizes, or unknown
     try:
-        if len(df.inputFiles()) * 2 > target:
-            return df  # enough file splits regardless of sizes
-        total = source_bytes(df)
-        if total is None:
-            return df
         max_pb = _parse_byte_string(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
         )
         if max(1, -(-total // max_pb)) * 2 <= target:
-            return df.repartition(target)
+            out = df.repartition(target)
+            out._petk_source_listing = listing
+            return out
     except Exception:  # pragma: no cover - heuristic is advisory
         pass
     return df

@@ -98,7 +98,8 @@ def _duck_list(values: list[str]) -> str:
 
 
 def _dot_sql(a: str, b: str) -> str:
-    """Left-fold dot product — operand-ordered to match dedup.cosine_expr."""
+    """Left-fold dot product — the summation order of the cosine kernel
+    (``similarity._fold_cosine``)."""
     return (
         f"list_reduce(list_transform(range(1, len({a})+1), "
         f"i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE), (x, y) -> x + y)"
@@ -113,10 +114,12 @@ def _norm_sql(a: str) -> str:
 
 
 def _cosine_sql(q: str, c: str) -> str:
-    """cosine_expr(qv, cv) twin: dot / (sqrt(Σq²) * sqrt(Σc²)).
-    NULLIF mirrors the Spark side's try_divide — a zero-norm vector's
-    cosine is NULL on both engines, not a DIVIDE_BY_ZERO error (Spark)
-    or NaN (DuckDB)."""
+    """Twin of the cosine kernel (``similarity.cosine_col``): dot /
+    (sqrt(Σq²) * sqrt(Σc²)) in the same left folds. NULLIF mirrors the
+    kernel's NULL on a zero denominator — a zero-norm vector's cosine
+    is NULL on both engines, not NaN (DuckDB). The oracle embeddings
+    hold no non-finite vector, so the kernel's NULL for those needs no
+    twin."""
     return (
         f"({_dot_sql(q, c)} / NULLIF({_norm_sql(q)} * {_norm_sql(c)}, 0.0))"
     )
@@ -2890,16 +2893,12 @@ def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         null_s.alias("k4"),
     )
     cen = _sem_centroids()
-    # sem families run on the vec_id % 5 == 0 subset with the "expr"
-    # strategy: expr is the bit-identical DuckDB-replayable path but
-    # its interpreted fold is ~100× the Arrow matmul, and pinning the
-    # chain needs a sample of cells, not the whole corpus — the full
-    # corpus through the production Arrow path is priced separately
-    # by the semantic_dedup bench entry.
+    # sem families run on the vec_id % 5 == 0 subset: pinning the chain
+    # needs a sample of cells, not the whole corpus — the full corpus
+    # is priced separately by the semantic_dedup bench entry.
     sub = emb.filter(F.col("vec_id") % 5 == 0)
     sp = dedup.semantic_dedup_pairs(
         sub, "vec_id", "embedding", centroids=cen, threshold=0.4,
-        method="expr",
     ).select(
         F.lit("sem_pair").alias("family"),
         F.col("id_a").cast("string").alias("k1"),
@@ -2909,7 +2908,6 @@ def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sk = dedup.semantic_dedup(
         sub, "vec_id", "embedding", centroids=cen, threshold=0.4,
-        method="expr",
     ).select(
         F.lit("sem_kept").alias("family"),
         F.col("vec_id").cast("string").alias("k1"),

@@ -14,15 +14,77 @@ are scored.
 
 from __future__ import annotations
 
-# Module scope: the pandas_udf type-hint resolver evaluates annotations
-# in the function's global namespace (see _rank_udf).
+# Module scope: the pandas_udf / arrow_udf type-hint resolver evaluates
+# annotations in the function's global namespace (see _rank_udf,
+# _cosine_udf).
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
-from petk_spark.operators.dedup import cosine_expr
+
+# ---------------------------------------------------------------------------
+# The one exact cosine kernel
+# ---------------------------------------------------------------------------
+
+def _lfold(terms):
+    """Sum ``terms`` in order starting at 0.0 — the reference left fold
+    (Spark's ``aggregate`` over ``zip_with``, DuckDB's ``list_reduce``)
+    replayed elementwise, so every intermediate and the result equal
+    the fold's bit for bit."""
+    acc = 0.0
+    for t in terms:
+        acc = acc + t
+    return acc
+
+
+def _fold_cosine(X, Y):
+    """Row-wise cosine of row-aligned ``(n, d)`` float64 arrays in the
+    reference left-fold arithmetic (:func:`_lfold` for the dot and each
+    Σv², one sqrt per side, dot / (‖a‖·‖b‖)). NaN (NULL to Spark) where
+    that denominator is 0 or not finite: a zero-norm, NaN or ±Inf side
+    (:func:`_well_formed`'s contract) or an under/overflowing product."""
+    with np.errstate(all="ignore"):  # ill-formed rows are gated below
+        dot = _lfold(x * y for x, y in zip(X.T, Y.T))
+        na = np.sqrt(_lfold(x * x for x in X.T))
+        denom = na * np.sqrt(_lfold(y * y for y in Y.T))
+        return np.where(np.isfinite(denom) & (denom != 0), dot / denom, np.nan)
+
+
+@F.arrow_udf(DoubleType())
+def _cosine_udf(a: pa.Array, b: pa.Array) -> pa.Array:
+    """:func:`_fold_cosine` over two ``list<double>`` arrays, one matrix
+    per row length gathered straight from the offset and value buffers
+    (a NULL element reads as NaN); NULL for NULL, ragged or empty rows
+    and wherever the kernel is NaN."""
+    def rows_of(arr, rows, width):
+        start = np.asarray(arr.offsets)[rows][:, None]
+        return arr.values.to_numpy(zero_copy_only=False)[start + np.arange(width)]
+
+    la, lb = (
+        pc.list_value_length(v).fill_null(-1).to_numpy(zero_copy_only=False)
+        for v in (a, b)
+    )
+    out = np.full(len(a), np.nan)
+    same = (la == lb) & (la > 0)
+    for width in np.unique(la[same]):
+        rows = np.flatnonzero(same & (la == width))
+        out[rows] = _fold_cosine(rows_of(a, rows, width), rows_of(b, rows, width))
+    return pa.array(out, mask=np.isnan(out))
+
+
+def cosine_col(a: Column, b: Column) -> Column:
+    """Cosine similarity of two numeric-array columns: the one exact
+    kernel every pair-scoring path runs (:func:`_cosine_udf`, inputs
+    cast to ``array<double>``, exact for float input). NULL for a NULL
+    array or element, ragged or empty input, and a side whose Σv² is 0
+    or not finite — a NULL cosine never clears a threshold and ranks
+    last in a descending order."""
+    return _cosine_udf(a.cast("array<double>"), b.cast("array<double>"))
 
 
 def cosine_topk(
@@ -49,7 +111,7 @@ def cosine_topk(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
     scored = c.join(F.broadcast(q)).withColumn(
-        "cosine", cosine_expr(F.col("qv"), F.col("cv"))
+        "cosine", cosine_col(F.col("qv"), F.col("cv"))
     )
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
@@ -202,7 +264,7 @@ def cosine_topk_lsh(
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine_expr(F.col("qv"), F.col("cv")))
+        .withColumn("cosine", cosine_col(F.col("qv"), F.col("cv")))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -219,12 +281,13 @@ def cosine_topk_lsh(
 # ---------------------------------------------------------------------------
 
 #: Centroid count up to which centroid ranking runs the fold tier
-#: (:func:`_fold_rank`): ``cosine_expr``'s float64 left folds replayed
-#: bit for bit, so assignment and probing agree with the DuckDB
-#: oracle's replay at k·d numpy passes per batch. Beyond it the matmul
-#: tier (:func:`_matmul_rank`) keeps per-batch CPU to one BLAS product
-#: at 512–4096 centroids. Plan size is O(1) in the centroid count on
-#: both tiers: the centroids travel as one broadcast, not as literals.
+#: (:func:`_fold_rank`): the cosine kernel's float64 left folds
+#: (:func:`_fold_cosine`) replayed bit for bit, so assignment and
+#: probing agree with the DuckDB oracle's replay at k·d numpy passes
+#: per batch. Beyond it the matmul tier (:func:`_matmul_rank`) keeps
+#: per-batch CPU to one BLAS product at 512–4096 centroids. Plan size
+#: is O(1) in the centroid count on both tiers: the centroids travel
+#: as one broadcast, not as literals.
 _IVF_FOLD_MAX = 64
 
 #: (SparkContext id, centroid digest) → Broadcast of the centroid
@@ -240,16 +303,6 @@ _IVF_FOLD_MAX = 64
 #: eviction test pins (round-7 verdict #7: docs now match the code).
 _CENTROID_BC_CACHE: dict = {}
 _CENTROID_BC_CACHE_MAX = 8
-
-
-def _lfold(terms):
-    """Sum ``terms`` in order starting at 0.0 — ``cosine_expr``'s
-    ``F.aggregate`` left fold replayed elementwise, so every
-    intermediate (and the result) equals the JVM's bit for bit."""
-    acc = 0.0
-    for t in terms:
-        acc = acc + t
-    return acc
 
 
 def _centroid_broadcast(spark, centroids: list[list[float]]):
@@ -282,10 +335,10 @@ def _centroid_broadcast(spark, centroids: list[list[float]]):
 
 def _fold_rank(X, payload, n_best: int):
     """Fold tier: ``(ok, order)`` — per row of ``X`` the top-``n_best``
-    centroid ids under ``cosine_expr``'s exact arithmetic (dot and Σv²
-    as left folds in element order, ``try_divide`` → NULL score on a
-    zero denominator), ranked in Spark's descending struct order over
-    ``(score, -id)``: a NaN score first, numbers high to low, a NULL
+    centroid ids under the cosine kernel's exact arithmetic (dot and
+    Σv² as left folds in element order, as in :func:`_fold_cosine`;
+    NULL score on a zero denominator), ranked in Spark's descending
+    struct order over ``(score, -id)``: a NaN score first, numbers high to low, a NULL
     score last, exact ties to the LOWER id. ``ok`` is the
     ``_well_formed`` gate from the same Σv² fold (> 0 and finite; a
     NULL element arrives as NaN and poisons it)."""
@@ -394,8 +447,8 @@ def ivf_assign(
     """Assign each vector to its nearest centroid (max cosine): the
     top-1 of :func:`_ranked_centroids`, one map-only Arrow projection
     with no shuffle. Up to ``_IVF_FOLD_MAX`` centroids the fold tier
-    replays ``cosine_expr`` bit for bit (the DuckDB oracle's left-fold
-    argmax cannot diverge); beyond it the matmul tier runs one BLAS
+    scores in the cosine kernel's left-fold arithmetic bit for bit
+    (the DuckDB oracle's left-fold argmax cannot diverge); beyond it the matmul tier runs one BLAS
     product per batch. Plan size is O(1) in the centroid count.
 
     ONE contract on both tiers (round-7 advisory): malformed vectors —
@@ -495,7 +548,7 @@ def _score_buckets(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
     scored = (
         c.join(F.broadcast(q), "centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine_expr(F.col("qv"), F.col("cv")))
+        .withColumn("cosine", cosine_col(F.col("qv"), F.col("cv")))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -544,17 +597,16 @@ def cosine_topk_ivf(
 def _cell_score_col(spark, centroids: list[list[float]], vec: Column, cid: Column) -> Column:
     """Cosine of each row's vector against ITS ASSIGNED centroid — the
     per-row assignment-quality signal :func:`ivf_index_health` profiles.
-    One Arrow gather-and-dot over the cached centroid payload at any
-    centroid count (map-only, no shuffle, plan size O(1)), in
-    ``cosine_expr``'s left-fold arithmetic. NULL for a NULL or ragged
-    vector and, as ``try_divide``, for members of a zero-norm
-    centroid."""
+    One Arrow gather over the cached centroid payload scored by
+    :func:`_fold_cosine` at any centroid count (map-only, no shuffle,
+    plan size O(1)). NULL for a NULL or ragged vector and, by the
+    kernel's contract, for members of a zero-norm centroid."""
     bc = _centroid_broadcast(spark, centroids)
     dim = len(centroids[0])
 
     @F.pandas_udf("double")
     def cell_score(vs: pd.Series, cids: pd.Series) -> pd.Series:
-        C, nbs, _ = bc.value
+        C = bc.value[0]
         out = np.full(len(vs), np.nan)
         idx = [
             i for i, (v, c) in enumerate(zip(vs, cids))
@@ -563,11 +615,8 @@ def _cell_score_col(spark, centroids: list[list[float]], vec: Column, cid: Colum
         if idx:
             X = np.vstack([np.asarray(vs.iloc[i], dtype=np.float64) for i in idx])
             cid = cids.iloc[idx].to_numpy().astype(np.int64)
-            with np.errstate(all="ignore"):
-                dot = _lfold(x * c for x, c in zip(X.T, C[cid].T))
-                denom = np.sqrt(_lfold(x * x for x in X.T)) * nbs[cid]
-                # NaN leaves through Arrow as NULL
-                out[idx] = np.where(denom == 0.0, np.nan, dot / denom)
+            # NaN leaves through Arrow as NULL
+            out[idx] = _fold_cosine(X, C[cid])
         return pd.Series(out)
 
     return cell_score(vec.cast("array<double>"), cid)

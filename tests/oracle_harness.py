@@ -62,3 +62,33 @@ def compare(spark_df, con, sql: str):
         diff = [(a, b) for a, b in zip(cs, cd) if a != b][:5]
         return False, f"value mismatch, first diffs: {diff}"
     return True, "ok"
+
+
+def cosine_expr(a, b):
+    """Cosine similarity of two float-array columns in double arithmetic,
+    left-to-right summation (matches DuckDB's list_* reducers for oracle
+    stability; formatted through the %.6e contract regardless).
+
+    ``try_divide``, not ``/``: a zero-norm (all-zero) vector makes the
+    denominator 0, and under Spark 4's default ANSI mode a plain divide
+    THROWS — one degenerate embedding in 100 TB would kill the scan.
+    Cosine of a zero vector is undefined → NULL (the oracle twins mirror
+    this with NULLIF on the denominator); NULL-cosine rows rank last /
+    never clear a similarity threshold.
+
+    The interpreted reference fold the library's cosine kernel
+    (``similarity.cosine_col``) is pinned against, bit for bit."""
+    from pyspark.sql import functions as F
+
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    na = F.sqrt(
+        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
+    )
+    nb = F.sqrt(
+        F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
+    )
+    return F.try_divide(dot, na * nb)

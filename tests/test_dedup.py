@@ -3,6 +3,7 @@ banded hyperplane-LSH fallback's precision/recall contract."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from petk_spark.operators.dedup import embedding_near_dup
@@ -278,38 +279,52 @@ def test_semantic_dedup_plan_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_semantic_pairs_arrow_equals_expr(spark):
-    """The production Arrow-BLAS path and the oracle's expr path
-    produce the SAME pair set (fixture scores are far from the
-    threshold, so last-ulp summation differences can't flap it), and
-    cosines agree to float tolerance."""
+def _fold_join_pairs(df, threshold, centroids=_SEM_CENTROIDS) -> dict:
+    """Reference pair set {(cell, id_a, id_b): cosine}: the production
+    cells (``ivf_assign``) self-joined on the cell and scored by the
+    test-side reference fold ``cosine_expr``."""
+    from pyspark.sql import functions as F
+
+    from petk_spark.operators.similarity import ivf_assign
+    from tests.oracle_harness import cosine_expr
+
+    cells = ivf_assign(df, centroids).filter(F.col("centroid_id").isNotNull())
+    x, y = cells.alias("x"), cells.alias("y")
+    return {
+        (r["cell"], r["id_a"], r["id_b"]): r["cosine"]
+        for r in x.join(y, "centroid_id")
+        .filter(F.col("x.id") < F.col("y.id"))
+        .select(
+            F.col("centroid_id").alias("cell"),
+            F.col("x.id").alias("id_a"),
+            F.col("y.id").alias("id_b"),
+            cosine_expr(F.col("x.vec"), F.col("y.vec")).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= threshold)
+        .collect()
+    }
+
+
+def _sem_pairs(df, threshold, **kw) -> dict:
     from petk_spark.operators.dedup import semantic_dedup_pairs
 
-    df = _sem_fixture(spark)
-    ex = {
+    return {
         (r["cell"], r["id_a"], r["id_b"]): r["cosine"]
         for r in semantic_dedup_pairs(
             df, "vec_id", "embedding", centroids=_SEM_CENTROIDS,
-            threshold=0.95, method="expr",
+            threshold=threshold, **kw,
         ).collect()
     }
-    ar = {
-        (r["cell"], r["id_a"], r["id_b"]): r["cosine"]
-        for r in semantic_dedup_pairs(
-            df, "vec_id", "embedding", centroids=_SEM_CENTROIDS,
-            threshold=0.95, method="arrow",
-        ).collect()
-    }
-    assert set(ex) == set(ar)
-    for k in ex:
-        assert abs(ex[k] - ar[k]) < 1e-12
-    import pytest as _pt
 
-    with _pt.raises(ValueError, match="method"):
-        semantic_dedup_pairs(
-            df, "vec_id", "embedding", centroids=_SEM_CENTROIDS,
-            method="blas",
-        )
+
+def test_semantic_pairs_arrow_equals_expr(spark):
+    """The production path (ivf_assign cells, BLAS filter, fold
+    refine) returns the reference fold join's pairs and cosines
+    exactly."""
+    df = _sem_fixture(spark)
+    got = _sem_pairs(df, 0.95)
+    assert got == _fold_join_pairs(df, 0.95)
+    assert {k[1:] for k in got} == {(1, 2), (1, 3), (2, 3), (10, 11)}
 
 
 def test_semantic_pairs_arrow_plan_is_grouped_pandas(spark):
@@ -325,12 +340,10 @@ def test_semantic_pairs_arrow_plan_is_grouped_pandas(spark):
 
 def test_semantic_dedup_hot_cell_fallback(spark):
     """An artificially hot cell (> max_cell_rows) warns and is routed
-    through the distributed expr join; the pair set is identical to
-    the unguarded arrow path and to the pure expr path (round-8
-    verdict #2). Cold cells keep riding the Arrow kernel."""
+    through the distributed cell-keyed join; the pairs and cosines are
+    identical to the unguarded Arrow path and to the reference fold
+    join. Cold cells keep riding the Arrow kernel."""
     import warnings as _w
-
-    from petk_spark.operators.dedup import semantic_dedup_pairs
 
     # hot cell 0: 60 near-identical vectors; cold cell 1: 3 vectors
     rows = [
@@ -342,37 +355,27 @@ def test_semantic_dedup_hot_cell_fallback(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    def pairset(**kw):
-        return {
-            (r["id_a"], r["id_b"])
-            for r in semantic_dedup_pairs(
-                df, "vec_id", "embedding", centroids=_SEM_CENTROIDS,
-                threshold=0.99, **kw,
-            ).collect()
-        }
-
     with _w.catch_warnings(record=True) as caught:
         _w.simplefilter("always")
-        guarded = pairset(max_cell_rows=50)
+        guarded = _sem_pairs(df, 0.99, max_cell_rows=50)
     assert any(
         "max_cell_rows" in str(c.message) for c in caught
     ), "hot-cell routing must warn"
-    unguarded = pairset(max_cell_rows=None)
-    expr = pairset(method="expr")
-    assert guarded == unguarded == expr
-    assert (100, 101) in guarded  # the cold cell's pair survived
+    unguarded = _sem_pairs(df, 0.99, max_cell_rows=None)
+    assert guarded == unguarded == _fold_join_pairs(df, 0.99)
+    assert (1, 100, 101) in guarded  # the cold cell's pair survived
     # and no warning when every cell is under the threshold
     with _w.catch_warnings(record=True) as caught:
         _w.simplefilter("always")
-        pairset(max_cell_rows=1000)
+        _sem_pairs(df, 0.99, max_cell_rows=1000)
     assert not any("max_cell_rows" in str(c.message) for c in caught)
 
 
 def test_semantic_pairs_string_ids(spark):
-    """Non-integer id columns flow through the arrow path (the output
-    schema is derived from the input id type — round-8 advisory) and
-    agree with the expr path."""
-    from petk_spark.operators.dedup import semantic_dedup, semantic_dedup_pairs
+    """Non-integer id columns flow through the Arrow path (the output
+    schema is derived from the input id type) and agree with the
+    reference fold join."""
+    from petk_spark.operators.dedup import semantic_dedup
 
     rows = [
         ("doc-a", [1.0, 0.0, 0.0, 0.0]),
@@ -380,21 +383,9 @@ def test_semantic_pairs_string_ids(spark):
         ("doc-c", [0.0, 1.0, 0.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    ar = {
-        (r["id_a"], r["id_b"])
-        for r in semantic_dedup_pairs(
-            df, "vec_id", "embedding", centroids=_SEM_CENTROIDS,
-            threshold=0.95,
-        ).collect()
-    }
-    ex = {
-        (r["id_a"], r["id_b"])
-        for r in semantic_dedup_pairs(
-            df, "vec_id", "embedding", centroids=_SEM_CENTROIDS,
-            threshold=0.95, method="expr",
-        ).collect()
-    }
-    assert ar == ex == {("doc-a", "doc-b")}
+    got = _sem_pairs(df, 0.95)
+    assert got == _fold_join_pairs(df, 0.95)
+    assert {k[1:] for k in got} == {("doc-a", "doc-b")}
     kept = sorted(
         r["vec_id"]
         for r in semantic_dedup(
@@ -406,29 +397,23 @@ def test_semantic_pairs_string_ids(spark):
 
 
 def test_semantic_pairs_chunked_matmul_equiv(spark, monkeypatch):
-    """Force a tiny matmul block so a single cell spans many blocks:
-    the blocked upper-triangle emission must equal the expr join's
-    pair set exactly (the memory guard can't change results)."""
+    """A cell spanning many filter blocks: the blocked scorer's pairs
+    and cosines equal the reference fold join's exactly (the memory
+    guard can't change results), and so do the production path's."""
     from petk_spark.operators import dedup as _d
 
-    monkeypatch.setattr(_d, "_SEM_MATMUL_BLOCK", 4)
     rows = [(i, [1.0, (i % 7) * 0.002, 0.0, 0.0]) for i in range(30)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    ar = {
-        (r["id_a"], r["id_b"])
-        for r in _d.semantic_dedup_pairs(
-            df, "vec_id", "embedding", centroids=_SEM_CENTROIDS,
-            threshold=0.9999, max_cell_rows=None,
-        ).collect()
-    }
-    ex = {
-        (r["id_a"], r["id_b"])
-        for r in _d.semantic_dedup_pairs(
-            df, "vec_id", "embedding", centroids=_SEM_CENTROIDS,
-            threshold=0.9999, method="expr",
-        ).collect()
-    }
-    assert ar == ex and len(ar) > 10
+    want = _fold_join_pairs(df, 0.9999)
+    assert len(want) > 10 and {k[0] for k in want} == {0}
+    assert _sem_pairs(df, 0.9999, max_cell_rows=None) == want
+    monkeypatch.setattr(_d, "_MATMUL_BLOCK", 4)
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    X = np.array([r[1] for r in rows])
+    i, j, c = _d._cosine_pairs(ids, X, ids, X, 0.9999)
+    assert {
+        (0, int(ids[a]), int(ids[b])): v for a, b, v in zip(i, j, c)
+    } == want
 
 
 def test_filter_previously_seen(spark):

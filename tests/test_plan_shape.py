@@ -280,3 +280,32 @@ def test_ensure_parallelism_leaves_remote_source_unplanned(spark, monkeypatch):
     monkeypatch.setattr(cls, "rdd", property(lambda self: reads.append(1)))
     assert ensure_parallelism(df) is df
     assert reads == []
+
+
+def test_exact_describe_lists_source_once(spark, monkeypatch):
+    """One exact describe reads its source's file metadata once: one
+    ``inputFiles`` listing and one ``os.stat`` per file feed the split
+    gate, the source size and the windowed-rank gate (three listings
+    and two stats of each file before)."""
+    import os
+
+    df = spark.read.parquet(f"{SF}/lineitem.parquet")
+    files = set(df.inputFiles())
+    listings, stats = [], []
+    cls = type(df)
+    real_list, real_stat = cls.inputFiles, os.stat
+
+    def counted_list(self):
+        listings.append(1)
+        return real_list(self)
+
+    def counted_stat(path, *a, **kw):
+        if any(f.endswith(str(path)) for f in files):
+            stats.append(path)
+        return real_stat(path, *a, **kw)
+
+    monkeypatch.setattr(cls, "inputFiles", counted_list)
+    monkeypatch.setattr(os, "stat", counted_stat)
+    describe_frame(df, exact=True)
+    assert len(listings) == 1
+    assert len(stats) == len(files)

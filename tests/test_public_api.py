@@ -2,21 +2,22 @@
 signatures. An operator ships one kernel; a second implementation
 kept only for comparison belongs in its test module as a reference.
 The allow-list names the operators whose switch a production caller
-still needs (bit-parity expr joins, the long-chain components loop,
-the size-probed bigram tier)."""
+still needs (the long-chain components loop, the size-probed bigram
+tier)."""
 
 from __future__ import annotations
 
+import ast
 import importlib
 import inspect
+import pathlib
 import pkgutil
 
+import petk_spark
 import petk_spark.operators as operators
 
 SWITCHES = {"method", "rank_strategy", "algorithm", "tier"}
 ALLOWED = {
-    "semantic_dedup",
-    "semantic_dedup_pairs",
     "connected_components",
     "near_dup_clusters",
     "bigram_bits_per_token",
@@ -38,4 +39,26 @@ def test_no_strategy_switch_outside_allow_list():
             hit = SWITCHES & set(inspect.signature(fn).parameters)
             if hit:
                 found.append(f"{mod.__name__}.{name}: {sorted(hit)}")
+    assert not found, found
+
+
+def test_reference_cosine_fold_lives_in_tests_only():
+    """Every library scoring path runs the one cosine kernel
+    (``similarity.cosine_col``); the interpreted reference fold
+    ``cosine_expr`` is test-side only (``tests/oracle_harness.py``)."""
+    found = []
+    for path in pathlib.Path(petk_spark.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                names = [a.asname or a.name.rsplit(".", 1)[-1] for a in node.names]
+            elif isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            else:
+                continue
+            if "cosine_expr" in names:
+                found.append(f"{path.name}:{node.lineno}")
     assert not found, found

@@ -237,8 +237,8 @@ def _literal_rank(vec_col: str, cents, n: int):
     descending walk puts a NaN score first, a NULL score last and exact
     ties on the LOWER id, gated by ``_well_formed`` (NULL for a
     malformed vector)."""
-    from petk_spark.operators.dedup import cosine_expr
     from petk_spark.operators.similarity import _well_formed
+    from tests.oracle_harness import cosine_expr
 
     entries = [
         F.struct(
