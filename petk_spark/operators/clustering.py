@@ -54,7 +54,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from petk_spark.operators.similarity import _well_formed, ivf_assign
+from petk_spark.operators.similarity import (
+    _assigned_rows,
+    _well_formed,
+    ivf_assign,
+)
 
 __all__ = ["kmeans_fit", "kmeans_assign", "deterministic_init"]
 
@@ -185,7 +189,7 @@ def kmeans_fit(
     sizes: list[int] = [0] * len(cents)
     n_assigned = 0
     for _ in range(max(0, iterations)):
-        asg = ivf_assign(df, cents, id_col=id_col, vec_col=vec_col)
+        asg = _assigned_rows(df, cents, id_col, vec_col)
         stats = _centroid_stats(asg).collect()
         sums: dict[tuple[int, int], float] = {}
         counts: dict[int, int] = {}

@@ -38,12 +38,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from petk_spark.operators.similarity import (
+    _assigned_rows,
     _fold_cosine,
     _lfold,
     cosine_col,
     deterministic_planes,
     hyperplane_signature,
-    ivf_assign,
     sample_centroids,
 )
 
@@ -1041,12 +1041,12 @@ def semantic_dedup_pairs(
     ``(cell, id_a, id_b, cosine)`` for same-cell pairs with
     ``cosine ≥ threshold`` and ``id_a < id_b``.
 
-    Scale design: assignment is :func:`ivf_assign`, a map-only Arrow
-    projection; the within-cell compare shuffles the assigned frame
-    once on the cell id and scores each cell with
-    :func:`_semantic_pairs_arrow`. Size ``n_centroids`` ∝
-    N/target_cell_size so cells stay bounded (the published recipe:
-    √N-ish cells). Malformed vectors (NULL centroid) can't be compared
+    Scale design: assignment is :func:`ivf_assign`'s kernel, a map-only
+    Arrow projection that also drops the unassignable rows; the
+    within-cell compare shuffles the assigned frame once on the cell id
+    and scores each cell with :func:`_semantic_pairs_arrow`. Size
+    ``n_centroids`` ∝ N/target_cell_size so cells stay bounded (the
+    published recipe: √N-ish cells). Malformed vectors (NULL centroid) can't be compared
     and never pair.
 
     Hot cells: a cell is ONE ``applyInPandas`` group, an unsplittable
@@ -1070,9 +1070,7 @@ def semantic_dedup_pairs(
 
     if centroids is None:
         centroids = sample_centroids(df, n_centroids, vec_col, id_col)
-    assigned = ivf_assign(df, centroids, id_col, vec_col).filter(
-        F.col("centroid_id").isNotNull()
-    )
+    assigned = _assigned_rows(df, centroids, id_col, vec_col)
     if max_cell_rows is not None:
         sizes = assigned.groupBy("centroid_id").agg(
             F.count(F.lit(1)).alias("n")

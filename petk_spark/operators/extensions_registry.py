@@ -1915,40 +1915,28 @@ def _q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the jaccard near-dup pair graph: the
     production dedup primitive — (doc_id, cluster_id) with cluster_id =
     min id of the transitive near-dup closure; singletons map to
-    themselves. BOTH algorithms run under the oracle (round 5): min-
-    label propagation (O(diameter) rounds) and alternating large-/
-    small-star (Kiveris et al., O(log n) rounds — the long-chain scale
-    path). They converge to the identical unique fixpoint, which the
-    oracle replays twice with a recursive CTE — so the star variant is
-    hash-checked row-for-row, not just property-tested against label."""
-    from petk_spark.operators.components import near_dup_clusters
+    themselves. BOTH tiers run under the oracle, one after the other:
+    the public ``near_dup_clusters`` (tag ``small``: the fixture graph
+    is far below ``_SMALL_GRAPH_EDGES``, so one union-find task) and
+    the large-star/small-star loop called directly (tag ``star``, the
+    tier of graphs above the gate). Their partition is unique, which
+    the oracle replays twice with a recursive CTE — so the star loop is
+    hash-checked row-for-row, not just property-tested."""
+    from petk_spark.operators import components
 
     df = read_table(spark, sf_dir, "documents")
-    # one materialization of the pair graph shared by both algorithm
-    # branches (each is iterative — recomputing the shingle join per
-    # branch would double the dominant cost)
+    # one materialization of the pair graph shared by both tiers
     pairs = dedup.jaccard_near_dup(
         df, "doc_id", "text", n=3, threshold=0.1
     ).localCheckpoint()
-    # The two fixpoint loops are INDEPENDENT iterative computations
-    # over the same (already materialized) pair graph, each a chain of
-    # small latency-bound rounds — running them from a 2-thread pool
-    # overlaps their driver round-trips and stage barriers instead of
-    # paying the two latency chains back to back (guide §2.6 overlap
-    # independent jobs; results and union order are unchanged — each
-    # loop reaches its unique fixpoint regardless of scheduling).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _run(algo: str) -> DataFrame:
-        return near_dup_clusters(df, pairs, "doc_id", algorithm=algo).select(
-            F.lit(algo).alias("algo"),
-            F.col("id").alias("doc_id"),
-            "cluster_id",
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        out = list(pool.map(_run, ("label", "star")))
-    return out[0].unionAll(out[1])
+    small = components.near_dup_clusters(df, pairs, "doc_id")
+    star = components._star_components(
+        *components._graph(df, pairs, "doc_id", "id_a", "id_b"),
+        max_iterations=25,
+    )
+    return small.select(F.lit("small").alias("algo"), "*").unionAll(
+        star.select(F.lit("star").alias("algo"), "*")
+    ).withColumnRenamed("id", "doc_id")
 
 
 def _q_dedup_near_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1989,10 +1977,10 @@ reach(id, lbl) AS (
 SELECT id AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY 1
 """
 
-#: Both Spark algorithms converge to the same unique fixpoint, so the
-#: oracle is the recursive closure replayed once per algo tag.
+#: Both Spark tiers return the same unique partition, so the oracle is
+#: the recursive closure replayed once per tier tag.
 _SQL_NEAR_DUP_CLUSTERS = f"""
-SELECT 'label' AS algo, doc_id, cluster_id
+SELECT 'small' AS algo, doc_id, cluster_id
 FROM ({_SQL_NEAR_DUP_CLUSTERS_ONE})
 UNION ALL
 SELECT 'star', doc_id, cluster_id
@@ -2189,10 +2177,10 @@ def _q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("string").alias("k3"),
         fmt_sci(F.col("logp")).alias("k4"),
     )
-    # tier="closure": the fixture model (vocab_size=30) is a few
-    # hundred observed pairs; the auto probe would add a bench job.
+    # The fixture model (vocab_size=30) is a few hundred observed
+    # pairs, so the size probe (one bounded job) picks the closure tier.
     sc2 = lm_mod.bigram_bits_per_token(
-        df, "doc_id", "text", bi, ctxf, tier="closure"
+        df, "doc_id", "text", bi, ctxf
     ).select(
         F.lit("lm2_score").alias("family"),
         F.col("id").cast("string").alias("k1"),

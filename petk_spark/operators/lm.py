@@ -430,7 +430,6 @@ def bigram_bits_per_token(
     bigrams: DataFrame,
     contexts: DataFrame,
     max_closure_rows: int = 2_000_000,
-    tier: str = "auto",
     split_cjk: bool = False,
 ) -> DataFrame:
     """Score documents against a trained bigram model:
@@ -458,16 +457,10 @@ def bigram_bits_per_token(
       the fmt contract absorbs it in practice but bit-for-bit
       equality is only guaranteed by the closure tier.
 
-    ``tier="auto"`` probes ``bigrams.limit(max_closure_rows+1)``
-    (one bounded job) and picks; pass ``tier="closure"`` /
-    ``tier="join"`` to skip the probe when the caller already knows
-    the model size (the registry twin passes "closure": its fixture
-    model is ≤ a few thousand pairs and the probe job would be an
-    undeclared bench reshape)."""
-    if tier == "auto":
-        probed = bigrams.limit(max_closure_rows + 1).count()
-        tier = "join" if probed > max_closure_rows else "closure"
-    if tier == "join":
+    The tier is picked by one bounded probe job,
+    ``bigrams.limit(max_closure_rows + 1).count()``;
+    ``max_closure_rows=0`` always takes the join tier."""
+    if bigrams.limit(max_closure_rows + 1).count() > max_closure_rows:
         return _bigram_bits_join(
             df, id_col, text_col, bigrams, contexts, split_cjk
         )

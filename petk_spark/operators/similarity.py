@@ -471,6 +471,21 @@ def ivf_assign(
     )
 
 
+def _assigned_rows(
+    df: DataFrame, centroids: list[list[float]], id_col: str, vec_col: str
+) -> DataFrame:
+    """:func:`ivf_assign` without its unassignable (NULL-cell) rows: the
+    one-probe :func:`_probe_frame`, whose ``explode`` drops them inside
+    the kernel's projection. A ``centroid_id IS NOT NULL`` filter over
+    :func:`ivf_assign` instead is pushed below that projection, which
+    then plans the ranking kernel twice."""
+    if not centroids:
+        return ivf_assign(df, centroids, id_col, vec_col)
+    return _probe_frame(df, centroids, 1, id_col, vec_col).toDF(
+        "id", "vec", "centroid_id"
+    )
+
+
 def sample_centroids(
     df: DataFrame,
     n_centroids: int,

@@ -138,12 +138,13 @@ def test_bigram_scoring_cjk_both_tiers(spark):
     assert stats["n_total"] == 2 * len(ZH) + len(JA)
     closure = {
         r["id"]: r for r in bigram_bits_per_token(
-            df, "doc_id", "text", bi, ctx, tier="closure", split_cjk=True
+            df, "doc_id", "text", bi, ctx, split_cjk=True
         ).collect()
     }
     joined = {
         r["id"]: r for r in bigram_bits_per_token(
-            df, "doc_id", "text", bi, ctx, tier="join", split_cjk=True
+            df, "doc_id", "text", bi, ctx, max_closure_rows=0,
+            split_cjk=True
         ).collect()
     }
     for k in closure:

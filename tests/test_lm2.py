@@ -113,12 +113,12 @@ def test_join_tier_matches_closure(model, spark):
     )
     closure = {
         r["id"]: r for r in bigram_bits_per_token(
-            probe, "doc_id", "text", bi, ctx, tier="closure"
+            probe, "doc_id", "text", bi, ctx
         ).collect()
     }
     joined = {
         r["id"]: r for r in bigram_bits_per_token(
-            probe, "doc_id", "text", bi, ctx, tier="join"
+            probe, "doc_id", "text", bi, ctx, max_closure_rows=0
         ).collect()
     }
     assert set(joined) == set(closure) == {0, 1, 7, 9}

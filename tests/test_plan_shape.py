@@ -309,3 +309,36 @@ def test_exact_describe_lists_source_once(spark, monkeypatch):
     describe_frame(df, exact=True)
     assert len(listings) == 1
     assert len(stats) == len(files)
+
+
+def test_nearest_centroid_kernel_planned_once(spark, monkeypatch):
+    """Semantic dedup and the k-means update drop unassignable rows
+    inside the ranking kernel's projection. A NULL filter over
+    ``ivf_assign`` is pushed below that projection and plans the kernel
+    twice (two ``ArrowEvalPython`` nodes over the same vector)."""
+    import re
+
+    from petk_spark.operators import clustering
+    from petk_spark.operators.dedup import semantic_dedup_pairs
+    from petk_spark.plans.inspect import executed_plan
+
+    def n_kernels(df):
+        return len(set(re.findall(r"\((\d+)\) ArrowEvalPython", executed_plan(df))))
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    cents = [list(map(float, r["embedding"]))
+             for r in emb.orderBy("vec_id").limit(3).collect()]
+    pairs = semantic_dedup_pairs(
+        emb, "vec_id", "embedding", centroids=cents, threshold=0.9,
+        max_cell_rows=None,
+    )
+    assert n_kernels(pairs) == 1
+
+    seen = []
+    stats = clustering._centroid_stats
+    monkeypatch.setattr(
+        clustering, "_centroid_stats",
+        lambda asg: seen.append(n_kernels(stats(asg))) or stats(asg),
+    )
+    clustering.kmeans_fit(emb, 3, iterations=1)
+    assert seen == [1]

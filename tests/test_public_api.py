@@ -1,9 +1,8 @@
 """Public-API guard: physical-strategy switches stay off the operator
-signatures. An operator ships one kernel; a second implementation
-kept only for comparison belongs in its test module as a reference.
-The allow-list names the operators whose switch a production caller
-still needs (the long-chain components loop, the size-probed bigram
-tier)."""
+signatures. No public operator carries one: an operator ships one
+kernel, and where it has tiers, a measured size picks them. A second
+implementation kept only for comparison belongs in its test module as
+a reference."""
 
 from __future__ import annotations
 
@@ -17,14 +16,9 @@ import petk_spark
 import petk_spark.operators as operators
 
 SWITCHES = {"method", "rank_strategy", "algorithm", "tier"}
-ALLOWED = {
-    "connected_components",
-    "near_dup_clusters",
-    "bigram_bits_per_token",
-}
 
 
-def test_no_strategy_switch_outside_allow_list():
+def test_no_strategy_switch_on_public_operators():
     found = []
     for info in pkgutil.iter_modules(operators.__path__):
         mod = importlib.import_module(f"{operators.__name__}.{info.name}")
@@ -33,7 +27,6 @@ def test_no_strategy_switch_outside_allow_list():
                 name.startswith("_")
                 or not inspect.isfunction(fn)
                 or fn.__module__ != mod.__name__
-                or name in ALLOWED
             ):
                 continue
             hit = SWITCHES & set(inspect.signature(fn).parameters)
