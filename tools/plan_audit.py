@@ -15,8 +15,9 @@ reports the physical-plan signature Catalyst produced:
               deliberate shuffle-pair, listed so none hides)
   cartesian   cartesian products (must be 0 outside broadcast-1-row)
   wscg        whole-stage-codegen spans (JVM-compiled operators)
-  python      ArrowEvalPython / mapInPandas stages (Arrow-batched
-              Python — the declared kernels only)
+  python      Arrow-batched Python nodes (ArrowEvalPython, MapInPandas,
+              MapInArrow, FlatMapGroupsInPandas, FlatMapGroupsInArrow;
+              distinct nodes) — the declared kernels only
 
 Usage: python tools/plan_audit.py [sf_dir] [--markdown]
 """
@@ -63,7 +64,9 @@ def audit(df, execute: bool = False) -> dict:
         # formatted mode tags each node with `[codegen id : N]`;
         # `WholeStageCodegen (N)` only appears in simple-mode output
         "wscg": len(set(re.findall(r"\[codegen id : (\d+)\]", plan))),
-        "python": len(re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas)", plan)),
+        "python": len(set(re.findall(
+            r"\((\d+)\) (?:ArrowEvalPython|MapIn(?:Pandas|Arrow)"
+            r"|FlatMapGroupsIn(?:Pandas|Arrow))\b", plan))),
     }
 
 
