@@ -33,6 +33,7 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -41,6 +42,7 @@ from petk_spark.operators.similarity import (
     _assigned_rows,
     _fold_cosine,
     _lfold,
+    _vectors,
     cosine_col,
     deterministic_planes,
     hyperplane_signature,
@@ -841,40 +843,34 @@ def embedding_near_dup(
         return embedding_near_dup_lsh(df, id_col, vec_col, threshold)
 
     # NULL embeddings pair with nothing; vectors whose length disagrees
-    # with the corpus dimension are likewise excluded instead of
-    # crashing the ragged numpy stack — one malformed row in 100 TB
-    # must not kill the job.
-    df = df.filter(F.col(vec_col).isNotNull())
-    rows = df.select(id_col, vec_col).collect()
-    if not rows:
+    # with the first row's are likewise left out (by the reader) instead
+    # of crashing the job — one malformed row in 100 TB must not kill it.
+    df = df.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).cast("long"), F.col(vec_col).cast("array<double>")
+    )
+    side = df.toArrow()
+    if not side.num_rows:
         return df.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine double"
         )
-    dim = len(rows[0][1])
-    rows = [r for r in rows if len(r[1]) == dim]
-    b_rows = df.sparkSession.sparkContext.broadcast((
-        np.array([r[0] for r in rows], dtype=np.int64),
-        np.array([r[1] for r in rows], dtype=np.float64).reshape(-1, dim),
-    ))
+    dim = len(side.column(1)[0])
+    rows, all_x = _vectors(side.column(1), dim)
+    b_rows = df.sparkSession.sparkContext.broadcast(
+        (side.column(0).to_numpy()[rows], all_x)
+    )
 
     def run(batches):
         all_ids, all_x = b_rows.value
-        for pdf in batches:
-            pdf = pdf[[v is not None and len(v) == dim for v in pdf[vec_col]]]
-            if pdf.empty:
-                continue
-            bx = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            ).reshape(-1, dim)
-            bids = pdf[id_col].to_numpy(dtype=np.int64)
+        for batch in batches:
+            rows, bx = _vectors(batch.column(1), dim)
+            bids = batch.column(0).to_numpy()[rows]
             i, j, c = _cosine_pairs(bids, bx, all_ids, all_x, threshold)
-            yield pd.DataFrame(
-                {"id_a": bids[i], "id_b": all_ids[j], "cosine": c}
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(bids[i]), pa.array(all_ids[j]), pa.array(c)],
+                names=["id_a", "id_b", "cosine"],
             )
 
-    return df.select(id_col, vec_col).mapInPandas(
-        run, schema="id_a long, id_b long, cosine double"
-    )
+    return df.mapInArrow(run, schema="id_a long, id_b long, cosine double")
 
 
 def embedding_near_dup_lsh(
@@ -968,7 +964,7 @@ def embedding_near_dup_lsh(
 def _semantic_pairs_arrow(
     assigned: DataFrame, threshold: float
 ) -> DataFrame:
-    """Within-cell pair scoring, one ``applyInPandas`` group per cell:
+    """Within-cell pair scoring, one ``applyInArrow`` group per cell:
     :func:`_cosine_pairs` of the cell against itself — BLAS filter in
     row blocks of ``_MATMUL_BLOCK`` (peak memory O(block × cell), not
     O(cell²)), fold-kernel refine of the candidates, so the pair set
@@ -982,20 +978,23 @@ def _semantic_pairs_arrow(
     cell_t = assigned.schema["centroid_id"].dataType.simpleString()
     schema = f"cell {cell_t}, id_a {id_t}, id_b {id_t}, cosine double"
 
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
-        ids = pdf["id"].to_numpy()
-        i, j, c = _cosine_pairs(ids, X, ids, X, threshold)
-        return pd.DataFrame(
-            {
-                "cell": pdf["centroid_id"].iloc[0],
-                "id_a": ids[i],
-                "id_b": ids[j],
-                "cosine": c,
-            }
-        )
+    def score(cell: pa.Table) -> pa.Table:
+        # every row of a cell was assigned, so has the centroid length
+        vecs = cell.column("vec")
+        X = _vectors(vecs, len(vecs[0]))[1]
+        ids = cell.column("id")
+        np_ids = ids.to_numpy()
+        i, j, c = _cosine_pairs(np_ids, X, np_ids, X, threshold)
+        return pa.table({
+            "cell": cell.column("centroid_id").take(np.zeros(len(i), np.int64)),
+            "id_a": ids.take(i),
+            "id_b": ids.take(j),
+            "cosine": c,
+        })
 
-    return assigned.groupBy("centroid_id").applyInPandas(score, schema)
+    return assigned.select(
+        "centroid_id", "id", F.col("vec").cast("array<double>")
+    ).groupBy("centroid_id").applyInArrow(score, schema)
 
 
 def _semantic_pairs_join(assigned: DataFrame, threshold: float) -> DataFrame:
@@ -1030,7 +1029,7 @@ def semantic_dedup_pairs(
     centroids: list[list[float]] | None = None,
     n_centroids: int = 64,
     threshold: float = 0.95,
-    max_cell_rows: int | None = 100_000,
+    max_cell_rows: int = 100_000,
 ) -> DataFrame:
     """Semantic near-duplicate candidate pairs, SemDeDup-style
     (Abbas et al. 2023, arXiv:2303.09540): cluster every vector to its
@@ -1049,7 +1048,7 @@ def semantic_dedup_pairs(
     published recipe: √N-ish cells). Malformed vectors (NULL centroid) can't be compared
     and never pair.
 
-    Hot cells: a cell is ONE ``applyInPandas`` group, an unsplittable
+    Hot cells: a cell is ONE ``applyInArrow`` group, an unsplittable
     task whose pair compute is O(cell²). The guard is
     ``max_cell_rows`` (default 100k): a cheap pre-count of cell sizes
     (one map-side-combined aggregate over the assignment projection,
@@ -1058,9 +1057,7 @@ def semantic_dedup_pairs(
     AQE-splittable across the cluster) and warns, because a hot cell
     really means ``n_centroids`` is undersized for the corpus. Both
     routes score with the one cosine kernel, so they return the same
-    pairs and cosines. Set ``max_cell_rows=None`` to skip the
-    pre-count (and its extra assignment pass) when the sizing contract
-    is already enforced upstream.
+    pairs and cosines.
 
     Pass ``centroids`` explicitly for cross-run reproducibility (e.g.
     the stored sidecar of a built IVF index, or fixed literals as the
@@ -1071,32 +1068,31 @@ def semantic_dedup_pairs(
     if centroids is None:
         centroids = sample_centroids(df, n_centroids, vec_col, id_col)
     assigned = _assigned_rows(df, centroids, id_col, vec_col)
-    if max_cell_rows is not None:
-        sizes = assigned.groupBy("centroid_id").agg(
-            F.count(F.lit(1)).alias("n")
+    sizes = assigned.groupBy("centroid_id").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    hot = [
+        r["centroid_id"]
+        for r in sizes.filter(F.col("n") > F.lit(max_cell_rows)).collect()
+    ]
+    if hot:
+        warnings.warn(
+            f"semantic_dedup_pairs: {len(hot)} cell(s) exceed "
+            f"max_cell_rows={max_cell_rows} — routing them "
+            "through the distributed join. A hot cell "
+            "means n_centroids is undersized for this corpus "
+            "(target ~sqrt(N) cells); consider retraining "
+            "with more centroids.",
+            RuntimeWarning,
+            stacklevel=2,
         )
-        hot = [
-            r["centroid_id"]
-            for r in sizes.filter(F.col("n") > F.lit(max_cell_rows)).collect()
-        ]
-        if hot:
-            warnings.warn(
-                f"semantic_dedup_pairs: {len(hot)} cell(s) exceed "
-                f"max_cell_rows={max_cell_rows} — routing them "
-                "through the distributed join. A hot cell "
-                "means n_centroids is undersized for this corpus "
-                "(target ~sqrt(N) cells); consider retraining "
-                "with more centroids.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            cold = _semantic_pairs_arrow(
-                assigned.filter(~F.col("centroid_id").isin(hot)), threshold
-            )
-            hot_pairs = _semantic_pairs_join(
-                assigned.filter(F.col("centroid_id").isin(hot)), threshold
-            )
-            return cold.unionByName(hot_pairs)
+        cold = _semantic_pairs_arrow(
+            assigned.filter(~F.col("centroid_id").isin(hot)), threshold
+        )
+        hot_pairs = _semantic_pairs_join(
+            assigned.filter(F.col("centroid_id").isin(hot)), threshold
+        )
+        return cold.unionByName(hot_pairs)
     return _semantic_pairs_arrow(assigned, threshold)
 
 
@@ -1107,7 +1103,7 @@ def semantic_dedup(
     centroids: list[list[float]] | None = None,
     n_centroids: int = 64,
     threshold: float = 0.95,
-    max_cell_rows: int | None = 100_000,
+    max_cell_rows: int = 100_000,
 ) -> DataFrame:
     """Rows surviving semantic dedup: drop a row iff its cell holds a
     LOWER-id row within ``threshold`` cosine — the deterministic

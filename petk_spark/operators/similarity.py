@@ -14,11 +14,10 @@ are scored.
 
 from __future__ import annotations
 
-# Module scope: the pandas_udf / arrow_udf type-hint resolver evaluates
-# annotations in the function's global namespace (see _rank_udf,
-# _cosine_udf).
+# Module scope: the arrow_udf type-hint resolver evaluates annotations
+# in the function's global namespace (see _cosine_udf, _rank_udf,
+# _cell_score_col).
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -55,25 +54,39 @@ def _fold_cosine(X, Y):
         return np.where(np.isfinite(denom) & (denom != 0), dot / denom, np.nan)
 
 
+def _lengths(arr) -> np.ndarray:
+    """Per-row list length of ``arr``, -1 for a NULL list."""
+    return pc.list_value_length(arr).fill_null(-1).to_numpy(zero_copy_only=False)
+
+
+def _vectors(arr, dim: int):
+    """``(rows, X)``: the positions of the length-``dim`` rows of a
+    ``list<double>`` Array or ChunkedArray and their values as one
+    ``(len(rows), dim)`` float64 matrix, gathered straight from the
+    offset and value buffers — the one reader every embedding kernel
+    turns a vector column into a matrix with. Offsets are absolute into
+    the values buffer, so slices read right; NULL lists and rows of
+    another length are left out, and a NULL element reads as NaN."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    rows = np.flatnonzero(_lengths(arr) == dim)
+    start = np.asarray(arr.offsets)[rows][:, None]
+    return rows, arr.values.to_numpy(zero_copy_only=False)[start + np.arange(dim)]
+
+
 @F.arrow_udf(DoubleType())
 def _cosine_udf(a: pa.Array, b: pa.Array) -> pa.Array:
-    """:func:`_fold_cosine` over two ``list<double>`` arrays, one matrix
-    per row length gathered straight from the offset and value buffers
-    (a NULL element reads as NaN); NULL for NULL, ragged or empty rows
-    and wherever the kernel is NaN."""
-    def rows_of(arr, rows, width):
-        start = np.asarray(arr.offsets)[rows][:, None]
-        return arr.values.to_numpy(zero_copy_only=False)[start + np.arange(width)]
-
-    la, lb = (
-        pc.list_value_length(v).fill_null(-1).to_numpy(zero_copy_only=False)
-        for v in (a, b)
-    )
+    """:func:`_fold_cosine` over two ``list<double>`` arrays, one
+    :func:`_vectors` matrix per side and row length; NULL for NULL,
+    ragged or empty rows and wherever the kernel is NaN."""
+    la = _lengths(a)
     out = np.full(len(a), np.nan)
-    same = (la == lb) & (la > 0)
-    for width in np.unique(la[same]):
-        rows = np.flatnonzero(same & (la == width))
-        out[rows] = _fold_cosine(rows_of(a, rows, width), rows_of(b, rows, width))
+    for width in np.unique(la[la > 0]):
+        ra, XA = _vectors(a, width)
+        rb, XB = _vectors(b, width)
+        # both row lists ascend, so the shared rows line up
+        ka, kb = np.isin(ra, rb), np.isin(rb, ra)
+        out[ra[ka]] = _fold_cosine(XA[ka], XB[kb])
     return pa.array(out, mask=np.isnan(out))
 
 
@@ -85,6 +98,21 @@ def cosine_col(a: Column, b: Column) -> Column:
     or not finite — a NULL cosine never clears a threshold and ranks
     last in a descending order."""
     return _cosine_udf(a.cast("array<double>"), b.cast("array<double>"))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best ``(query_id, neighbor_id, cosine)`` rows per query
+    with their ``rank``: a window per query ordered by (cosine desc,
+    neighbor_id asc) — the id tiebreak makes the result deterministic
+    and oracle-hashable — shared by every top-k search."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
 
 
 def cosine_topk(
@@ -99,9 +127,7 @@ def cosine_topk(
     """Exact top-k cosine neighbors for every query vector.
 
     Returns (query_id, neighbor_id, cosine, rank). The query side is
-    broadcast; ranking is a window per query ordered by
-    (cosine desc, neighbor_id asc) — the id tiebreak makes the result
-    deterministic and oracle-hashable.
+    broadcast; ranking is :func:`_top_k`.
     """
     query_id_col = query_id_col or id_col
     q = queries.select(
@@ -115,14 +141,7 @@ def cosine_topk(
     )
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -173,47 +192,32 @@ def _sql_double(v: float) -> str:
     return f"CAST('{v!r}' AS DOUBLE)"
 
 
-def hyperplane_signature(
-    vec: Column | str, planes: list[list[float]]
-) -> Column:
-    """Sign-bit signature of ``vec`` against fixed hyperplanes → BIGINT
-    bucket id. Planes are literals folded into the plan (deterministic,
-    no model state).
+def hyperplane_signature(vec: str, planes: list[list[float]]) -> Column:
+    """Sign-bit signature of the array column named ``vec`` against
+    fixed hyperplanes → BIGINT bucket id. Planes are literals folded
+    into the plan (deterministic, no model state).
 
-    ``vec`` as a column NAME builds the whole signature as ONE parsed
-    SQL expression — the previous per-element ``F.lit`` build cost
-    n_planes × dim py4j round trips (~0.7 s per call at 6×64, measured
-    r16: most of cosine_topk_lsh's wall was plan construction). The
-    parsed text constant-folds to the identical literals (repr
-    round-trip + correctly-rounded string→double cast) and the same
-    fold/compare expressions, so bucket ids are bit-identical — pinned
-    by test_lsh_signature_text_equals_column. A Column argument keeps
-    the original builder for arbitrary expressions."""
-    if isinstance(vec, str):
-        vec_sql = f"`{vec}`"
-        sig = "CAST(0 AS BIGINT)"
-        for i, plane in enumerate(planes):
-            arr = "array(" + ", ".join(_sql_double(x) for x in plane) + ")"
-            dot = (
-                f"aggregate(zip_with({vec_sql}, {arr},"
-                f" (a, b) -> CAST(a AS DOUBLE) * b),"
-                f" CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-            )
-            sig = (
-                f"({sig} + (CASE WHEN {dot} >= 0"
-                f" THEN CAST({1 << i} AS BIGINT) ELSE 0 END))"
-            )
-        return F.expr(sig)
-    sig = F.lit(0).cast("long")
+    The whole signature is ONE parsed SQL expression — a per-element
+    ``F.lit`` build cost n_planes × dim py4j round trips (~0.7 s per
+    call at 6×64, measured r16: most of cosine_topk_lsh's wall was plan
+    construction). The parsed text constant-folds to the same literals
+    (repr round-trip + correctly-rounded string→double cast) and
+    fold/compare expressions, so bucket ids are bit-identical to the
+    Column-built form — pinned by test_lsh_signature_text_equals_column."""
+    vec_sql = f"`{vec}`"
+    sig = "CAST(0 AS BIGINT)"
     for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(vec, arr, lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+        arr = "array(" + ", ".join(_sql_double(x) for x in plane) + ")"
+        dot = (
+            f"aggregate(zip_with({vec_sql}, {arr},"
+            f" (a, b) -> CAST(a AS DOUBLE) * b),"
+            f" CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
         )
-        sig = sig + F.when(dot >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-    return sig
+        sig = (
+            f"({sig} + (CASE WHEN {dot} >= 0"
+            f" THEN CAST({1 << i} AS BIGINT) ELSE 0 END))"
+        )
+    return F.expr(sig)
 
 
 def deterministic_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -266,14 +270,7 @@ def cosine_topk_lsh(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", cosine_col(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -371,9 +368,11 @@ def _matmul_rank(X, payload, n_best: int):
 def _rank_udf(spark, centroids: list[list[float]], n_best: int, rank):
     """Arrow-batched ``array<int>`` UDF: each vector's top-``n_best``
     centroid ids from ``rank`` (:func:`_fold_rank` or
-    :func:`_matmul_rank`); NULL for a NULL, ragged or ill-formed
-    vector. Map-side, no shuffle; the payload ships once per distinct
-    centroid list through :func:`_centroid_broadcast`.
+    :func:`_matmul_rank`) over the :func:`_vectors` matrix, built as
+    one list array from the order matrix and a validity mask; NULL for
+    a NULL, ragged or ill-formed vector. Map-side, no shuffle; the
+    payload ships once per distinct centroid list through
+    :func:`_centroid_broadcast`.
 
     Deliberately NOT a broadcast join + min_by: that shape multiplies
     every row by n_centroids through the join and drags the fan-out
@@ -382,21 +381,21 @@ def _rank_udf(spark, centroids: list[list[float]], n_best: int, rank):
     bc = _centroid_broadcast(spark, centroids)
     dim = len(centroids[0])
 
-    @F.pandas_udf("array<int>")
-    def ranked(vs: pd.Series) -> pd.Series:
-        out: list = [None] * len(vs)
-        idx: list = []
-        rows: list = []
-        for i, v in enumerate(vs):
-            if v is not None and len(v) == dim:
-                idx.append(i)
-                rows.append(np.asarray(v, dtype=np.float64))
-        if idx:
-            ok, order = rank(np.vstack(rows), bc.value, n_best)
-            for pos, i in enumerate(idx):
-                if ok[pos]:
-                    out[i] = order[pos].tolist()
-        return pd.Series(out, dtype="object")
+    @F.arrow_udf("array<int>")
+    def ranked(vs: pa.Array) -> pa.Array:
+        rows, X = _vectors(vs, dim)
+        ok, order = rank(X, bc.value, n_best)
+        keep = rows[ok]
+        valid = np.zeros(len(vs), dtype=bool)
+        valid[keep] = True
+        width = order.shape[1]
+        ids = np.zeros((len(vs), width), dtype=np.int32)
+        ids[keep] = order[ok]
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(len(vs) + 1, dtype=np.int32) * width),
+            pa.array(ids.ravel()),
+            mask=pa.array(~valid),
+        )
 
     return ranked
 
@@ -510,16 +509,16 @@ def sample_centroids(
 
     sample = (
         df.filter(F.col(vec_col).isNotNull())
-        .select(vec_col)
+        .select(F.col(vec_col).cast("array<double>"))
         .orderBy(F.col(id_col))
         .limit(10_000)
-        .collect()
+        .toArrow()
+        .column(0)
     )
-    if not sample:
+    if not len(sample):
         return []
-    dim = Counter(len(r[0]) for r in sample).most_common(1)[0][0]
-    sample = [r for r in sample if len(r[0]) == dim]
-    X = np.array([r[0] for r in sample], dtype=np.float64)
+    dim = Counter(_lengths(sample).tolist()).most_common(1)[0][0]
+    X = _vectors(sample, dim)[1]
     rng = np.random.default_rng(42)
     cent = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
     for _ in range(iterations):
@@ -565,14 +564,7 @@ def _score_buckets(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", cosine_col(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def cosine_topk_ivf(
@@ -612,27 +604,22 @@ def cosine_topk_ivf(
 def _cell_score_col(spark, centroids: list[list[float]], vec: Column, cid: Column) -> Column:
     """Cosine of each row's vector against ITS ASSIGNED centroid — the
     per-row assignment-quality signal :func:`ivf_index_health` profiles.
-    One Arrow gather over the cached centroid payload scored by
-    :func:`_fold_cosine` at any centroid count (map-only, no shuffle,
-    plan size O(1)). NULL for a NULL or ragged vector and, by the
-    kernel's contract, for members of a zero-norm centroid."""
+    The :func:`_vectors` matrix against a gather of the cached centroid
+    payload, scored by :func:`_fold_cosine` at any centroid count
+    (map-only, no shuffle, plan size O(1)). NULL for a NULL or ragged
+    vector, a NULL centroid id and, by the kernel's contract, for
+    members of a zero-norm centroid."""
     bc = _centroid_broadcast(spark, centroids)
     dim = len(centroids[0])
 
-    @F.pandas_udf("double")
-    def cell_score(vs: pd.Series, cids: pd.Series) -> pd.Series:
-        C = bc.value[0]
+    @F.arrow_udf("double")
+    def cell_score(vs: pa.Array, cids: pa.Array) -> pa.Array:
+        rows, X = _vectors(vs, dim)
+        cid = cids.to_numpy(zero_copy_only=False)[rows]  # NULL reads NaN
+        has = ~np.isnan(cid)
         out = np.full(len(vs), np.nan)
-        idx = [
-            i for i, (v, c) in enumerate(zip(vs, cids))
-            if v is not None and not pd.isna(c) and len(v) == dim
-        ]
-        if idx:
-            X = np.vstack([np.asarray(vs.iloc[i], dtype=np.float64) for i in idx])
-            cid = cids.iloc[idx].to_numpy().astype(np.int64)
-            # NaN leaves through Arrow as NULL
-            out[idx] = _fold_cosine(X, C[cid])
-        return pd.Series(out)
+        out[rows[has]] = _fold_cosine(X[has], bc.value[0][cid[has].astype(np.int64)])
+        return pa.array(out, mask=np.isnan(out))
 
     return cell_score(vec.cast("array<double>"), cid)
 

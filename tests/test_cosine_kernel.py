@@ -1,19 +1,26 @@
 """The one exact cosine kernel: ``similarity.cosine_col`` (the Arrow
 left fold every pair-scoring path runs) against the reference fold
 ``oracle_harness.cosine_expr``, the block filter-and-refine
-(``dedup._cosine_pairs``) against the full fold, and the NULL contract
-for non-finite vectors on every tier."""
+(``dedup._cosine_pairs``) against the full fold, the NULL contract
+for non-finite vectors on every tier, and the one vector reader
+(``similarity._vectors``) every embedding kernel reads through."""
 
 from __future__ import annotations
 
 import struct
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import functions as F
 
 from petk_spark.operators.dedup import _cosine_pairs, embedding_near_dup
-from petk_spark.operators.similarity import _fold_cosine, cosine_col, cosine_topk
+from petk_spark.operators.similarity import (
+    _fold_cosine,
+    _vectors,
+    cosine_col,
+    cosine_topk,
+)
 from tests.oracle_harness import cosine_expr
 
 INF, NAN = float("inf"), float("nan")
@@ -102,6 +109,53 @@ def test_kernel_reads_float_arrays_exactly(spark):
         cosine_col(F.col("a"), F.col("b")).alias("got"),
     ).first()
     assert _bits(r["got"]) == _bits(r["ref"])
+
+
+_LISTS = [
+    [9.0, 9.0, 9.0],          # ragged (sliced away below)
+    [1.0, 2.0],
+    None,                     # NULL list
+    [3.0, None],              # NULL element
+    [4.0],                    # ragged
+    [],                       # empty
+    [5.0, 6.0],
+]
+
+
+def _reader_cases():
+    arr = pa.array(_LISTS, pa.list_(pa.float64()))
+    sliced = arr.slice(1)
+    assert sliced.offset == 1
+    chunked = pa.chunked_array([arr.slice(1, 3), arr.slice(4)])
+    return sliced, chunked
+
+
+def test_vector_reader_honours_slices_and_chunks():
+    """The reader gathers length-``dim`` rows by their position in the
+    (sliced or chunked) array, leaves NULL, ragged and empty lists out
+    and reads a NULL element as NaN."""
+    want_rows = [0, 2, 5]
+    want = np.array([[1.0, 2.0], [3.0, np.nan], [5.0, 6.0]])
+    for arr in _reader_cases():
+        rows, X = _vectors(arr, 2)
+        assert rows.tolist() == want_rows
+        assert X.dtype == np.float64
+        np.testing.assert_array_equal(X, want)
+        rows, X = _vectors(arr, 1)
+        assert rows.tolist() == [3] and X.tolist() == [[4.0]]
+
+
+def test_vector_reader_all_malformed_batch():
+    """A batch with no row of the asked length reads as an empty
+    ``(0, dim)`` matrix, also when every list is NULL or empty."""
+    for arr in (
+        *_reader_cases(),
+        pa.array([None, None], pa.list_(pa.float64())),
+        pa.array([[], []], pa.list_(pa.float64())),
+        pa.chunked_array([], pa.list_(pa.float64())),
+    ):
+        rows, X = _vectors(arr, 4)
+        assert rows.size == 0 and X.shape == (0, 4)
 
 
 def _planted(rng, t: float, n_pairs: int, d: int):

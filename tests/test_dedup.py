@@ -327,14 +327,14 @@ def test_semantic_pairs_arrow_equals_expr(spark):
     assert {k[1:] for k in got} == {(1, 2), (1, 3), (2, 3), (10, 11)}
 
 
-def test_semantic_pairs_arrow_plan_is_grouped_pandas(spark):
+def test_semantic_pairs_arrow_plan_is_grouped_arrow(spark):
     from petk_spark.operators.dedup import semantic_dedup_pairs
 
     df = _sem_fixture(spark)
     plan = semantic_dedup_pairs(
         df, "vec_id", "embedding", centroids=_SEM_CENTROIDS
     )._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
     assert "CartesianProduct" not in plan
 
 
@@ -361,7 +361,7 @@ def test_semantic_dedup_hot_cell_fallback(spark):
     assert any(
         "max_cell_rows" in str(c.message) for c in caught
     ), "hot-cell routing must warn"
-    unguarded = _sem_pairs(df, 0.99, max_cell_rows=None)
+    unguarded = _sem_pairs(df, 0.99, max_cell_rows=1000)
     assert guarded == unguarded == _fold_join_pairs(df, 0.99)
     assert (1, 100, 101) in guarded  # the cold cell's pair survived
     # and no warning when every cell is under the threshold
@@ -406,7 +406,7 @@ def test_semantic_pairs_chunked_matmul_equiv(spark, monkeypatch):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     want = _fold_join_pairs(df, 0.9999)
     assert len(want) > 10 and {k[0] for k in want} == {0}
-    assert _sem_pairs(df, 0.9999, max_cell_rows=None) == want
+    assert _sem_pairs(df, 0.9999, max_cell_rows=1000) == want
     monkeypatch.setattr(_d, "_MATMUL_BLOCK", 4)
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     X = np.array([r[1] for r in rows])

@@ -330,7 +330,6 @@ def test_nearest_centroid_kernel_planned_once(spark, monkeypatch):
              for r in emb.orderBy("vec_id").limit(3).collect()]
     pairs = semantic_dedup_pairs(
         emb, "vec_id", "embedding", centroids=cents, threshold=0.9,
-        max_cell_rows=None,
     )
     assert n_kernels(pairs) == 1
 

@@ -377,13 +377,28 @@ def test_probe_fold_equals_literal(spark):
     assert all(len(v) == 3 for v in fold.values())
 
 
+def _column_signature(vec, planes):
+    """Reference hyperplane signature built from Column objects, one
+    ``F.lit`` per plane element: the builder the library once had."""
+    sig = F.lit(0).cast("long")
+    for i, plane in enumerate(planes):
+        arr = F.array(*[F.lit(float(x)) for x in plane])
+        dot = F.aggregate(
+            F.zip_with(vec, arr, lambda a, b: a.cast("double") * b),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        sig = sig + F.when(dot >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0))
+    return sig
+
+
 def test_lsh_signature_text_equals_column(spark):
     """The SQL-text hyperplane signature (round 16: one parsed
     expression instead of n_planes × dim F.lit py4j round trips) is
-    bit-identical to the Column-built form on every row — the literals
-    constant-fold to the same doubles and the fold/compare expressions
-    are the same, so LSH bucket ids (and therefore every LSH query's
-    candidate sets) are build-path-invariant."""
+    bit-identical to the Column-built reference on every row — the
+    literals constant-fold to the same doubles and the fold/compare
+    expressions are the same, so LSH bucket ids (and therefore every
+    LSH query's candidate sets) are build-path-invariant."""
     from petk_spark.operators.similarity import (
         deterministic_planes,
         hyperplane_signature,
@@ -394,7 +409,7 @@ def test_lsh_signature_text_equals_column(spark):
     both = emb.select(
         "vec_id",
         hyperplane_signature("embedding", planes).alias("s_text"),
-        hyperplane_signature(F.col("embedding"), planes).alias("s_col"),
+        _column_signature(F.col("embedding"), planes).alias("s_col"),
     ).collect()
     assert both and all(r["s_text"] == r["s_col"] for r in both)
 
@@ -641,6 +656,41 @@ def test_ivf_paths_share_one_contract_on_malformed_and_ties(spark, monkeypatch):
             for r in _probe_frame(one, dup, 2, "vec_id", "embedding").collect()
         ]
         assert probes == [0, 1], tier
+
+
+@pytest.mark.parametrize("n_cents", [8, 70])
+def test_ranked_centroids_malformed_rows_equal_literal(spark, n_cents):
+    """Both ranking tiers — chosen by centroid count, fold at ≤ 64 and
+    matmul above — return the reference's top-3 list row for row on a
+    frame mixing well-formed vectors with every malformed kind: NULL,
+    ragged, empty, all-zero, a NULL element, ±Inf and NaN rows all
+    rank NULL, across several Arrow batches."""
+    from petk_spark.operators.similarity import _ranked_centroids
+
+    inf, nan = float("inf"), float("nan")
+    cents = [v for _, v in _pseudo_vecs(n_cents, 8, seed=99)]
+    bad = [
+        None, [1.0, 2.0], [], [0.0] * 8, [None] + [1.0] * 7,
+        [inf] + [1.0] * 7, [1.0] * 7 + [-inf], [nan] * 8,
+    ]
+    rows = [
+        (i, bad[i // 3 % len(bad)] if i % 3 == 0 else v)
+        for i, v in _pseudo_vecs(96, 8)
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).repartition(3)
+    got = {
+        r["vec_id"]: (r["lit"], r["kern"])
+        for r in df.select(
+            "vec_id",
+            _literal_rank("embedding", cents, 3).alias("lit"),
+            _ranked_centroids(spark, F.col("embedding"), cents, 3).alias("kern"),
+        ).collect()
+    }
+    assert all(lit == kern for lit, kern in got.values()), got
+    assert sum(lit is None for lit, _ in got.values()) == 32
+    assert all(len(lit) == 3 for lit, _ in got.values() if lit is not None)
 
 
 def test_ivf_append_tolerates_pinned_non_numeric_generation(spark, tmp_path):
