@@ -91,7 +91,7 @@ def pack_sequences(
     independently). Deterministic: bucket = md5-derived hash of the id
     mod n_buckets and the intra-bucket order is ``id`` —
     engine-portable, partitioning-independent (the same 60-bit md5
-    parse as dedup.shingle_hash_expr)."""
+    parse as text._base_hash)."""
     bucket = (
         F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10)
         .cast("bigint")

@@ -17,7 +17,9 @@ Scale design:
     base hash (engine-portable, so the full pipeline is oracle-checked),
     min per doc per function, b bands of r rows, candidate pairs = equal
     band signature, then exact-Jaccard verification of candidates only.
-    Everything is built-in expressions (no Python in the hot path).
+    One Arrow kernel per document emits its shingle array and
+    signature; the band self-join (filter) and the shingle-array
+    intersection (refine) are built-in expressions — no shingle shuffle.
   * SimHash: 64-bit fingerprints from token hashes, near-dup = Hamming
     distance ≤ d on block-partitioned candidates (pigeonhole: split the
     64 bits into d+1 blocks; equal pairs must share one block).
@@ -48,6 +50,7 @@ from petk_spark.operators.similarity import (
     hyperplane_signature,
     sample_centroids,
 )
+from petk_spark.operators.text import _base_hash, _words
 
 
 # ---------------------------------------------------------------------------
@@ -88,41 +91,30 @@ def dedup_first_by(df: DataFrame, key_cols: list[str], order_col: str) -> DataFr
 # Tokenization / shingling (shared by Jaccard, MinHash, SimHash)
 # ---------------------------------------------------------------------------
 
+def _doc_shingles(t: str, n: int) -> list[str]:
+    """Distinct word n-gram shingles (space-joined) of ``t`` in
+    first-seen order; ``[]`` for fewer than ``n`` tokens. Tokens are
+    :func:`text._words` of Python's ``str.lower()``."""
+    toks = _words(t.lower())
+    return list(
+        dict.fromkeys(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
+    )
+
+
 def _shingles(text: Column, n: int) -> Column:
-    """Distinct word n-gram shingles (space-joined) of ``text``.
+    """Distinct word n-gram shingles (:func:`_doc_shingles`) of ``text``.
 
     Arrow-batched pandas UDF. A pure-expression version (sequence +
     transform + slice + concat_ws HOFs) computes the same arrays but
     higher-order functions are CodegenFallback — interpreted per
     element — and measured 3× slower at sf0.1 (6.2 s vs 2.0 s for the
     exploded frame). Tokenization matches the oracle's DuckDB CTE
-    (``regexp_split_to_array(lower(text), '\\s+')``): ``re.ASCII`` pins
-    Python's ``\\s`` to the same ASCII whitespace class RE2 and Java use
-    (str.split() without a pattern would split on Unicode whitespace).
-    """
-    import re
-
+    (``regexp_split_to_array(lower(text), '\\s+')``)."""
     from pyspark.sql.types import ArrayType, StringType
-
-    ws = re.compile(r"\s+", re.ASCII)
 
     @F.pandas_udf(ArrayType(StringType()))
     def u(texts: pd.Series) -> pd.Series:
-        def one(t):
-            if t is None:
-                return None
-            toks = [w for w in ws.split(t.lower()) if w]
-            if len(toks) < n:
-                return []
-            if n == 1:
-                return list(dict.fromkeys(toks))
-            return list(
-                dict.fromkeys(
-                    " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-                )
-            )
-
-        return texts.map(one)
+        return texts.map(lambda t: None if t is None else _doc_shingles(t, n))
 
     return u(text)
 
@@ -171,9 +163,8 @@ def jaccard_near_dup(
     # branch) — unshared subtrees that Catalyst recomputes per branch,
     # re-running the pandas-UDF tokenizer over the raw corpus 2-3×
     # (the same branch-recompute class measured on hamming_near_dup's
-    # signature frame, fixed the same way). minhash_lsh_near_dup
-    # below already persists this exact frame shape for its two
-    # consumers. MEMORY_AND_DISK: spills instead of recomputing.
+    # signature frame, fixed the same way). MEMORY_AND_DISK: spills
+    # instead of recomputing.
     if persist and not df.isStreaming:
         sh = sh.persist()
     if max_shingle_freq is not None:
@@ -290,39 +281,76 @@ def minhash_params(k: int) -> list[tuple[int, int]]:
     return out
 
 
-def shingle_hash_expr(shingle: Column) -> Column:
-    """Engine-portable base hash of a shingle, reduced mod P: the first
-    15 hex chars (60 bits — always positive in signed 64) of md5, parsed
-    as an integer. Spark: conv(substr(md5(s),1,15),16,10); DuckDB:
-    ('0x' || substr(md5(s),1,15))::BIGINT — verified bit-identical."""
-    return (
-        F.conv(F.substring(F.md5(shingle), 1, 15), 16, 10).cast("bigint")
-        % MINHASH_P
-    )
+#: Shingles per step of the signature min fold: the fold's scratch stays
+#: at k × _SIG_CHUNK int64 (32 MB at k=64) however long a document is.
+_SIG_CHUNK = 65_536
 
 
-def _min_sig_exprs(k: int) -> list[Column]:
-    """k min-aggregate expressions over the pre-hashed shingle column
-    ``hx``. One md5 per shingle + k cheap (a·x+b) mod P transforms —
-    measurably cheaper than k independent xxhash64 calls per shingle,
-    and portable to the oracle engine."""
-    return [
-        F.min((F.lit(a) * F.col("hx") + F.lit(b)) % MINHASH_P).alias(f"h{i}")
-        for i, (a, b) in enumerate(minhash_params(k))
-    ]
+def _minhash_frame(
+    df: DataFrame, id_col: str, text_col: str, n: int, k: int
+) -> DataFrame:
+    """(id, sh: array<string>, sig: array<bigint>) — each document
+    shingled (:func:`_doc_shingles`), hashed and signed once in one
+    ``mapInArrow`` task: ``sig[i] = min((a_i·hx + b_i) mod P)`` over its
+    shingles' base hashes ``hx = text._base_hash(s) mod P``, in int64
+    numpy — exact, as a·hx + b < 2⁶³. A batch's shingles are folded in
+    ``_SIG_CHUNK`` column slices with one ``minimum.reduceat`` per slice.
+    NULL text gives NULL ``sh`` and ``sig``; fewer than ``n`` tokens gives
+    ``sh = []`` and a NULL ``sig``."""
+    from pyspark.sql import types as T
+
+    a, b = (np.array(v, np.int64)[:, None] for v in zip(*minhash_params(k)))
+    src = df.select(F.col(id_col).alias("id"), F.col(text_col).cast("string"))
+    schema = T.StructType([
+        src.schema["id"],
+        T.StructField("sh", T.ArrayType(T.StringType())),
+        T.StructField("sig", T.ArrayType(T.LongType())),
+    ])
+
+    def signed(batch: pa.RecordBatch) -> pa.RecordBatch:
+        texts = batch.column(1).to_pylist()
+        docs = [None if t is None else _doc_shingles(t, n) for t in texts]
+        lens = np.array([len(d) if d else 0 for d in docs], np.int64)
+        flat = [s for d in docs if d for s in d]
+        hx = np.array([_base_hash(s) % MINHASH_P for s in flat], np.int64)
+        doc = np.repeat(np.arange(len(docs)), lens)
+        sig = np.full((k, len(docs)), MINHASH_P, np.int64)
+        for s0 in range(0, len(hx), _SIG_CHUNK):
+            d = doc[s0 : s0 + _SIG_CHUNK]
+            starts = np.flatnonzero(np.r_[True, d[1:] != d[:-1]])
+            h = (a * hx[s0 : s0 + _SIG_CHUNK] + b) % MINHASH_P
+            part = np.minimum.reduceat(h, starts, axis=1)
+            sig[:, d[starts]] = np.minimum(sig[:, d[starts]], part)
+        return pa.RecordBatch.from_arrays(
+            [
+                batch.column(0),
+                pa.ListArray.from_arrays(
+                    np.r_[0, np.cumsum(lens)].astype(np.int32),
+                    pa.array(flat, pa.string()),
+                    mask=pa.array([d is None for d in docs]),
+                ),
+                pa.ListArray.from_arrays(
+                    np.arange(len(docs) + 1, dtype=np.int32) * k,
+                    pa.array(sig.T.ravel()),
+                    mask=pa.array(lens == 0),
+                ),
+            ],
+            names=["id", "sh", "sig"],
+        )
+
+    return src.mapInArrow(lambda batches: map(signed, batches), schema)
 
 
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, k: int = 64
 ) -> DataFrame:
-    """(id, sig: array<bigint>) — k minhash values per document. One
-    explode + one groupBy; the k mins are k aggregate expressions over
-    the per-shingle base hash."""
-    sh = shingle_frame(df, id_col, text_col, n)
-    hx = sh.select("id", shingle_hash_expr(F.col("shingle")).alias("hx"))
-    agg = hx.groupBy("id").agg(*_min_sig_exprs(k))
-    return agg.select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(k)]).alias("sig")
+    """(id, sig: array<bigint>) — k minhash values per document with at
+    least one shingle, from the one document kernel
+    (:func:`_minhash_frame`). ``id_col`` is a key."""
+    return (
+        _minhash_frame(df, id_col, text_col, n, k)
+        .filter(F.col("sig").isNotNull())
+        .select("id", "sig")
     )
 
 
@@ -347,7 +375,15 @@ def minhash_lsh_near_dup(
     engine-portable arithmetic, so the DuckDB oracle replays it exactly
     and the output is hash-checkable despite the probabilistic recall.
 
-    Caching: the shingle frame is ``.persist()``-ed with no eager
+    Filter and refine (REPOSE, ICDE 2021): one Arrow kernel per document
+    (:func:`_minhash_frame`) gives its shingle array and signature; the
+    filter is the (band, bucket) self-join of the signatures, the refine
+    joins each candidate to both shingle arrays and counts their
+    intersection. ``id_col`` is a key (one row per document), as in
+    every pair operator.
+
+    Caching: the document frame is ``.persist()``-ed when verifying (it
+    feeds the band join and both sides of the refine) with no eager
     unpersist (same rationale as :func:`jaccard_near_dup` — the result
     is lazy, so unpersisting on return would defeat the cache); pass
     ``persist=False`` in long-lived sessions that invoke this per-batch.
@@ -355,20 +391,9 @@ def minhash_lsh_near_dup(
     assert k % bands == 0, "k must divide into equal bands"
     r = k // bands
 
-    # The shingle frame feeds BOTH signature generation and exact
-    # verification. It is the expensive subtree (pandas-UDF tokenize +
-    # explode over every document), and Catalyst does not share
-    # un-exchanged subtrees across plan branches — so persist it once
-    # and let both consumers read the cached blocks. MEMORY_AND_DISK:
-    # spills instead of recomputing, evictable under pressure.
-    sh = shingle_frame(df, id_col, text_col, n)
+    docs = _minhash_frame(df, id_col, text_col, n, k)
     if persist and verify_exact and not df.isStreaming:
-        sh = sh.persist()
-
-    hx = sh.select("id", shingle_hash_expr(F.col("shingle")).alias("hx"))
-    sig = hx.groupBy("id").agg(*_min_sig_exprs(k)).select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(k)]).alias("sig")
-    )
+        docs = docs.persist()
 
     # Band bucket = the r signature values joined as a string. A plain
     # concat key (not a hash of it) keeps the bucket engine-portable;
@@ -384,8 +409,10 @@ def minhash_lsh_near_dup(
             for b in range(bands)
         ]
     )
-    buckets = sig.select("id", F.explode(band_entries).alias("e")).select(
-        "id", "e.band", "e.bucket"
+    buckets = (
+        docs.filter(F.col("sig").isNotNull())
+        .select("id", F.explode(band_entries).alias("e"))
+        .select("id", "e.band", "e.bucket")
     )
 
     a = buckets.alias("a")
@@ -399,28 +426,23 @@ def minhash_lsh_near_dup(
     if not verify_exact:
         return cand
 
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    # Count common shingles via join on (shingle) scoped to candidate pairs.
-    sh_a = sh.select(F.col("id").alias("id_a"), "shingle")
-    sh_b = sh.select(F.col("id").alias("id_b"), "shingle")
-    n_common = (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    out = (
-        n_common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "sh_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "sh_b"), "id_b")
+    sh = docs.select("id", "sh")
+    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
+    return (
+        cand.join(sh.toDF("id_a", "sh_a"), "id_a")
+        .join(sh.toDF("id_b", "sh_b"), "id_b")
+        .select("id_a", "id_b", "sh_a", "sh_b", n_common.alias("n_common"))
+        .filter(F.col("n_common") > 0)
         .withColumn(
             "jaccard",
             F.col("n_common")
-            / (F.col("sh_a") + F.col("sh_b") - F.col("n_common")).cast("double"),
+            / (
+                F.size("sh_a") + F.size("sh_b") - F.col("n_common")
+            ).cast("double"),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -437,12 +459,8 @@ def simhash(text: Column) -> Column:
     F.aggregate HOFs was interpreted per row — CodegenFallback — and
     ~10× slower.)"""
     import hashlib
-    import re
 
-    import numpy as np
     from pyspark.sql.types import LongType
-
-    _WS_ASCII = re.compile(r"\s+", re.ASCII)
 
     @F.pandas_udf(LongType())
     def u(texts: pd.Series) -> pd.Series:
@@ -469,10 +487,9 @@ def simhash(text: Column) -> Column:
         def one(t):
             if t is None:
                 return None
-            # ASCII \s+ split — same token class as the oracle's DuckDB
-            # regexp_split_to_array and _shingles (plain str.split()
-            # would split on Unicode whitespace and diverge).
-            toks = {w for w in _WS_ASCII.split(t.lower()) if w}
+            # the ASCII \s+ tokenizer of _shingles and the oracle's
+            # DuckDB regexp_split_to_array
+            toks = set(_words(t.lower()))
             if not toks:
                 return 0
             votes = np.sum([tok_votes(w) for w in toks], axis=0)
@@ -602,7 +619,7 @@ def hamming_near_dup(
     # reuse; at shuffle-join scale canonically-identical exchanges
     # reuse down to ~2×, but that is regime-dependent). Persist the
     # (id, long) projection once — ~16 bytes/row, the smallest frame in
-    # the operator — same discipline as minhash_lsh_near_dup's shingle
+    # the operator — same discipline as minhash_lsh_near_dup's document
     # frame above. MEMORY_AND_DISK: spills instead of recomputing,
     # evictable under pressure. Streaming frames can't persist.
     if persist and not df.isStreaming:

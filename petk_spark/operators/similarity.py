@@ -504,7 +504,11 @@ def sample_centroids(
     corpus dimension is the MODAL vector length across the sample,
     not the first row's — if the lowest-id row happens to be the
     ragged one, anchoring on it would discard every well-formed
-    vector and train at the wrong dimension (round-6 advisory)."""
+    vector and train at the wrong dimension (round-6 advisory). Rows
+    of that length whose Σv² is not positive and finite (a NULL
+    element, NaN, ±Inf, all zeros) are dropped too, as
+    :func:`_well_formed` drops them everywhere else — one such row
+    would otherwise make its centroid NaN."""
     from collections import Counter
 
     sample = (
@@ -519,6 +523,11 @@ def sample_centroids(
         return []
     dim = Counter(_lengths(sample).tolist()).most_common(1)[0][0]
     X = _vectors(sample, dim)[1]
+    with np.errstate(all="ignore"):  # ill-formed rows are dropped here
+        sumsq = _lfold(x * x for x in X.T)
+    X = X[np.isfinite(sumsq) & (sumsq > 0)]
+    if not len(X):
+        return []
     rng = np.random.default_rng(42)
     cent = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
     for _ in range(iterations):

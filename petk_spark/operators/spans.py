@@ -36,16 +36,13 @@ Scale shapes (both audited by tools/plan_audit.py):
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from petk_spark.operators.text import rolling_fingerprints
-
-_PY_WS = re.compile(r"\s+", re.ASCII)
+from petk_spark.operators.text import _words, rolling_fingerprints
 
 
 def span_fingerprint_frame(
@@ -125,7 +122,7 @@ def _remove_spans_arrow(
                     nt.append(0)
                     nk.append(0)
                     continue
-                toks = [w for w in _PY_WS.split(t) if w]
+                toks = _words(t)
                 if hits is None or len(hits) == 0:
                     texts.append(" ".join(toks))
                     nt.append(len(toks))

@@ -16,12 +16,36 @@ algorithm and hex encoding in Spark and DuckDB).
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 # Module scope: the pandas_udf type-hint resolver evaluates annotations
 # in the function's global namespace (see rolling_fingerprints).
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+#: ASCII whitespace runs: ``re.ASCII`` pins Python's ``\s`` to the class
+#: Java, RE2 and DuckDB's ``regexp_split_to_array(.., '\s+')`` use
+#: (plain ``str.split()`` would also split on Unicode whitespace).
+_WS = re.compile(r"\s+", re.ASCII)
+
+
+def _words(t: str) -> list[str]:
+    """The non-empty tokens of ``t`` split on ASCII whitespace runs — the
+    one Python tokenizer of the shingle, fingerprint and SimHash
+    kernels (callers lowercase first)."""
+    return [w for w in _WS.split(t) if w]
+
+
+def _base_hash(s: str) -> int:
+    """Engine-portable 60-bit base hash of ``s``: the first 15 hex chars
+    of its md5 (always positive in signed 64), bit-identical to Spark's
+    ``conv(substring(md5(s), 1, 15), 16, 10)`` and DuckDB's
+    ``('0x' || substr(md5(s), 1, 15))::BIGINT``."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
 
 # ---------------------------------------------------------------------------
 # token counting
@@ -195,46 +219,35 @@ def fingerprint(text: Column) -> Column:
 def rolling_fingerprints(text: Column, window: int = 8) -> Column:
     """Rolling fingerprints: a 60-bit md5-derived hash of each
     ``window``-token shingle — array<bigint> per document. The hash is
-    the engine-portable base hash (first 15 hex chars of md5, same as
-    dedup.shingle_hash_expr's pre-mod value), so overlap detection built
-    on these is oracle-checkable; documents shorter than ``window``
-    tokens contribute their whole token string as one fingerprint.
+    the engine-portable base hash (:func:`_base_hash`, the same one the
+    MinHash kernel reduces mod P), so overlap detection built on these
+    is oracle-checkable; documents shorter than ``window`` tokens
+    contribute their whole token string as one fingerprint.
 
     Arrow-batched pandas UDF. The previous pure-expression version
     (sequence + transform + slice + concat_ws HOFs) computed the same
     arrays, but higher-order functions are CodegenFallback — interpreted
     per element — the identical pattern already measured 3× slower for
     shingling (dedup._shingles) and replaced the same way. Tokenization
-    matches dedup._shingles / the DuckDB oracle CTE exactly: ``re.ASCII``
-    pins Python's ``\\s`` to Java/RE2's ASCII whitespace class, the
-    per-shingle hash int(md5[:15], 16) is bit-identical to
-    ``conv(substring(md5(s), 1, 15), 16, 10)``, and lowercasing happens
-    JVM-SIDE (``F.lower``) before the UDF so every tokenizer in the repo
+    (:func:`_words`) matches dedup._shingles / the DuckDB oracle CTE
+    exactly, and lowercasing happens JVM-SIDE (``F.lower``) before the UDF so every tokenizer in the repo
     shares one case mapping — Python's ``str.lower`` disagrees with
     JVM/DuckDB ``lower()`` on Unicode edge cases ('İ', 'ß'), which an
     ASCII fixture would mask."""
-    import hashlib
-    import re
-
     from pyspark.sql.types import ArrayType, LongType
-
-    ws = re.compile(r"\s+", re.ASCII)
-
-    def h(s: str) -> int:
-        return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
     @F.pandas_udf(ArrayType(LongType()))
     def u(texts: pd.Series) -> pd.Series:
         def one(t):
             if t is None:
                 return None
-            toks = [w for w in ws.split(t) if w]
+            toks = _words(t)
             if len(toks) >= window:
                 return [
-                    h(" ".join(toks[i : i + window]))
+                    _base_hash(" ".join(toks[i : i + window]))
                     for i in range(len(toks) - window + 1)
                 ]
-            return [h(" ".join(toks))]
+            return [_base_hash(" ".join(toks))]
 
         return texts.map(one)
 

@@ -92,3 +92,107 @@ def cosine_expr(a, b):
         F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
     )
     return F.try_divide(dot, na * nb)
+
+
+def shingle_hash_expr(shingle):
+    """Engine-portable base hash of a shingle, reduced mod P: the first
+    15 hex chars (60 bits — always positive in signed 64) of md5, parsed
+    as an integer. Spark: conv(substr(md5(s),1,15),16,10); DuckDB:
+    ('0x' || substr(md5(s),1,15))::BIGINT — verified bit-identical."""
+    from pyspark.sql import functions as F
+
+    from petk_spark.operators.dedup import MINHASH_P
+
+    return (
+        F.conv(F.substring(F.md5(shingle), 1, 15), 16, 10).cast("bigint")
+        % MINHASH_P
+    )
+
+
+def _min_sig_exprs(k: int):
+    """k min-aggregate expressions over the pre-hashed shingle column
+    ``hx``: one md5 per shingle + k (a·x+b) mod P transforms."""
+    from pyspark.sql import functions as F
+
+    from petk_spark.operators.dedup import MINHASH_P, minhash_params
+
+    return [
+        F.min((F.lit(a) * F.col("hx") + F.lit(b)) % MINHASH_P).alias(f"h{i}")
+        for i, (a, b) in enumerate(minhash_params(k))
+    ]
+
+
+def minhash_signatures_reference(df, id_col, text_col, n=3, k=64):
+    """(id, sig) from the exploded shingle frame and a groupBy of k min
+    aggregates — the JVM pipeline ``dedup.minhash_signatures`` is pinned
+    against."""
+    from pyspark.sql import functions as F
+
+    from petk_spark.operators.dedup import shingle_frame
+
+    hx = shingle_frame(df, id_col, text_col, n).select(
+        "id", shingle_hash_expr(F.col("shingle")).alias("hx")
+    )
+    return hx.groupBy("id").agg(*_min_sig_exprs(k)).select(
+        "id", F.array(*[F.col(f"h{i}") for i in range(k)]).alias("sig")
+    )
+
+
+def minhash_lsh_reference(
+    df, id_col, text_col, n=3, k=64, bands=16, threshold=0.8, verify_exact=True
+):
+    """The JVM MinHash+LSH pipeline ``dedup.minhash_lsh_near_dup`` is
+    pinned against: signatures from :func:`minhash_signatures_reference`,
+    the same band keys and candidate self-join, and exact Jaccard from a
+    join on (candidate, shingle) over the exploded shingle frame."""
+    from pyspark.sql import functions as F
+
+    from petk_spark.operators.dedup import shingle_frame
+
+    r = k // bands
+    sh = shingle_frame(df, id_col, text_col, n)
+    sig = minhash_signatures_reference(df, id_col, text_col, n, k)
+    band_entries = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat_ws(
+                    ",", *[F.element_at("sig", b * r + j + 1) for j in range(r)]
+                ).alias("bucket"),
+            )
+            for b in range(bands)
+        ]
+    )
+    buckets = sig.select("id", F.explode(band_entries).alias("e")).select(
+        "id", "e.band", "e.bucket"
+    )
+    a = buckets.alias("a")
+    b_ = buckets.alias("b")
+    cand = (
+        a.join(b_, ["band", "bucket"])
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+    if not verify_exact:
+        return cand
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+    sh_a = sh.select(F.col("id").alias("id_a"), "shingle")
+    sh_b = sh.select(F.col("id").alias("id_b"), "shingle")
+    n_common = (
+        cand.join(sh_a, "id_a")
+        .join(sh_b, ["id_b", "shingle"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    return (
+        n_common.join(sizes.toDF("id_a", "sh_a"), "id_a")
+        .join(sizes.toDF("id_b", "sh_b"), "id_b")
+        .withColumn(
+            "jaccard",
+            F.col("n_common")
+            / (F.col("sh_a") + F.col("sh_b") - F.col("n_common")).cast("double"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )

@@ -217,6 +217,23 @@ def test_ivf_centroid_dim_survives_ragged_lowest_id_row(spark):
     assert cents and all(len(c) == 4 for c in cents), cents
 
 
+def test_centroid_sample_drops_null_element_rows(spark):
+    """A vector of the modal length holding a NULL element (read as NaN)
+    is left out of the k-means sample like every other ill-formed row,
+    so no centroid comes back NaN."""
+    import math
+
+    from petk_spark.operators.similarity import sample_centroids
+
+    rows = [(i, list(vec)) for i, vec in _pseudo_vecs(3000, 16)]
+    for i in range(0, 3000, 13):
+        rows[i][1][i % 16] = None
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = sample_centroids(df, 5, "embedding", "vec_id")
+    assert len(cents) == 5
+    assert all(math.isfinite(v) for c in cents for v in c), cents
+
+
 def _pseudo_vecs(n: int, dim: int, seed: int = 7):
     """Deterministic LCG vectors — no RNG state, tie-free in practice."""
     state = seed
